@@ -1,21 +1,52 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+
+import graft.engine.Sessions
+import graft.streaming.EventsStream
+
+/** Perf surface: times every selected query and prints two JSON lines.
+  * A query that throws gets no time: both lines list it under `"failed"`,
+  * it is left out of `total` and `n_queries`, and the process exits 1,
+  * as it does when the warmup fails. */
 object Bench {
+
+  /** What the timed loop measured. `times`: seconds per query that ran,
+    * in run order. `prewarmWallS`: one-time lineage-build wall moved out
+    * of the timing of the query it landed in (`prewarmHost`). */
+  final case class Result(times: Seq[(String, Double)],
+                          failed: Seq[QueryFailure],
+                          prewarmWallS: Double, prewarmHost: String) {
+    // total INCLUDES the prewarm wall (it is real elapsed work this
+    // process did); only the per-query attribution moves it out of the
+    // hosting query's line.
+    def total: Double = times.map(_._2).sum + prewarmWallS
+
+    def jsonLines(sfDir: String): Seq[String] = {
+      val qs = times.map { case (k, v) => s"\"" + k + "\":" + v }
+        .mkString("{", ",", "}")
+      val fs = QueryFailure.jsonArray(failed)
+      Seq(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"prewarm_wall_s":$prewarmWallS,"prewarm_host":"$prewarmHost","sf":"$sfDir"}""",
+        // Compact totals as the LAST stdout line: the artifact capture
+        // keeps a bounded tail of stdout, and the full per-query line
+        // above outgrew it (200+ queries), leaving the artifact with no
+        // machine-readable totals. This line always survives truncation.
+        s"""{"total_s":$total,"n_queries":${times.size},"failed":$fs,"prewarm_wall_s":$prewarmWallS,"prewarm_host":"$prewarmHost","sf":"$sfDir"}""")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Sessions.local(cpus.toInt)
     // Deployment partitioning knob: at a fixed 32 shuffle partitions the
     // n·log n sorters (q48/q93/q101) spill at ×100 data; a real cluster
     // scales partitions with data. SCALE_r13 measures that claim with
     // this override instead of arguing it.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = graft.engine.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").foreach(p =>
+      spark.conf.set("spark.sql.shuffle.partitions", p))
     spark.sparkContext.setLogLevel("WARN")
     // Bench the deployment path: q195's exact-distinct validation branch
     // exists only so the oracle can audit the KMV estimate — at deployment
@@ -29,14 +60,18 @@ object Bench {
     // reaches first, instead of back-to-back (EventsStream
     // .prewarmSiblings). Serves are unchanged.
     spark.conf.set("graft.stream.prewarm", "1")
+    // Optional comma-separated name patterns for iterating on one query's
+    // plan (SparkEntry.select); queries run in name order.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = SparkEntry.select(only).sortBy(_.name)
     // Untimed warmup: exercise parquet scan + shuffle + codegen against the
     // bench directory itself (region is the smallest table; the synthetic
     // aggregate warms codegen/JIT without matching any timed query's plan),
     // so JVM/classloading startup cost doesn't land on whichever timed
     // query runs first (in r01 it inflated the first query by ~5s). A
-    // failed warmup is loud — silently skipping it would make per-query
+    // failed warmup is recorded — silently skipping it would make per-query
     // numbers incomparable across rounds with no signal why.
-    try {
+    val warmupFailed = try {
       spark.read.parquet(s"$sfDir/region.parquet")
         .groupBy("r_regionkey").count().count()
       spark.range(1000000L).selectExpr("sum(id * 2) AS s").count()
@@ -65,44 +100,55 @@ object Bench {
       spark.range(1000000L).selectExpr("(id * 2654435761) % 1000003 AS v")
         .orderBy("v")
         .write.format("noop").mode("overwrite").save()
+      None
     } catch {
-      case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+      case NonFatal(e) =>
+        System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+        Some(QueryFailure("warmup", e))
     }
-    // Optional comma-separated allowlist for iterating on one query's plan.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // The one-time 17-lineage wall builds UNTIMED here, before the query
     // loop: every streaming probe's per-query number is then a pure cache
     // serve (comparable across rounds), and the wall is its own reported
-    // line. The in-loop subtraction below stays as a safety net for a
+    // line. The in-loop subtraction in `run` stays as a safety net for a
     // lineage the preamble missed (e.g. under SPARK_GRAFT_ONLY filtering).
-    var prewarmWallS = 0.0
-    var prewarmHost = ""
-    if (only.isEmpty) {
-      graft.streaming.EventsStream.prewarmAll(spark, sfDir)
-      prewarmWallS = graft.streaming.EventsStream.takePrewarmJoinWaitSec()
-      prewarmHost = "preamble"
-    }
+    val (preambleWallS, preambleHost) =
+      if (only.isEmpty) {
+        EventsStream.prewarmAll(spark, sfDir)
+        (EventsStream.takePrewarmJoinWaitSec(), "preamble")
+      } else (0.0, "")
     // Local-iteration knob: run each query N times, report the minimum (the
     // warm, codegen-compiled number — what the plan actually costs). The
     // driver sets no env, so official rounds keep the single-run cold+warm
     // mix and stay comparable with prior BENCH_r*.json.
     val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1).max(1)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val dt = (1 to repeat).map { _ =>
+    val r = run(spark, sfDir, selected, repeat)
+    val result = r.copy(failed = warmupFailed.toSeq ++ r.failed,
+      prewarmWallS = preambleWallS + r.prewarmWallS,
+      prewarmHost = if (r.prewarmHost.nonEmpty) r.prewarmHost else preambleHost)
+    result.jsonLines(sfDir).foreach(println)
+    spark.stop()
+    if (result.failed.nonEmpty) sys.exit(1)
+  }
+
+  /** The timed loop: per query, the minimum of `repeat` timed
+    * `run(spark, sfDir).count()` calls, or its failure. */
+  def run(spark: SparkSession, sfDir: String, selected: Seq[Query],
+          repeat: Int = 1): Result = {
+    var prewarmWallS = 0.0
+    var prewarmHost = ""
+    val outcomes = selected.map { q =>
+      val runs = (1 to repeat).map { _ =>
         val t0 = System.nanoTime()
-        // A failed query must be LOUD: silently recording time-to-exception
-        // would make a broken query read as a performance win in the JSON.
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        // A failed query gets no number: time-to-exception would make a
+        // broken query read as a performance win in the JSON.
+        val error = try { q.run(spark, sfDir).count(); None } catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
+            Some(e)
         }
         val tRaw = (System.nanoTime() - t0) / 1e9
-        val joinWait =
-          graft.streaming.EventsStream.takePrewarmJoinWaitSec()
-        if (joinWait > 0.0) { prewarmWallS += joinWait; prewarmHost = name }
-        val t = tRaw - joinWait
+        val joinWait = EventsStream.takePrewarmJoinWaitSec()
+        if (joinWait > 0.0) { prewarmWallS += joinWait; prewarmHost = q.name }
         // Release state a query left behind (persisted/localCheckpointed RDDs
         // from iterative operators, cached views) so block-manager memory
         // doesn't accumulate across 50+ queries and trigger a full GC inside
@@ -115,23 +161,13 @@ object Bench {
         // a multi-second full-GC spike inside some later query's timing
         // (observed: same query 2.7s vs 10.2s run-to-run).
         System.gc()
-        t
-      }.min
-      name -> dt
+        error.toLeft(tRaw - joinWait)
+      }
+      q.name -> runs.collectFirst { case Left(e) => e }
+        .toLeft(runs.collect { case Right(t) => t }.min)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // total INCLUDES the prewarm wall (it is real elapsed work this
-    // process did); only the per-query attribution moves it out of the
-    // hosting query's line.
-    val total =
-      (if (results.nonEmpty) results.map(_._2).sum else 0.0) + prewarmWallS
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"prewarm_wall_s":$prewarmWallS,"prewarm_host":"$prewarmHost","sf":"$sfDir"}""")
-    // Compact totals as the LAST stdout line: the artifact capture keeps a
-    // bounded tail of stdout, and the full per-query line above outgrew it
-    // (200+ queries), leaving the artifact with no machine-readable totals.
-    // This line always survives truncation.
-    println(s"""{"total_s":$total,"n_queries":${results.size},"prewarm_wall_s":$prewarmWallS,"prewarm_host":"$prewarmHost","sf":"$sfDir"}""")
-    spark.stop()
+    Result(outcomes.collect { case (n, Right(t)) => n -> t },
+      outcomes.collect { case (n, Left(e)) => QueryFailure(n, e) },
+      prewarmWallS, prewarmHost)
   }
 }

@@ -1,554 +1,30 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.engine._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: `run(spark, sfDir)` is the Spark side, `oracleSql`
+  * its DuckDB twin over the same parquet tables — same column names, same
+  * deterministic ORDER BY, cross-engine-safe numerics via
+  * [[graft.engine.Num]]. `oracleSql` has no default: a query cannot be
+  * registered without its twin. */
+final case class Query(name: String,
+                       run: (SparkSession, String) => DataFrame,
+                       oracleSql: String)
+
+/** The query registry and the flagship entry point.
   *
-  * Every entry in [[queries]] has a DuckDB twin in [[oracleSql]] (same column
-  * names, same deterministic ORDER BY, cross-engine-safe numerics via
-  * [[graft.engine.Num]]); the driver hash-compares the two at sf0.01.
+  * [[registry]] is the one list of queries; [[queries]] and [[oracleSql]]
+  * are name-keyed views of it. [[Verify]] dumps every query's result and
+  * the twins; the DuckDB compare (`tools/selfcheck.py`) runs each twin and
+  * checks the two agree at sf0.01.
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Kpis.topSuppliers(Sessions.tune(spark), "/root/testdata/sf0.001")
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- §2.4/§2.6/§2.8 analytical surface (Kpis) ----
-    "q01_pricing_summary"          -> (Kpis.pricingSummary _),
-    "q02_top5_suppliers"           -> (Kpis.topSuppliers _),
-    "q03_orders_by_nation_segment" -> (Kpis.ordersByNationSegment _),
-    "q04_avg_balance_by_nation"    -> (Kpis.avgBalanceByNation _),
-    "q05_monthly_revenue"          -> (Kpis.monthlyRevenue _),
-    "q06_pct_filled_by_priority"   -> (Kpis.pctFilledByPriority _),
-    "q07_week_orders"              -> (Kpis.weekOrders _),
-    // ---- §2.2/§2.3 gold star schema (Gold) ----
-    "q08_fact_orders"              -> ((s: SparkSession, d: String) =>
-      Gold.factOrders(s, d).orderBy("order_id")),
-    "q09_dim_date"                 -> (Gold.dimDate _),
-    "q10_dim_customer"             -> (Gold.dimCustomer _),
-    "q11_top3_customers_per_nation"-> (Kpis.top3CustomersPerNation _),
-    "q12_dim_region_nation"        -> (Gold.dimRegionNation _),
-    // ---- §2.11 silver quality ops ----
-    "q13_silver_dedup"             -> (Kpis.silverDedup _),
-    "q14_fk_orphans"               -> (Kpis.fkOrphanCounts _),
-    // ---- §2.8 scalar functions / §2.9 events ----
-    "q15_scalar_functions"         -> (Kpis.scalarFunctions _),
-    "q16_events_hourly"            -> (Kpis.eventsHourly _),
-    "q17_event_sessions"           -> (Kpis.eventSessions _),
-    // ---- LLM-data-pipeline operators (north star; beyond-reference) ----
-    "q18_exact_dedup"              -> (Dedup.exactDedup _),
-    "q19_minhash_neardup"          -> (Dedup.minhashNearDup _),
-    "q20_embedding_topk"           -> (Sim.embeddingTopK _),
-    "q21_text_stats"               -> (TextOps.textStats _),
-    "q22_simhash_neardup"          -> (Dedup.simhashNearDup _),
-    "q23_doc_fingerprint"          -> (TextOps.docFingerprint _),
-    "q24_lang_quality"             -> (TextOps.langQuality _),
-    "q25_lsh_buckets"              -> (Sim.lshBuckets _),
-    "q26_cosine_neardup"           -> (Sim.cosineNearDup _),
-    // ---- remaining gold dims + 4-way chain (J3/J4/J6) ----
-    "q27_dim_part"                 -> (Gold.dimPart _),
-    "q28_dim_review"               -> (Gold.dimReview _),
-    "q29_dim_dispute"              -> (Gold.dimDispute _),
-    "q30_orders_4way"              -> (Kpis.fourWayOrderStats _),
-    // ---- S8 sources as oracle-checked queries ----
-    "q31_csv_roundtrip"            -> (SourceOps.csvRoundtrip _),
-    "q32_json_props"               -> (SourceOps.jsonProps _),
-    // ---- multimodal binary columns (north star) ----
-    "q33_media_features"           -> (graft.multimodal.Multimodal.mediaFeatures _),
-    // ---- V2-as-query, catalog/SQL surface, BPE-ish tokens, IVF ANN ----
-    "q34_enum_violations"          -> (Kpis.enumViolationCounts _),
-    "q35_sql_over_views"           -> (Kpis.sqlOverViews _),
-    "q36_regex_tokens"             -> (TextOps.regexTokens _),
-    "q37_ivf_cells"                -> (Sim.ivfCells _),
-    "q38_ivf_topk"                 -> (Sim.ivfTopK _),
-    // ---- OLAP extras, as-of join, typed Aggregator top-k ----
-    "q39_revenue_rollup"           -> (Kpis.revenueRollup _),
-    "q40_status_pivot"             -> (Kpis.statusPivot _),
-    "q41_event_order_asof"         -> (Kpis.eventOrderAsof _),
-    "q42_topk_aggregator"          -> (Sim.embeddingTopKAgg _),
-    // ---- dup clustering + end-to-end curation + length profiling ----
-    "q43_dup_clusters"             -> (Dedup.dupClusters _),
-    "q44_curation"                 -> (TextOps.curation _),
-    "q45_token_histogram"          -> (TextOps.tokenHistogram _),
-    // ---- product-quantization compressed ANN (codes + ADC search) ----
-    "q46_pq_codes"                 -> (Sim.pqCodes _),
-    "q47_pq_topk"                  -> (Sim.pqTopK _),
-    // ---- corpus statistics: n-gram counts, tf-idf feature extraction ----
-    "q48_top_bigrams"              -> (TextOps.topBigrams _),
-    "q49_tfidf_top_terms"          -> (TextOps.tfidfTopTerms _),
-    // ---- SQL registry surface for the native hash expressions ----
-    "q50_sql_text_functions"       -> (TextOps.sqlTextFunctions _),
-    // ---- distributed k-means update (fixed-point deterministic) ----
-    "q51_kmeans_step"              -> (Sim.kmeansStep _),
-    // ---- hybrid filtered vector search (metadata gate before scoring) ----
-    "q52_filtered_topk"            -> (Sim.filteredTopK _),
-    // ---- reproducible hash-bucket sampling (eval-set carving) ----
-    "q53_hash_sample"              -> (TextOps.hashSample _),
-    // ---- CUBE lattice (completes the grouping-sets family with q39) ----
-    "q54_status_cube"              -> (Kpis.statusCube _),
-    // ---- sketch aggregates (HLL++, approx quantiles): estimates are
-    // engine-specific, so the query reduces them to error-bound verdict
-    // booleans the oracle CAN hash-check (exact columns + literal TRUE);
-    // DedupSimSpec inspects the raw estimates via approxStatsFull ----
-    "q55_approx_stats"             -> (Kpis.approxStats _),
-    // ---- §2.7 set operations + full §2.5 window family ----
-    "q56_set_ops"                  -> (Kpis.setOps _),
-    "q57_window_family"            -> (Kpis.windowFamily _),
-    // ---- LLM-pipeline: packing, adaptive quality gate, 3-way split ----
-    "q58_sequence_packing"         -> (TextOps.sequencePacking _),
-    "q59_percentile_gate"          -> (TextOps.percentileGate _),
-    "q60_stratified_split"         -> (TextOps.stratifiedSplit _),
-    // ---- skew-mitigation salted aggregation (oracle = unsalted SQL) ----
-    "q61_salted_revenue"           -> (Kpis.saltedRevenueByNation _),
-    // ---- explicit GROUPING SETS lattice, map functions, interval join ----
-    "q62_grouping_sets"            -> (Kpis.statusGroupingSets _),
-    "q63_map_props"                -> (SourceOps.mapProps _),
-    "q64_order_event_window"       -> (Kpis.orderEventWindow _),
-    // ---- ORC round-trip (columnar interchange beyond parquet) ----
-    "q65_orc_roundtrip"            -> (SourceOps.orcRoundtrip _),
-    // ---- latest-wins compaction (CDC/upsert merge shape) ----
-    "q66_latest_event"             -> (Kpis.latestEventPerUser _),
-    // ---- train/test decontamination (leakage audit; naive id split
-    // leaks where the content-hash split of q60 cannot) ----
-    "q67_decontamination"          -> (Dedup.decontamination _),
-    // ---- source-mixture weighting (deterministic data mixing) ----
-    "q68_source_mixture"           -> (TextOps.sourceMixture _),
-    // ---- exact-moment descriptive stats (deterministic covar/corr) ----
-    "q69_stats_moments"            -> (Kpis.statsMoments _),
-    // ---- exact grouped percentiles (non-sketch twin of q55) ----
-    "q70_exact_percentiles"        -> (Kpis.exactPercentiles _),
-    // ---- round 4: curation quality signals + retrieval index ----
-    "q71_repetition"               -> (TextOps.repetition _),
-    "q72_pii_scan"                 -> (TextOps.piiScan _),
-    "q73_doc_chunks"               -> (TextOps.docChunks _),
-    "q74_schema_evolution"         -> (SourceOps.schemaEvolution _),
-    "q75_inverted_index"           -> (TextOps.invertedIndex _),
-    "q76_semantic_dedup"           -> (Sim.semanticDedup _),
-    // ---- full-outer reconciliation + time-series densification ----
-    "q77_reconciliation"           -> (Kpis.reconciliation _),
-    "q78_gap_fill"                 -> (Kpis.gapFill _),
-    // ---- wide→long reshape + VariantType semi-structured path ----
-    "q79_unpivot"                  -> (Kpis.nationMetricsLong _),
-    "q80_variant_props"            -> (SourceOps.variantProps _),
-    // ---- lexical retrieval scoring + CDC merge-apply ----
-    "q81_retrieval_topk"           -> (TextOps.retrievalTopK _),
-    "q82_cdc_merge"                -> (Kpis.cdcMergeApply _),
-    // ---- product analytics: ordered funnel + retention cohorts ----
-    "q83_event_funnel"             -> (Kpis.eventFunnel _),
-    "q84_retention_cohorts"        -> (Kpis.retentionCohorts _),
-    // ---- int8 embedding quantization (vector-store compression) ----
-    "q85_int8_quant"               -> (Sim.int8Quant _),
-    // ---- SCD Type 2 dimension build (warehouse versioned history) ----
-    "q86_scd2_dim"                 -> (Kpis.scd2Dimension _),
-    // ---- matryoshka truncated-prefix ANN with full-dim rerank ----
-    "q87_matryoshka_rerank"        -> (Sim.matryoshkaRerank _),
-    // ---- binary sign quantization + Hamming top-k ----
-    "q88_binary_hamming"           -> (Sim.binaryQuantHamming _),
-    // ---- one-pass column profiler (catalog/data-quality stats) ----
-    "q89_column_profile"           -> (Kpis.columnProfile _),
-    // ---- blocked record linkage (entity resolution, edit distance) ----
-    "q90_record_linkage"           -> (Dedup.recordLinkage _),
-    // ---- weighted PageRank over the nation trade graph ----
-    "q91_pagerank_step"            -> (Graph.pageRankStep _),
-    // ---- mergeable-state incremental aggregate maintenance ----
-    "q92_incremental_agg"          -> (Kpis.incrementalAgg _),
-    // ---- per-group equal-frequency binning (quantile bucketizer),
-    // grouped-ntile window REFERENCE form — the semantic spec. Its scale
-    // path (run-level rank arithmetic, no per-group data sort) is q122;
-    // IndexAnalyticsSpec pins the two bit-for-bit equal ----
-    "q93_quantile_bins"            -> (Kpis.quantileBins _),
-    // ---- k-means trained to KMEANS_ITERS Lloyd rounds (loop discipline:
-    // per-round localCheckpoint, centroids fed back) ----
-    "q94_kmeans_iterated"          -> (Sim.kmeansIterated _),
-    // ---- PR_ITERS-round PageRank, all-BIGINT rank recurrence ----
-    "q95_pagerank_iterated"        -> (Graph.pageRankIterated _),
-    // ---- round 5: scan-pruning index structures ----
-    "q96_bloom_prejoin"            -> (Indexing.bloomPrejoin _),
-    "q97_triangle_count"           -> (Graph.triangleCount _),
-    "q98_minmax_skipping"          -> (Indexing.minmaxSkipping _),
-    "q99_zorder_locality"          -> (Indexing.zorderLocality _),
-    // ---- round 5: exact statistical analytics ----
-    "q100_outlier_zscore"          -> (Analytics.outlierZscore _),
-    "q101_numeric_histogram"       -> (Analytics.numericHistogram _),
-    "q102_skyline"                 -> (Analytics.skylineParts _),
-    "q103_attribution"             -> (Analytics.attribution _),
-    // ---- round 5: graph communities, drift monitoring, market basket ----
-    "q104_label_propagation"       -> (Graph.labelPropagation _),
-    "q105_distribution_drift"      -> (Analytics.distributionDrift _),
-    "q106_copurchase"              -> (Analytics.coPurchase _),
-    // ---- round 5: robust stats + scale-correct global binning ----
-    "q107_mad_outliers"            -> (Analytics.madOutliers _),
-    "q108_equidepth_global"        -> (Analytics.equidepthGlobal _),
-    // ---- round 5: behavioral analytics (paths, multi-touch, seasonal) ----
-    "q109_event_paths"             -> (Analytics.eventPaths _),
-    "q110_multitouch"              -> (Analytics.multiTouchAttribution _),
-    "q111_seasonal_residuals"      -> (Analytics.seasonalResiduals _),
-    // ---- round 5: native sorted-merge as-of join (custom LogicalPlan +
-    // SparkStrategy + SparkPlan; q41's semantics, O(n+m) execution) ----
-    "q112_asof_native"             -> (Kpis.eventOrderAsofNative _),
-    // ---- round 5: UDTF-class Generator through the SQL registry ----
-    "q113_pair_generator"          -> (Graph.coSupplyTopEdges _),
-    // ---- round 5: time-constrained funnel + native XML round-trip ----
-    "q114_windowed_funnel"         -> (Kpis.windowedFunnel _),
-    "q115_xml_roundtrip"           -> (SourceOps.xmlRoundtrip _),
-    // ---- round 5: exact-moment model fits ----
-    "q116_ols_regression"          -> (Analytics.olsRegression _),
-    "q117_chi_square"              -> (Analytics.chiSquare _),
-    // ---- round 5: two-phase exact heavy hitters (scale path of q48) ----
-    "q118_heavy_hitters"           -> (TextOps.heavyHitters _),
-    // ---- round 5: ANN index evaluation (recall@k vs brute force) ----
-    "q119_ann_recall"              -> (Sim.annRecall _),
-    // ---- round 5: weighted median + revenue-concentration (Gini) ----
-    "q120_weighted_median"         -> (Analytics.weightedMedian _),
-    "q121_gini_by_nation"          -> (Analytics.giniByNation _),
-    // ---- round 6: grouped equal-frequency binning, scale path of q93
-    // (exact ntile output via run-level rank arithmetic over the
-    // distinct-value aggregate — one sharded window, no data sort) ----
-    "q122_quantile_bins_grouped"   -> (Analytics.quantileBinsGrouped _),
-    // ---- round 6: direction + tolerance knobs on the native as-of
-    // operator (kdb aj / pandas merge_asof parity) ----
-    "q123_asof_forward"            -> (Kpis.eventOrderAsofForward _),
-    "q124_asof_nearest"            -> (Kpis.eventOrderAsofNearest _),
-    // ---- round 6: selective salted join (join twin of q61's salted
-    // agg; oracle is the unsalted join, proving semantics preserved) ----
-    "q125_salted_skew_join"        -> (Skew.saltedSkewJoin _),
-    // ---- round 6: broadcast as-of strategy (zero probe-side shuffle),
-    // round 7: re-pointed at its contract shape — the broadcast side is
-    // a reference table bounded by CONSTRUCTION, not a scale-growing
-    // fact (the broadcast≡merge equality proof stays in AsOfJoinSpec) ----
-    "q126_asof_broadcast"          -> (Kpis.eventNationRateAsof _),
-    // ---- round 6: multi-column-key as-of (kdb aj by-columns parity) ----
-    "q127_asof_multikey"           -> (Kpis.lineitemRateAsof _),
-    // ---- round 7: incremental near-dup against a PERSISTED band index
-    // (build once, probe each delta — no corpus signature recompute) ----
-    "q128_incremental_neardup"     -> (Dedup.incrementalNearDup _),
-    // ---- round 7: persisted IVF index lifecycle (train once, append
-    // deltas against frozen centroids, cell-pruned probes) ----
-    "q129_ivf_index_probe"         -> (Sim.ivfIndexProbe _),
-    // ---- round 7: C4-style cross-document boilerplate accounting
-    // (relative-df heavy grams, broadcast back — corpus never shuffled) --
-    "q130_boilerplate_ngrams"      -> (TextOps.boilerplateNgrams _),
-    // ---- round 8: IVF recall@k as a function of nprobe on one persisted
-    // index — the measurement behind probeIvfIndex's multi-cell knob ----
-    "q131_ivf_nprobe_recall"       -> (Sim.ivfNprobeRecall _),
-    // ---- round 8: the heavy-gram drift monitor's table (same operator
-    // streams in DocsStream.heavyGramMonitor; StreamingSpec pins ≡) ----
-    "q132_heavy_gram_monitor"      -> ((s, dir) =>
-      graft.streaming.DocsStream.heavyGramMonitor(
-        Tables.documents(s, dir), TextOps.heavyGramSet(s, dir))
-        .orderBy("g")),
-    // ---- round 8: exact-substring (repeated-span) dedup signal —
-    // position-kept window fingerprints, cross-document df≥2 ----
-    "q133_repeated_spans"          -> (TextOps.repeatedSpans _),
-    // ---- round 8: the dedup keep/drop decision over q43's clusters ----
-    "q134_dedup_keep_list"         -> (Dedup.dedupKeepList _),
-    // ---- round 8: tokenizer-sizing signal — top-N vocab coverage ----
-    "q135_vocab_coverage"          -> (TextOps.vocabCoverage _),
-    // ---- round 8: composed IVF-PQ search (coarse cells → ADC scan of
-    // compressed codes → exact rerank of the shortlist) ----
-    "q136_ivfpq_topk"              -> (Sim.ivfpqTopK _),
-    // ---- round 8: RRF fusion of lexical + dense similar-doc rankings ----
-    "q137_hybrid_retrieval"        -> (TextOps.hybridRetrieval _),
-    // ---- round 8: bigram-LM fluency scoring (CCNet-style quality) ----
-    "q138_lm_score"                -> (TextOps.lmScore _),
-    // ---- round 8: persisted inverted-index lifecycle (lexical twin of
-    // the MinHash/IVF indexes — build/append/probe/compact) ----
-    "q139_term_index_probe"        -> (TermIndex.termIndexProbe _),
-    // ---- round 8: LSH banding-geometry recall/precision sweep ----
-    "q140_lsh_recall"              -> (Dedup.lshRecall _),
-    // ---- round 8: temperature-flattened mixture sampling (α=0.5) ----
-    "q141_temperature_sample"      -> (TextOps.temperatureSample _),
-    // ---- round 8: leakage-proof split keyed on near-dup clusters ----
-    "q142_cluster_split"           -> (Dedup.clusterAwareSplit _),
-    // ---- round 8: deterministic global training shuffle manifest ----
-    "q143_training_shards"         -> (TextOps.trainingShards _),
-    // ---- round 8: embedding drift vs frozen baseline centroids ----
-    "q144_embedding_drift"         -> (Sim.embeddingDrift _),
-    // ---- round 8: 13-gram benchmark decontamination ----
-    "q145_ngram_decontamination"   -> (Dedup.ngramDecontamination _),
-    // ---- round 8: doc-in-doc containment dedup (bottom-k sketch) ----
-    "q146_containment_dedup"       -> (Dedup.containmentDedup _),
-    // ---- round 8: end-to-end curation pipeline in one plan ----
-    "q147_curation_pipeline"       -> (TextOps.curationPipeline _),
-    // ---- round 8: cluster-stratified coverage sample ----
-    "q148_cell_coverage_sample"    -> (Sim.cellCoverageSample _),
-    // ---- round 8: persisted IVF-PQ compressed-index lifecycle ----
-    "q149_ivfpq_index_probe"       -> (Sim.ivfpqIndexProbe _),
-    // ---- round 8: source-pair duplication matrix ----
-    "q150_source_pair_dups"        -> (Dedup.sourcePairDups _),
-    // ---- round 8: token-budget mixture via exact waterfilling ----
-    "q151_token_budget_mixture"    -> (TextOps.tokenBudgetMixture _),
-    // ---- round 8: exact phrase search via positioned span hashes ----
-    "q152_phrase_search"           -> (TextOps.phraseSearch _),
-    // ---- round 9: steady-state consumers of the maintained label
-    //      table (merge, never re-cluster) — same oracles as the full
-    //      recomputes they replace (q134/q142) ----
-    "q153_lifecycle_keep_list"     -> (Dedup.lifecycleKeepList _),
-    "q154_lifecycle_cluster_split" -> (Dedup.lifecycleClusterSplit _),
-    // ---- round 9: containment head-fingerprint index lifecycle ----
-    "q155_containment_increment"   -> (Dedup.containmentIncrementProbe _),
-    // ---- round 9: the remaining closure consumers, lifecycle-served
-    //      (same oracles as q147/q43) ----
-    "q156_lifecycle_curation"      -> (TextOps.lifecycleCuration _),
-    "q157_lifecycle_dup_clusters"  -> (Dedup.lifecycleDupClusters _),
-    // ---- round 9: the DECREMENTAL paths, oracle-gated — forget must
-    //      arrive at the closure/scoring of a corpus the deleted docs
-    //      were never in ----
-    "q158_forget_clusters"         -> (Dedup.forgetClustersProbe _),
-    "q159_term_forget_probe"       -> (TermIndex.termForgetProbe _),
-    // ---- round 9: soft dedup — weight, don't drop ----
-    "q160_soft_dedup_weights"      -> (Dedup.softDedupWeights _),
-    "q161_lifecycle_soft_weights"  -> (Dedup.lifecycleSoftWeights _),
-    // ---- round 9: funnel ledger + quality-ranked canonicals ----
-    "q162_curation_funnel"         -> (TextOps.curationFunnel _),
-    "q163_quality_canonicals"      -> (Dedup.qualityCanonicals _),
-    "q164_quality_keep_list"       -> (Dedup.qualityKeepList _),
-    "q165_weighted_mixture"        -> (TextOps.weightedTokenMixture _),
-    "q166_lifecycle_semdedup"      -> (Sim.lifecycleSemanticDedup _),
-    "q167_source_token_cap"        -> (TextOps.sourceTokenCap _),
-    "q168_stratified_eval"         -> (TextOps.stratifiedEvalSample _),
-    "q169_length_percentiles"      -> (TextOps.lengthPercentiles _),
-    // ---- round 9: winnowing fingerprints (local-overlap dedup channel)
-    //      + BPE tokenizer training over the word histogram ----
-    "q170_winnow_neardup"          -> (Dedup.winnowNearDup _),
-    "q171_bpe_merges"              -> (TextOps.bpeMerges _),
-    "q172_bpe_fertility"           -> (TextOps.bpeFertility _),
-    "q173_winnow_increment"        -> (Dedup.winnowIncrementProbe _),
-    // ---- round 10: sampling-theory + sketch-calibration operators ----
-    "q174_weighted_sample"         -> (TextOps.weightedSample _),
-    "q175_random_projection_audit" -> (Sim.randomProjectionAudit _),
-    "q176_source_overlap"          -> (Dedup.sourceOverlap _),
-    "q177_dsir_weights"            -> (TextOps.dsirWeights _),
-    // ---- round 10: REAL image decode (PPM/P6 wire round trip) ----
-    "q178_image_decode"            -> (graft.multimodal.Multimodal.imageDecodeStats _),
-    "q179_image_resize"            -> (graft.multimodal.Multimodal.imageResizeStats _),
-    // ---- round 10: the streaming lineage, oracle-gated end-to-end ----
-    "q180_stream_curated"          -> (graft.streaming.DocsStream.streamCuratedProbe _),
-    // ---- round 10: the reference's availability-JSON schedule parse ----
-    "q181_availability_json"       -> (SourceOps.availabilityJson _),
-    // ---- round 10: persisted exact-hash "seen-before" admission gate ----
-    "q182_hash_index_probe"        -> (Dedup.hashIndexProbe _),
-    // ---- round 10: REAL audio decode (RIFF/WAVE PCM wire round trip)
-    //      + oracle-gated video frame sampling ----
-    "q183_audio_decode"            -> (graft.multimodal.Multimodal.audioDecodeStats _),
-    "q184_audio_resample"          -> (graft.multimodal.Multimodal.audioResampleStats _),
-    "q185_video_frames"            -> (graft.multimodal.Multimodal.videoFrameStats _),
-    // ---- round 10: perceptual image dedup (dHash over the real codec) ----
-    "q186_image_dhash"             -> (graft.multimodal.Multimodal.imageDHash _),
-    "q187_image_pdup_groups"       -> (graft.multimodal.Multimodal.imagePdupGroups _),
-    "q188_image_pdup_pairs"        -> (graft.multimodal.Multimodal.imagePdupPairs _),
-    // ---- round 10: crawl-scale URL identity + frame-level audio features ----
-    "q189_url_canonical"           -> (SourceOps.urlCanonicalDedup _),
-    "q190_audio_frames"            -> (graft.multimodal.Multimodal.audioFrameStats _),
-    // ---- round 10: domain-grain curation gate (blocklist + quality) ----
-    "q191_domain_gate"             -> (SourceOps.domainGate _),
-    // ---- round 10: fastText-shaped hashed-linear quality classifier ----
-    "q192_quality_classifier"      -> (TextOps.qualityClassifier _),
-    // ---- round 10: CCNet line-level dedup with doc reconstruction ----
-    "q193_line_dedup"              -> (TextOps.lineDedup _),
-    // ---- round 10: audio perceptual fingerprint near-dup ----
-    "q194_audio_pdup_pairs"        -> (graft.multimodal.Multimodal.audioPdupPairs _),
-    // ---- round 10: deterministic KMV cardinality sketch + merge ----
-    "q195_kmv_distinct"            -> (TextOps.kmvDistinctShingles _),
-    // ---- round 10: video near-dup via frame-fingerprint matching ----
-    "q196_video_pdup_pairs"        -> (graft.multimodal.Multimodal.videoPdupPairs _),
-    // ---- round 10: streaming near-dup lifecycle, oracle-gated ----
-    "q197_stream_neardup"          -> (graft.streaming.DedupStream.streamNearDupProbe _),
-    // ---- round 10: KMV sketch-store lifecycle (build/append/serve) ----
-    "q198_kmv_lifecycle"           -> (TextOps.kmvLifecycle _),
-    // ---- round 10: contrastive hard-negative mining band ----
-    "q199_hard_negatives"          -> (Sim.hardNegatives _),
-    // ---- round 10: watermarked windowed agg, oracle-gated ----
-    "q200_stream_hourly"           -> (graft.streaming.EventsStream.streamHourlyProbe _),
-    // ---- round 11: flatMapGroupsWithState sessionizer, oracle-gated ----
-    "q201_stream_sessions"         -> (graft.streaming.EventsStream.streamSessionsProbe _),
-    // ---- round 11: stream-stream as-of join, all 3 directions ----
-    "q202_stream_asof"             -> (graft.streaming.AsOfStream.streamAsOfProbe _),
-    // ---- round 11: REAL BMP codec (wire-layout pins) ----
-    "q203_bmp_decode"              -> (graft.multimodal.Multimodal.bmpDecodeStats _),
-    // ---- round 11: mixed-format sniffing decode + resize ----
-    "q204_mixed_decode"            -> (graft.multimodal.Multimodal.mixedDecodeStats _),
-    // ---- round 11: session_window merge under out-of-order arrival ----
-    "q205_stream_session_windows"  -> (graft.streaming.EventsStream.streamSessionWindowsProbe _),
-    // ---- round 11: KMV pairwise source-overlap estimation ----
-    "q206_kmv_source_overlap"      -> (TextOps.kmvSourceOverlap _),
-    // ---- round 11: k-core decomposition (iterative peeling) ----
-    "q207_kcore"                   -> (Graph.kCore _),
-    // ---- round 11: stream-stream interval join, emission-law gated ----
-    "q208_stream_interval_join"    -> (graft.streaming.EventsStream.streamIntervalJoinProbe _),
-    // ---- round 11: stream-static as-of sink, row-grain gated ----
-    "q209_stream_asof_sink"        -> (graft.streaming.AsOfStream.streamAsOfSinkProbe _),
-    // ---- round 11: complete-mode drift histogram ----
-    "q210_stream_drift"            -> (graft.streaming.EventsStream.streamDriftProbe _),
-    // ---- round 11: term-index ingest stream (+ mid-stream compaction) ----
-    "q211_stream_term_index"       -> (graft.streaming.TermIndexStream.streamTermIndexProbe _),
-    // ---- round 11: vec-index ingest + probe-serving streams ----
-    "q212_stream_vec_index"        -> (graft.streaming.VecIndexStream.streamVecIndexProbe _),
-    // ---- round 11: sorted-neighbourhood linkage (bounded-pair ER) ----
-    "q213_sorted_neighbourhood"    -> (Dedup.sortedNeighbourhood _),
-    // ---- round 11: drift-cell ingest stream, (batch, cell) grain ----
-    "q214_stream_drift_cells"      -> (graft.streaming.DriftStream.streamDriftCellsProbe _),
-    // ---- round 11: built-in exact streaming dedup under replayed feed ----
-    "q215_stream_dedup"            -> (graft.streaming.EventsStream.streamDedupProbe _),
-    // ---- round 11: stream-stream LEFT OUTER interval join ----
-    "q216_stream_outer_join"       -> (graft.streaming.EventsStream.streamOuterJoinProbe _),
-    // ---- round 11: stream-stream FULL OUTER interval join ----
-    "q217_stream_full_outer_join"  -> (graft.streaming.EventsStream.streamFullOuterJoinProbe _),
-    // ---- round 12: REAL PNG codec — hand-rolled DEFLATE inflate + the
-    // five scanline unfilters; compressed mainstream format coverage ----
-    "q218_png_decode"              -> (graft.multimodal.Multimodal.pngDecodeStats _),
-    // ---- round 12: deterministic bottom-k-sample quantiles (vs q55's
-    // merge-order-sensitive percentile_approx) ----
-    "q219_quantile_sketch"         -> (TextOps.quantileSketch _),
-    // ---- round 12: the reference's OWN 13-table schema end-to-end —
-    // CSV fixtures → bronze → silver → gold, then its 8 KPI queries ----
-    "q220_v2_active_categories"    -> (V2Demo.kpiActiveCategories _),
-    "q221_v2_top_providers"        -> (V2Demo.kpiTopProviders _),
-    "q222_v2_disputed_providers"   -> (V2Demo.kpiDisputedProviders _),
-    "q223_v2_demand_by_area"       -> (V2Demo.kpiDemandByArea _),
-    "q224_v2_avg_rating"           -> (V2Demo.kpiAvgRating _),
-    "q225_v2_monthly_revenue"      -> (V2Demo.kpiMonthlyRevenue _),
-    "q226_v2_ai_usage"             -> (V2Demo.kpiAiUsage _),
-    "q227_v2_top_rated"            -> (V2Demo.kpiTopRated _),
-    // ---- round 13: baseline JPEG — the dominant real-corpus format;
-    // entropy decode + IDCT hash-gated via coefficient-constructed
-    // exactly-rational blocks (VERDICT r12 ask #1) ----
-    "q228_jpeg_decode"             -> (graft.multimodal.Multimodal.jpegDecodeStats _),
-    // ---- round 13: PROGRESSIVE JPEG (SOF2) — multi-scan spectral
-    // selection + EOBn runs, same exact-integer oracle device ----
-    "q229_jpeg_progressive"        -> (graft.multimodal.Multimodal.jpegProgressiveStats _),
-    // ---- round 13: crawl-archive ingestion — .warc.gz member decode
-    // (RFC 1952 over the hand-rolled inflate), WARC/HTTP envelopes,
-    // HTML→text extraction; md5(text) gated cross-engine ----
-    "q230_warc_ingest"             -> (Crawl.warcIngest _),
-    "q231_crawl_host_stats"        -> (Crawl.crawlHostStats _),
-    // ---- round 13: GIF — fifth image format, third hand-rolled
-    // compression family (LZW: variable-width codes, dict growth,
-    // KwKwK, interlace) ----
-    "q232_gif_decode"              -> (graft.multimodal.Multimodal.gifDecodeStats _),
-    // ---- round 13: charset-aware page decode — Content-Type charset
-    // parameter honored (UTF-8 / latin-1 / cp1252), wrong-charset
-    // decodes cannot hash-match ----
-    "q233_charset_pages"           -> (Crawl.charsetPages _),
-    // ---- round 13: robots.txt (RFC 9309) frontier gate — broadcast
-    // per-host rules, longest-match precedence, map-side verdicts ----
-    "q234_robots_gate"             -> ((s, d) => Crawl.robotsGate(s, d)),
-    // ---- round 13: crawl → curation end-to-end — wire bytes through
-    // the decode chain into the shared quality gates and per-verdict
-    // corpus accounting ----
-    "q235_crawl_curation"          -> (Crawl.crawlCuration _),
-    // ---- round 14: PDF text extraction, dependency-free ISO 32000
-    // subset (xref table → object graph → page tree → FlateDecode zlib
-    // inflate → Tj/TJ/'/" operator machine), reached through the crawl
-    // ingest's Content-Type DISPATCH next to HTML (VERDICT r13 ask #1) ----
-    "q236_pdf_text"                -> (Crawl.pdfTextIngest _),
-    // ---- round 14: MAIN-CONTENT extraction — the jusText-shaped
-    // block classifier (chrome ancestry / main-container override /
-    // integer length+link-density law); q235's corpus gained chrome and
-    // its gate rides the same extractor (VERDICT r13 ask #4) ----
-    "q237_main_content"            -> (Crawl.mainContentExtract _),
-    // ---- round 14: CDX record-grain index — response captures indexed
-    // (urlkey, archive, member byte span) at ingest; a URL probe decodes
-    // ONLY matched members by random access (VERDICT r13 ask #5) ----
-    "q238_cdx_probe"               -> (Crawl.cdxProbe _),
-    // ---- round 14: the beyond-broadcast robots gate — rules as a
-    // host-keyed TABLE met in a sort-merge join (the 10⁷-host regime's
-    // shape); same oracle as q234 (VERDICT r13 ask #2) ----
-    "q239_robots_gate_joined"      -> (Crawl.robotsGateJoined _),
-    // ---- round 14: sitemap discovery (sitemaps.org protocol) — each
-    // host's sitemapindex fetched and parsed, child urlsets fetched BY
-    // THE PARSED LOCS; namespace-prefixed and default forms, CDATA,
-    // entities, extension elements with decoy locs all on the wire ----
-    "q240_sitemap_discover"        -> (Crawl.sitemapDiscover _),
-    // ---- round 14: crawl-frontier construction — the composition the
-    // crawl surface exists for: sitemap-discovered ∖ seen-before ∩
-    // robots-allowed, scheduled into per-host politeness waves ----
-    "q241_crawl_frontier"          -> (Crawl.crawlFrontier _),
-    // ---- round 14: WebDataset-style tar shard ingest — the ustar
-    // distribution wrapper of real multimodal training corpora: shard
-    // bytes parsed, members grouped into samples by key, text + class +
-    // image members decoded map-side (the file IS the row) ----
-    "q242_tar_shard_samples"       -> (graft.multimodal.Multimodal.tarShardSamples _),
-    // ---- round 14: ZIP document-dump probe — central-directory
-    // listing (an archive-tail read) + selective CRC-checked extraction
-    // of seed members only: the container whose record-grain random
-    // access is native to the wire ----
-    "q243_zip_probe"               -> (Crawl.zipArchiveProbe _),
-    // ---- round 14: WET emission — the crawl surface gains its EMIT
-    // side: extracted text serialized as real conversion records
-    // (WARC envelope + gzip member framing) and read back through the
-    // hand-rolled decode; gate columns are the q230 text law's ----
-    "q244_wet_roundtrip"           -> (Crawl.wetRoundTrip _),
-    // ---- round 14: the frontier SCHEDULE — q241's politeness waves
-    // paced by each host's Crawl-delay (surfaced from robots.txt, the
-    // de-facto extension real fleets honor) into fetch times ----
-    "q245_frontier_schedule"       -> (Crawl.frontierSchedule _),
-    // ---- round 14: recrawl-due — the frontier's other half: seen URLs
-    // whose sitemap lastmod is strictly newer than their LATEST
-    // capture's WARC-Date (read through the real archive decode) ----
-    "q246_recrawl_due"             -> (Crawl.recrawlDue _),
-    // ---- round 14: discovery via robots.txt Sitemap lines — the real
-    // frontier's entry point; same oracle as q240 ----
-    "q247_sitemap_via_robots"      -> (Crawl.sitemapDiscoverViaRobots _),
-    // ---- round 14: tar reshard — loader-parallelism resharding of
-    // WebDataset corpora through the real ustar writer; same oracle as
-    // q242 (resharding must be invisible to the sample set) ----
-    "q248_tar_reshard"             -> (graft.multimodal.Multimodal.tarReshard _),
-    // ---- round 14: Avro OCF round trip — the row-oriented interchange
-    // container, hand-rolled (the distribution has no spark-avro):
-    // embedded JSON schema, zigzag varints, deflate blocks, sync law ----
-    "q249_avro_roundtrip"          -> (Crawl.avroRoundTrip _),
-    // ---- round 14: sitemap REWRITE — the emit side of discovery:
-    // parsed urlsets written back (entity re-encoding, optional-field
-    // preservation) and re-parsed; same oracle as q240 ----
-    "q250_sitemap_rewrite"         -> (Crawl.sitemapRewrite _),
-    // ---- round 15: PDF 1.5+ layout — cross-reference STREAMS
-    // (W-typed binary rows, PNG-predicted on half the corpus)
-    // resolving objects INTO object streams; the modern layout the
-    // majority of real-world PDFs use (VERDICT r14 ask #1) ----
-    "q251_pdf_xref_stream"         -> (Crawl.pdfXrefStreamIngest _),
-    // ---- round 15: PDF Form XObjects — text riding /Subtype /Form
-    // draws (headers/footers/stamps): form-scoped resources (name
-    // shadowing), nested forms, Do's implicit state save/restore, the
-    // form-boundary separator law (VERDICT r14 ask #6) ----
-    "q252_pdf_forms"               -> (Crawl.pdfFormTextIngest _),
-    // ---- round 15: the politeness window at HOST-SKEW scale — a
-    // planted Zipf-head host, two-path on measured cardinalities (the
-    // q125/q61 device): cold hosts keep the plain window, hot hosts
-    // decompose the rank over the bounded leading sort key
-    // (VERDICT r14 ask #8) ----
-    "q253_frontier_skew"           -> (Crawl.frontierSkewedWaves _),
-    // ---- round 15: Type0/CID fonts — Identity-H 2-byte CIDs through
-    // a /ToUnicode CMap (bfchar singles incl. a surrogate pair,
-    // incrementing bfrange), the composite-font layout CJK documents
-    // and subset-embedded fonts ship (VERDICT r14 missing #2) ----
-    "q254_pdf_cid_text"            -> (Crawl.pdfCidTextIngest _),
-    // ---- round 15: incremental updates — /Prev xref chains (classic
-    // AND xref-stream sections), newest-section-wins shadowing, freed
-    // entries masking older generations; the append-only save layout
-    // editors actually write ----
-    "q255_pdf_incremental"         -> (Crawl.pdfIncrementalIngest _),
-    // ---- round 15: Unicode normalization as a native codegen
-    // expression (Spark has no built-in): NFC for dedup-ahead
-    // canonicalization, NFKC for compatibility folding; NFC gated
-    // against DuckDB's independent utf8proc implementation ----
-    "q256_unicode_normalize"       -> (TextOps.unicodeNormalize _),
-    // ---- round 15: BOM-precedence HTML decode (HTML5 sniffing step
-    // 1): the byte-order mark outranks a lying Content-Type charset
-    // header; four transport arms under ONE arithmetic text law ----
-    "q257_bom_charset"             -> (Crawl.bomCharsetPages _),
-    // ---- round 15: chunked transfer-coding decode (RFC 9112 §7.1):
-    // WARC stores the raw wire, so chunked captures are common; the
-    // framing must be removed (sizes, extensions) and trailers kept,
-    // under one text law shared with the Content-Length control ----
-    "q258_chunked_http"            -> (Crawl.chunkedPages _),
-  )
 
   /** Shared by q41 (window form) and q112 (native sorted-merge form):
     * one as-of semantics, two execution strategies, one oracle. */
@@ -563,10 +39,12 @@ object SparkEntry {
       | strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS order_date
       |FROM j WHERE rn = 1 ORDER BY event_id""".stripMargin
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
+  /** Every query, in number order. Twins named `OracleTwins.*` are
+    * generated from the same constants as the Spark side (hash family,
+    * band geometry, LSH planes), so the two cannot drift apart. */
+  val registry: Seq[Query] = checkUnique(Seq(
+    // ---- §2.4/§2.6/§2.8 analytical surface (Kpis) ----
+    Query("q01_pricing_summary", Kpis.pricingSummary,
       """SELECT l_returnflag, l_linestatus,
         | SUM(l_quantity) AS sum_qty,
         | CAST(SUM(CAST(round((l_extendedprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS sum_base_price,
@@ -575,50 +53,52 @@ object SparkEntry {
         | SUM(l_quantity)/count(*) AS avg_qty,
         | (CAST(SUM(CAST(round((l_extendedprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE))/count(*) AS avg_price
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q02_top5_suppliers" ->
+    Query("q02_top5_suppliers", Kpis.topSuppliers,
       """SELECT s_suppkey, s_name, count(*) AS n_items,
         | CAST(SUM(CAST(round((l_extendedprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         |GROUP BY s_suppkey, s_name
-        |ORDER BY n_items DESC, s_suppkey LIMIT 5""".stripMargin,
+        |ORDER BY n_items DESC, s_suppkey LIMIT 5""".stripMargin),
 
-    "q03_orders_by_nation_segment" ->
+    Query("q03_orders_by_nation_segment", Kpis.ordersByNationSegment,
       """SELECT n_name, c_mktsegment, count(*) AS n_orders,
         | count(DISTINCT c_custkey) AS n_customers
         |FROM orders JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name, c_mktsegment ORDER BY n_name, c_mktsegment""".stripMargin,
+        |GROUP BY n_name, c_mktsegment ORDER BY n_name, c_mktsegment""".stripMargin),
 
-    "q04_avg_balance_by_nation" ->
+    Query("q04_avg_balance_by_nation", Kpis.avgBalanceByNation,
       """SELECT n_name, count(*) AS n_customers,
         | CAST(SUM(CAST(round((c_acctbal)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS total_balance,
         | (CAST(SUM(CAST(round((c_acctbal)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE))/count(*) AS avg_balance
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
 
-    "q05_monthly_revenue" ->
+    Query("q05_monthly_revenue", Kpis.monthlyRevenue,
       """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS order_month,
         | count(*) AS n_orders,
         | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
-        |FROM orders GROUP BY 1 ORDER BY order_month""".stripMargin,
+        |FROM orders GROUP BY 1 ORDER BY order_month""".stripMargin),
 
-    "q06_pct_filled_by_priority" ->
+    Query("q06_pct_filled_by_priority", Kpis.pctFilledByPriority,
       """SELECT o_orderpriority, count(*) AS n_orders,
         | CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
         | CAST(round(100.0*CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT)/count(*)*100) AS BIGINT)/CAST(100 AS DOUBLE) AS pct_filled
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    "q07_week_orders" ->
+    Query("q07_week_orders", Kpis.weekOrders,
       """SELECT o_orderstatus, count(*) AS n_orders,
         | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
         |FROM orders
         |WHERE o_orderdate >= date_trunc('week', DATE '1998-07-15')
         |  AND o_orderdate < date_trunc('week', DATE '1998-07-15') + INTERVAL 7 DAY
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
-    "q08_fact_orders" ->
+    // ---- §2.2/§2.3 gold star schema (Gold) ----
+    Query("q08_fact_orders", ((s: SparkSession, d: String) =>
+      Gold.factOrders(s, d).orderBy("order_id")),
       """SELECT o.o_orderkey AS order_id, o.o_custkey AS customer_id,
         | c.c_name AS customer_name, c.c_mktsegment AS segment,
         | c.c_nationkey AS nation_key, o.o_orderstatus AS order_status,
@@ -627,18 +107,18 @@ object SparkEntry {
         | year(o.o_orderdate) AS year, month(o.o_orderdate) AS month,
         | CAST(strftime(o.o_orderdate, '%Y%m%d') AS BIGINT) AS date_key
         |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE o.o_orderkey IS NOT NULL ORDER BY order_id""".stripMargin,
+        |WHERE o.o_orderkey IS NOT NULL ORDER BY order_id""".stripMargin),
 
-    "q09_dim_date" ->
+    Query("q09_dim_date", Gold.dimDate,
       """SELECT CAST(d AS DATE) AS cal_date,
         | CAST(strftime(d, '%Y%m%d') AS BIGINT) AS date_key,
         | year(d) AS year, month(d) AS month, quarter(d) AS quarter,
         | day(d) AS day_of_month, monthname(d) AS month_name,
         | dayname(d) AS day_name, dayofweek(d) IN (0, 6) AS is_weekend
         |FROM generate_series(DATE '1995-01-01', DATE '2001-12-31', INTERVAL 1 DAY) t(d)
-        |ORDER BY cal_date""".stripMargin,
+        |ORDER BY cal_date""".stripMargin),
 
-    "q10_dim_customer" ->
+    Query("q10_dim_customer", Gold.dimCustomer,
       """SELECT c.c_custkey AS customer_id,
         | c.c_name || ' [' || n.n_name || ']' AS customer_label,
         | n.n_name AS nation, r.r_name AS region,
@@ -646,9 +126,9 @@ object SparkEntry {
         |FROM customer c
         | LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
         | LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
-        |ORDER BY customer_id""".stripMargin,
+        |ORDER BY customer_id""".stripMargin),
 
-    "q11_top3_customers_per_nation" ->
+    Query("q11_top3_customers_per_nation", Kpis.top3CustomersPerNation,
       """WITH rev AS (
         |  SELECT o_custkey,
         |    CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS BIGINT) AS rev_cents,
@@ -663,20 +143,21 @@ object SparkEntry {
         |  JOIN rev r ON c.c_custkey = r.o_custkey)
         |SELECT n_name, rank, c_custkey AS customer_id, c_name AS customer_name,
         |  CAST(rev_cents AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue, n_orders
-        |FROM j WHERE rank <= 3 ORDER BY n_name, rank""".stripMargin,
+        |FROM j WHERE rank <= 3 ORDER BY n_name, rank""".stripMargin),
 
-    "q12_dim_region_nation" ->
+    Query("q12_dim_region_nation", Gold.dimRegionNation,
       """SELECT DISTINCT r.r_name AS region, n.n_name AS nation
         |FROM nation n LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
-        |ORDER BY region, nation""".stripMargin,
+        |ORDER BY region, nation""".stripMargin),
 
-    "q13_silver_dedup" ->
+    // ---- §2.11 silver quality ops ----
+    Query("q13_silver_dedup", Kpis.silverDedup,
       """SELECT DISTINCT l_returnflag, l_linestatus,
         | year(l_shipdate) AS ship_year, l_quantity
         |FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus, ship_year, l_quantity""".stripMargin,
+        |ORDER BY l_returnflag, l_linestatus, ship_year, l_quantity""".stripMargin),
 
-    "q14_fk_orphans" ->
+    Query("q14_fk_orphans", Kpis.fkOrphanCounts,
       """SELECT * FROM (
         | SELECT 'lineitem->orders' AS relationship, count(*) AS orphans
         | FROM lineitem l
@@ -687,9 +168,10 @@ object SparkEntry {
         | UNION ALL
         | SELECT 'orders->customer', count(*) FROM orders o
         | WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-        |) ORDER BY relationship""".stripMargin,
+        |) ORDER BY relationship""".stripMargin),
 
-    "q15_scalar_functions" ->
+    // ---- §2.8 scalar functions / §2.9 events ----
+    Query("q15_scalar_functions", Kpis.scalarFunctions,
       """SELECT o_orderkey AS order_id,
         | CAST(strftime(o_orderdate, '%Y%m%d') AS BIGINT) AS date_key,
         | monthname(o_orderdate) AS month_name,
@@ -699,9 +181,9 @@ object SparkEntry {
         | CASE WHEN o_orderpriority LIKE '1%' OR o_orderpriority LIKE '2%'
         |      THEN 'urgent' ELSE 'normal' END AS priority_class,
         | CAST(round((o_totalprice*0.05)*100) AS BIGINT)/CAST(100 AS DOUBLE) AS fee
-        |FROM orders ORDER BY order_id""".stripMargin,
+        |FROM orders ORDER BY order_id""".stripMargin),
 
-    "q16_events_hourly" ->
+    Query("q16_events_hourly", Kpis.eventsHourly,
       """WITH h AS (
         | SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
         |  event_type, count(*) AS n_events,
@@ -709,9 +191,9 @@ object SparkEntry {
         | FROM events GROUP BY 1, 2)
         |SELECT hour_start, event_type, n_events, total_value,
         | total_value/n_events AS avg_value
-        |FROM h ORDER BY hour_start, event_type""".stripMargin,
+        |FROM h ORDER BY hour_start, event_type""".stripMargin),
 
-    "q17_event_sessions" ->
+    Query("q17_event_sessions", Kpis.eventSessions,
       """WITH e AS (
         | SELECT user_id, event_id, ts,
         |  lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -721,176 +203,29 @@ object SparkEntry {
         |               THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
         | strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS first_seen,
         | strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS last_seen
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    // LLM-pipeline twins are generated from the same constants as the Spark
-    // side (hash family, band geometry, LSH planes) — see OracleTwins.
-    "q18_exact_dedup"      -> OracleTwins.exactDedup,
-    "q19_minhash_neardup"  -> OracleTwins.minhashNearDup,
-    "q128_incremental_neardup" -> OracleTwins.incrementalNearDup,
-    "q129_ivf_index_probe" -> OracleTwins.ivfIndexProbe,
-    "q130_boilerplate_ngrams" -> OracleTwins.boilerplateNgrams,
-    "q131_ivf_nprobe_recall" -> OracleTwins.ivfNprobeRecall,
-    "q132_heavy_gram_monitor" -> OracleTwins.heavyGramMonitor,
-    "q133_repeated_spans" -> OracleTwins.repeatedSpans,
-    "q134_dedup_keep_list" -> OracleTwins.dedupKeepList,
-    "q135_vocab_coverage" -> OracleTwins.vocabCoverage,
-    "q136_ivfpq_topk" -> OracleTwins.ivfpqTopK,
-    "q137_hybrid_retrieval" -> OracleTwins.hybridRetrieval,
-    "q138_lm_score" -> OracleTwins.lmScore,
-    "q139_term_index_probe" -> OracleTwins.retrievalSql(engine.TermIndex.TI_TERMS),
-    "q140_lsh_recall" -> OracleTwins.lshRecall,
-    "q141_temperature_sample" -> OracleTwins.temperatureSample,
-    "q142_cluster_split" -> OracleTwins.clusterAwareSplit,
-    "q143_training_shards" -> OracleTwins.trainingShards,
-    "q144_embedding_drift" -> OracleTwins.embeddingDrift,
-    "q145_ngram_decontamination" -> OracleTwins.ngramDecontamination,
-    "q146_containment_dedup" -> OracleTwins.containmentDedup,
-    "q147_curation_pipeline" -> OracleTwins.curationPipeline,
-    "q148_cell_coverage_sample" -> OracleTwins.cellCoverageSample,
-    "q149_ivfpq_index_probe" -> OracleTwins.ivfpqIndexProbe,
-    "q150_source_pair_dups" -> OracleTwins.sourcePairDups,
-    "q151_token_budget_mixture" -> OracleTwins.tokenBudgetMixture,
-    "q152_phrase_search" -> OracleTwins.phraseSearch,
-    // the lifecycle-served consumers must equal the full recomputes
-    "q153_lifecycle_keep_list" -> OracleTwins.dedupKeepList,
-    "q154_lifecycle_cluster_split" -> OracleTwins.clusterAwareSplit,
-    "q155_containment_increment" -> OracleTwins.containmentIncrementProbe,
-    "q156_lifecycle_curation" -> OracleTwins.curationPipeline,
-    "q157_lifecycle_dup_clusters" -> OracleTwins.dupClusters,
-    "q158_forget_clusters" -> OracleTwins.forgetClusters,
-    "q159_term_forget_probe" -> OracleTwins.retrievalSql(
-      engine.TermIndex.TI_TERMS,
-      docWhere = s"doc_id % ${engine.Dedup.FORGET_MOD} <> 0"),
-    "q160_soft_dedup_weights" -> OracleTwins.softDedupWeights,
-    "q161_lifecycle_soft_weights" -> OracleTwins.softDedupWeights,
-    "q162_curation_funnel" -> OracleTwins.curationFunnel,
-    "q163_quality_canonicals" -> OracleTwins.qualityCanonicals,
-    "q164_quality_keep_list" -> OracleTwins.qualityKeepList,
-    "q165_weighted_mixture" -> OracleTwins.weightedTokenMixture,
-    "q166_lifecycle_semdedup" -> OracleTwins.lifecycleSemanticDedup,
-    "q167_source_token_cap" -> OracleTwins.sourceTokenCap,
-    "q168_stratified_eval" -> OracleTwins.stratifiedEvalSample,
-    "q169_length_percentiles" -> OracleTwins.lengthPercentiles,
-    "q170_winnow_neardup" -> OracleTwins.winnowNearDup,
-    "q171_bpe_merges" -> OracleTwins.bpeMerges,
-    "q172_bpe_fertility" -> OracleTwins.bpeFertility,
-    "q173_winnow_increment" -> OracleTwins.winnowIncrementProbe,
-    "q174_weighted_sample" -> OracleTwins.weightedSample,
-    "q175_random_projection_audit" -> OracleTwins.randomProjectionAudit,
-    "q176_source_overlap" -> OracleTwins.sourceOverlap,
-    "q177_dsir_weights" -> OracleTwins.dsirWeights,
-    "q178_image_decode" -> OracleTwins.imageDecodeStats,
-    "q179_image_resize" -> OracleTwins.imageResizeStats,
-    "q180_stream_curated" -> OracleTwins.streamCurated,
-    "q181_availability_json" -> OracleTwins.availabilityJson,
-    "q182_hash_index_probe" -> OracleTwins.hashIndexProbe,
-    "q183_audio_decode" -> OracleTwins.audioDecodeStats,
-    "q184_audio_resample" -> OracleTwins.audioResampleStats,
-    "q185_video_frames" -> OracleTwins.videoFrameStats,
-    "q186_image_dhash" -> OracleTwins.imageDHash,
-    "q187_image_pdup_groups" -> OracleTwins.imagePdupGroups,
-    "q188_image_pdup_pairs" -> OracleTwins.imagePdupPairs,
-    "q189_url_canonical" -> OracleTwins.urlCanonicalDedup,
-    "q190_audio_frames" -> OracleTwins.audioFrameStats,
-    "q191_domain_gate" -> OracleTwins.domainGate,
-    "q192_quality_classifier" -> OracleTwins.qualityClassifier,
-    "q193_line_dedup" -> OracleTwins.lineDedup,
-    "q194_audio_pdup_pairs" -> OracleTwins.audioPdupPairs,
-    "q195_kmv_distinct" -> OracleTwins.kmvDistinctShingles,
-    "q196_video_pdup_pairs" -> OracleTwins.videoPdupPairs,
-    "q197_stream_neardup" -> OracleTwins.streamNearDup,
-    "q198_kmv_lifecycle" -> OracleTwins.kmvLifecycle,
-    "q199_hard_negatives" -> OracleTwins.hardNegatives,
-    "q200_stream_hourly" -> OracleTwins.streamHourly,
-    "q201_stream_sessions" -> OracleTwins.streamSessions,
-    "q202_stream_asof" -> OracleTwins.streamAsOf,
-    "q203_bmp_decode" -> OracleTwins.bmpDecodeStats,
-    "q204_mixed_decode" -> OracleTwins.mixedDecodeStats,
-    "q205_stream_session_windows" -> OracleTwins.streamSessionWindows,
-    "q206_kmv_source_overlap" -> OracleTwins.kmvSourceOverlap,
-    "q207_kcore" -> OracleTwins.kCore,
-    "q208_stream_interval_join" -> OracleTwins.streamIntervalJoin,
-    "q209_stream_asof_sink" -> OracleTwins.streamAsOfSink,
-    "q210_stream_drift" -> OracleTwins.streamDrift,
-    "q211_stream_term_index" ->
-      OracleTwins.retrievalSql(graft.streaming.TermIndexStream.ST_TERMS),
-    // same oracle as q129 on purpose (the q41/q112 device): streamed
-    // ingest + streamed serving must be indistinguishable from the
-    // batch index lifecycle, row for row
-    "q212_stream_vec_index" -> OracleTwins.ivfIndexProbe,
-    "q213_sorted_neighbourhood" -> OracleTwins.sortedNeighbourhood,
-    "q214_stream_drift_cells" -> OracleTwins.streamDriftCells,
-    "q215_stream_dedup" -> OracleTwins.streamDedup,
-    "q216_stream_outer_join" -> OracleTwins.streamOuterJoin,
-    "q217_stream_full_outer_join" -> OracleTwins.streamFullOuterJoin,
-    "q218_png_decode" -> OracleTwins.pngDecodeStats,
-    "q219_quantile_sketch" -> OracleTwins.quantileSketch,
-    "q220_v2_active_categories" -> OracleTwins.v2ActiveCategories,
-    "q221_v2_top_providers" -> OracleTwins.v2TopProviders,
-    "q222_v2_disputed_providers" -> OracleTwins.v2DisputedProviders,
-    "q223_v2_demand_by_area" -> OracleTwins.v2DemandByArea,
-    "q224_v2_avg_rating" -> OracleTwins.v2AvgRating,
-    "q225_v2_monthly_revenue" -> OracleTwins.v2MonthlyRevenue,
-    "q226_v2_ai_usage" -> OracleTwins.v2AiUsage,
-    "q227_v2_top_rated" -> OracleTwins.v2TopRated,
-    "q228_jpeg_decode" -> OracleTwins.jpegDecodeStats,
-    "q229_jpeg_progressive" -> OracleTwins.jpegProgressiveStats,
-    "q230_warc_ingest" -> OracleTwins.warcIngest,
-    "q231_crawl_host_stats" -> OracleTwins.crawlHostStats,
-    "q232_gif_decode" -> OracleTwins.gifDecodeStats,
-    "q233_charset_pages" -> OracleTwins.charsetPages,
-    "q234_robots_gate" -> OracleTwins.robotsGate,
-    "q235_crawl_curation" -> OracleTwins.crawlCuration,
-    "q236_pdf_text" -> OracleTwins.pdfTextIngest,
-    "q237_main_content" -> OracleTwins.mainContentExtract,
-    "q238_cdx_probe" -> OracleTwins.cdxProbe,
-    // q239 shares q234's oracle STRING (the q41/q112 device): one
-    // decision algebra, two execution strategies — broadcast map-side
-    // vs host-keyed sort-merge join — provably interchangeable.
-    "q239_robots_gate_joined" -> OracleTwins.robotsGate,
-    "q240_sitemap_discover" -> OracleTwins.sitemapDiscover,
-    "q241_crawl_frontier" -> OracleTwins.crawlFrontier,
-    "q242_tar_shard_samples" -> OracleTwins.tarShardSamples,
-    "q243_zip_probe" -> OracleTwins.zipArchiveProbe,
-    "q244_wet_roundtrip" -> OracleTwins.wetRoundTrip,
-    "q245_frontier_schedule" -> OracleTwins.frontierSchedule,
-    "q246_recrawl_due" -> OracleTwins.recrawlDue,
-    // q247 shares q240's oracle STRING; q248 shares q242's (the
-    // q41/q112 device: one semantics, two execution paths, one oracle)
-    "q247_sitemap_via_robots" -> OracleTwins.sitemapDiscover,
-    "q248_tar_reshard" -> OracleTwins.tarShardSamples,
-    "q249_avro_roundtrip" -> OracleTwins.avroRoundTrip,
-    // q250 shares q240's oracle STRING: the write→parse round trip
-    // must be invisible to the discovered entries (the q244 device)
-    "q250_sitemap_rewrite" -> OracleTwins.sitemapDiscover,
-    "q251_pdf_xref_stream" -> OracleTwins.pdfXrefStreamIngest,
-    "q252_pdf_forms" -> OracleTwins.pdfFormTextIngest,
-    // q253's twin computes the PLAIN per-host window — the two-path
-    // decomposition must be exactly rank-equal to it
-    "q253_frontier_skew" -> OracleTwins.frontierSkewedWaves,
-    "q254_pdf_cid_text" -> OracleTwins.pdfCidTextIngest,
-    "q255_pdf_incremental" -> OracleTwins.pdfIncrementalIngest,
-    "q256_unicode_normalize" -> OracleTwins.unicodeNormalize,
-    "q257_bom_charset" -> OracleTwins.bomCharsetPages,
-    "q258_chunked_http" -> OracleTwins.chunkedPages,
-    "q20_embedding_topk"   -> OracleTwins.embeddingTopK,
-    "q21_text_stats"       -> OracleTwins.textStats,
-    "q22_simhash_neardup"  -> OracleTwins.simhashNearDup,
-    "q23_doc_fingerprint"  -> OracleTwins.docFingerprint,
-    "q24_lang_quality"     -> OracleTwins.langQuality,
-    "q25_lsh_buckets"      -> OracleTwins.lshBuckets,
-    "q26_cosine_neardup"   -> OracleTwins.cosineNearDup,
+    // ---- LLM-data-pipeline operators (north star; beyond-reference) ----
+    Query("q18_exact_dedup", Dedup.exactDedup, OracleTwins.exactDedup),
+    Query("q19_minhash_neardup", Dedup.minhashNearDup, OracleTwins.minhashNearDup),
+    Query("q20_embedding_topk", Sim.embeddingTopK, OracleTwins.embeddingTopK),
+    Query("q21_text_stats", TextOps.textStats, OracleTwins.textStats),
+    Query("q22_simhash_neardup", Dedup.simhashNearDup, OracleTwins.simhashNearDup),
+    Query("q23_doc_fingerprint", TextOps.docFingerprint, OracleTwins.docFingerprint),
+    Query("q24_lang_quality", TextOps.langQuality, OracleTwins.langQuality),
+    Query("q25_lsh_buckets", Sim.lshBuckets, OracleTwins.lshBuckets),
+    Query("q26_cosine_neardup", Sim.cosineNearDup, OracleTwins.cosineNearDup),
 
-    "q27_dim_part" ->
+    // ---- remaining gold dims + 4-way chain (J3/J4/J6) ----
+    Query("q27_dim_part", Gold.dimPart,
       """SELECT p.p_partkey AS part_id, p.p_name AS part_name,
         | p.p_type AS part_type, p.p_brand AS brand, p.p_size AS size_units,
         | p.p_retailprice AS retail_price,
         | r.r_regionkey AS category_id, r.r_name AS category_name
         |FROM part p LEFT JOIN region r ON p.p_type = r.r_name
-        |ORDER BY part_id""".stripMargin,
+        |ORDER BY part_id""".stripMargin),
 
-    "q28_dim_review" ->
+    Query("q28_dim_review", Gold.dimReview,
       """SELECT d.doc_id AS review_id, d.lang, d.source,
         | d.n_chars AS comment_chars,
         | CASE e.label % 3 WHEN 0 THEN 'negative' WHEN 1 THEN 'neutral'
@@ -898,9 +233,9 @@ object SparkEntry {
         | e.label::DOUBLE / 10.0 AS sentiment_score,
         | e.label = 9 AS is_suspicious
         |FROM documents d LEFT JOIN embeddings e ON d.doc_id = e.vec_id
-        |ORDER BY review_id""".stripMargin,
+        |ORDER BY review_id""".stripMargin),
 
-    "q29_dim_dispute" ->
+    Query("q29_dim_dispute", Gold.dimDispute,
       """SELECT e.event_id AS dispute_id, e.user_id,
         | c.c_name AS customer_name, c.c_mktsegment AS segment,
         | e.value AS amount,
@@ -908,9 +243,9 @@ object SparkEntry {
         | strftime(e.ts, '%Y-%m-%d %H:%M:%S') AS created_at
         |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
         |WHERE e.event_type = 'error' AND e.event_id IS NOT NULL
-        |ORDER BY dispute_id""".stripMargin,
+        |ORDER BY dispute_id""".stripMargin),
 
-    "q30_orders_4way" ->
+    Query("q30_orders_4way", Kpis.fourWayOrderStats,
       """SELECT n_name, o_orderstatus, count(*) AS n_items,
         | count(DISTINCT o_orderkey) AS n_orders,
         | CAST(SUM(CAST(round((l_extendedprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
@@ -919,30 +254,32 @@ object SparkEntry {
         | JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
         |GROUP BY n_name, o_orderstatus
-        |ORDER BY n_name, o_orderstatus""".stripMargin,
+        |ORDER BY n_name, o_orderstatus""".stripMargin),
 
+    // ---- S8 sources as oracle-checked queries ----
     // q31's Spark side routes through a CSV write+read round-trip; the
     // oracle aggregates the parquet original, so CSV loss breaks the match.
-    "q31_csv_roundtrip" ->
+    Query("q31_csv_roundtrip", SourceOps.csvRoundtrip,
       """SELECT lang, count(*) AS n_docs,
         | CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         | CAST(SUM(len(text)) AS BIGINT) AS total_text_len
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
 
-    "q32_json_props" ->
+    Query("q32_json_props", SourceOps.jsonProps,
       """WITH k AS (
         | SELECT event_type, CAST(json_extract(props, '$.k') AS BIGINT) AS k
         | FROM events)
         |SELECT event_type, count(*) AS n_events,
         | CAST(SUM(k) AS BIGINT) AS total_k,
         | CAST(SUM(k) AS BIGINT)::DOUBLE / count(*) AS avg_k
-        |FROM k GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM k GROUP BY event_type ORDER BY event_type""".stripMargin),
 
+    // ---- multimodal binary columns (north star) ----
     // The Spark side computes these from the opaque binary payload (hex
     // probes, binary md5); the oracle recomputes from the source text —
     // for ASCII payloads byte k == ascii(char k), so any corruption in the
     // binary path breaks the match.
-    "q33_media_features" ->
+    Query("q33_media_features", graft.multimodal.Multimodal.mediaFeatures,
       s"""SELECT doc_id AS media_id,
          | CASE WHEN doc_id % 3 = 0 THEN 'image'
          |      WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
@@ -955,161 +292,87 @@ object SparkEntry {
          |   list_transform(range(0, least(strlen(text), 32)),
          |     bi -> ascii(substr(text, bi::INTEGER + 1, 1))::BIGINT)),
          |   (ba, bx) -> (ba * 31 + bx) % ${graft.functions.TextFns.P}) AS checksum
-         |FROM documents ORDER BY media_id""".stripMargin,
+         |FROM documents ORDER BY media_id""".stripMargin),
 
-    "q34_enum_violations" -> OracleTwins.enumViolations,
+    // ---- V2-as-query, catalog/SQL surface, BPE-ish tokens, IVF ANN ----
+    Query("q34_enum_violations", Kpis.enumViolationCounts, OracleTwins.enumViolations),
 
-    "q35_sql_over_views" ->
+    Query("q35_sql_over_views", Kpis.sqlOverViews,
       """SELECT n_name, count(*) AS n_suppliers,
         | CAST(SUM(CAST(round(s_acctbal * 100) AS BIGINT)) AS DOUBLE) / CAST(100 AS DOUBLE)
         |   AS total_balance
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
 
-    "q36_regex_tokens"  -> OracleTwins.regexTokens,
-    "q37_ivf_cells"     -> OracleTwins.ivfCells,
-    "q38_ivf_topk"      -> OracleTwins.ivfTopK,
+    Query("q36_regex_tokens", TextOps.regexTokens, OracleTwins.regexTokens),
+    Query("q37_ivf_cells", Sim.ivfCells, OracleTwins.ivfCells),
+    Query("q38_ivf_topk", Sim.ivfTopK, OracleTwins.ivfTopK),
 
-    "q39_revenue_rollup" ->
+    // ---- OLAP extras, as-of join, typed Aggregator top-k ----
+    Query("q39_revenue_rollup", Kpis.revenueRollup,
       """SELECT year, month, count(*) AS n_orders,
         | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
         | CAST(GROUPING(year, month) AS BIGINT) AS grp
         |FROM (SELECT year(o_orderdate) AS year, month(o_orderdate) AS month,
         |        o_totalprice FROM orders)
         |GROUP BY ROLLUP(year, month)
-        |ORDER BY grp, year, month""".stripMargin,
+        |ORDER BY grp, year, month""".stripMargin),
 
-    "q40_status_pivot" ->
+    Query("q40_status_pivot", Kpis.statusPivot,
       """SELECT o_orderpriority,
         | CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
         | CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
         | CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    "q41_event_order_asof" -> asofOracle,
-    // same oracle on purpose: the native sorted-merge operator must be
-    // indistinguishable from the window form, row for row
-    "q112_asof_native" -> asofOracle,
-    // and the broadcast strategy from both
-    // broadcast as-of on its contract shape: bounded nation×epoch rate
-    // book, latest epoch ≤ ts per event, aggregated per nation (the
-    // window twin mirrors q41's rank form)
-    "q126_asof_broadcast" ->
-      s"""WITH e AS (
-        | SELECT event_id, user_id % ${Kpis.RATE_NATIONS} AS nk, ts
-        | FROM events),
-        |r AS (
-        | SELECT nk.v AS rnk, ep.v AS ep,
-        |  TIMESTAMP '${Kpis.RATE_START}' + INTERVAL (ep.v) DAY AS rate_from,
-        |  nk.v * 1000 + ep.v AS rate_id
-        | FROM (SELECT unnest(range(0, ${Kpis.RATE_NATIONS})) AS v) nk
-        | CROSS JOIN (SELECT unnest(range(0, ${Kpis.RATE_EPOCHS})) AS v) ep),
-        |j AS (
-        | SELECT e.event_id, e.nk, r.rate_id,
-        |  row_number() OVER (PARTITION BY e.event_id
-        |    ORDER BY r.rate_from DESC, r.rate_id DESC) AS rn
-        | FROM e LEFT JOIN r ON e.nk = r.rnk AND r.rate_from <= e.ts)
-        |SELECT nk, CAST(count(*) AS BIGINT) AS n_events,
-        | CAST(count(rate_id) AS BIGINT) AS n_matched,
-        | CAST(sum(rate_id) AS BIGINT) AS sum_rate_ids
-        |FROM j WHERE rn = 1 GROUP BY nk ORDER BY nk""".stripMargin,
+    Query("q41_event_order_asof", Kpis.eventOrderAsof, asofOracle),
+    Query("q42_topk_aggregator", Sim.embeddingTopKAgg, OracleTwins.embeddingTopK),
+    // ---- dup clustering + end-to-end curation + length profiling ----
+    Query("q43_dup_clusters", Dedup.dupClusters, OracleTwins.dupClusters),
+    Query("q44_curation", TextOps.curation, OracleTwins.curation),
+    Query("q45_token_histogram", TextOps.tokenHistogram, OracleTwins.tokenHistogram),
+    // ---- product-quantization compressed ANN (codes + ADC search) ----
+    Query("q46_pq_codes", Sim.pqCodes, OracleTwins.pqCodes),
+    Query("q47_pq_topk", Sim.pqTopK, OracleTwins.pqTopK),
+    // ---- corpus statistics: n-gram counts, tf-idf feature extraction ----
+    Query("q48_top_bigrams", TextOps.topBigrams, OracleTwins.topBigrams),
+    Query("q49_tfidf_top_terms", TextOps.tfidfTopTerms, OracleTwins.tfidfTopTerms),
+    // ---- SQL registry surface for the native hash expressions ----
+    Query("q50_sql_text_functions", TextOps.sqlTextFunctions, OracleTwins.sqlTextFunctions),
+    // ---- distributed k-means update (fixed-point deterministic) ----
+    Query("q51_kmeans_step", Sim.kmeansStep, OracleTwins.kmeansStep),
+    // ---- hybrid filtered vector search (metadata gate before scoring) ----
+    Query("q52_filtered_topk", Sim.filteredTopK, OracleTwins.filteredTopK),
+    // ---- reproducible hash-bucket sampling (eval-set carving) ----
+    Query("q53_hash_sample", TextOps.hashSample, OracleTwins.hashSample),
 
-    // multi-key as-of with a NATIVE STRING key (no code map): the
-    // reference epochs are synthesized identically (EXACTLY ONE per
-    // supplier × flag, so the backward winner is that row iff its epoch
-    // has started — no rank needed, which also sidesteps the synthetic
-    // lineitem's non-unique (orderkey, line#))
-    "q127_asof_multikey" ->
-      """WITH r AS (
-        | SELECT s_suppkey, fc,
-        |  CASE fc WHEN 1 THEN 'A' WHEN 2 THEN 'N' ELSE 'R' END AS rf,
-        |  TIMESTAMP '1995-01-01'
-        |   + INTERVAL ((s_suppkey * 7 + fc * 11) % 1000) DAY AS rate_from,
-        |  s_suppkey * 10 + fc AS rate_id
-        | FROM supplier CROSS JOIN (SELECT unnest([1, 2, 3]) AS fc)),
-        |l AS (
-        | SELECT l_suppkey, l_returnflag, l_shipdate FROM lineitem)
-        |SELECT l.l_suppkey, l.l_returnflag,
-        | CAST(count(*) AS BIGINT) AS n_items,
-        | CAST(count(r.rate_id) AS BIGINT) AS n_matched,
-        | CAST(sum(r.rate_id) AS BIGINT) AS sum_rate_ids
-        |FROM l LEFT JOIN r ON l.l_suppkey = r.s_suppkey
-        |  AND l.l_returnflag = r.rf
-        |  AND r.rate_from <= l.l_shipdate
-        |GROUP BY l.l_suppkey, l.l_returnflag
-        |ORDER BY l.l_suppkey, l.l_returnflag""".stripMargin,
-
-    // direction/tolerance knobs of the native operator, each against an
-    // independent window-form twin (expand within tolerance + rank)
-    "q123_asof_forward" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'click'),
-        |p AS (SELECT event_id AS p_event_id, user_id AS p_user_id,
-        |       ts AS p_ts FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        | SELECT c.event_id, c.user_id, p.p_event_id, p.p_ts,
-        |  row_number() OVER (PARTITION BY c.event_id
-        |    ORDER BY p.p_ts ASC NULLS LAST, p.p_event_id ASC NULLS LAST) AS rn
-        | FROM c LEFT JOIN p
-        |   ON c.user_id = p.p_user_id AND p.p_ts >= c.ts
-        |    AND epoch_us(p.p_ts) - epoch_us(c.ts) <= 86400000000)
-        |SELECT event_id, user_id, p_event_id AS purchase_id,
-        | strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts
-        |FROM j WHERE rn = 1 ORDER BY event_id""".stripMargin,
-
-    // nearest: rank by |Δt|, backward preferred on a distance tie; among
-    // equal times the backward side takes the max tie (event_id DESC,
-    // hence the negated CASE branch), the forward side the min
-    "q124_asof_nearest" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'click'),
-        |p AS (SELECT event_id AS p_event_id, user_id AS p_user_id,
-        |       ts AS p_ts FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        | SELECT c.event_id, c.user_id, p.p_event_id, p.p_ts,
-        |  row_number() OVER (PARTITION BY c.event_id
-        |    ORDER BY abs(epoch_us(p.p_ts) - epoch_us(c.ts)) ASC,
-        |     (p.p_ts > c.ts) ASC,
-        |     CASE WHEN p.p_ts > c.ts THEN p.p_event_id
-        |          ELSE -p.p_event_id END ASC) AS rn
-        | FROM c LEFT JOIN p
-        |   ON c.user_id = p.p_user_id
-        |    AND abs(epoch_us(p.p_ts) - epoch_us(c.ts)) <= 86400000000)
-        |SELECT event_id, user_id, p_event_id AS purchase_id,
-        | strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts
-        |FROM j WHERE rn = 1 ORDER BY event_id""".stripMargin,
-
-    // the UNSALTED join: hot-path + cold-path + union must be invisible
-    "q125_salted_skew_join" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
-        | CAST(SUM(CAST(round((l_extendedprice)*100) AS BIGINT)) AS DOUBLE)
-        |  / CAST(100 AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q42_topk_aggregator" -> OracleTwins.embeddingTopK,
-    "q43_dup_clusters"    -> OracleTwins.dupClusters,
-    "q44_curation"        -> OracleTwins.curation,
-    "q45_token_histogram" -> OracleTwins.tokenHistogram,
-    "q46_pq_codes"        -> OracleTwins.pqCodes,
-    "q47_pq_topk"         -> OracleTwins.pqTopK,
-    "q48_top_bigrams"     -> OracleTwins.topBigrams,
-    "q49_tfidf_top_terms" -> OracleTwins.tfidfTopTerms,
-    "q50_sql_text_functions" -> OracleTwins.sqlTextFunctions,
-    "q51_kmeans_step"     -> OracleTwins.kmeansStep,
-    "q52_filtered_topk"   -> OracleTwins.filteredTopK,
-    "q53_hash_sample"     -> OracleTwins.hashSample,
-
-    "q54_status_cube" ->
+    // ---- CUBE lattice (completes the grouping-sets family with q39) ----
+    Query("q54_status_cube", Kpis.statusCube,
       """SELECT o_orderstatus AS status, o_orderpriority AS priority,
         | count(*) AS n_orders,
         | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
         | CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS grp
         |FROM orders
         |GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY grp, status, priority""".stripMargin,
+        |ORDER BY grp, status, priority""".stripMargin),
 
-    "q56_set_ops" ->
+    // ---- sketch aggregates (HLL++, approx quantiles): estimates are
+    // engine-specific, so the query reduces them to error-bound verdict
+    // booleans the oracle CAN hash-check (exact columns + literal TRUE);
+    // DedupSimSpec inspects the raw estimates via approxStatsFull ----
+    // The sketch estimates have no DuckDB twin; the verdict columns do —
+    // exact values plus literal TRUE, so an out-of-bounds sketch flips a
+    // hashed cell (see Kpis.approxStats).
+    Query("q55_approx_stats", Kpis.approxStats,
+      """SELECT event_type, count(*) AS n_events,
+        | CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
+        | quantile_cont(CAST(round(value*100) AS BIGINT), 0.5)
+        |   AS exact_p50_cents,
+        | TRUE AS users_ok, TRUE AS p50_ok
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    // ---- §2.7 set operations + full §2.5 window family ----
+    Query("q56_set_ops", Kpis.setOps,
       """WITH a AS (SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995),
         |     b AS (SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996)
         |SELECT * FROM (
@@ -1132,9 +395,9 @@ object SparkEntry {
         | UNION ALL
         | SELECT 'union_all', CAST(count(*) AS BIGINT)
         |   FROM (SELECT o_custkey FROM a UNION ALL SELECT o_custkey FROM b)
-        |) ORDER BY op""".stripMargin,
+        |) ORDER BY op""".stripMargin),
 
-    "q57_window_family" ->
+    Query("q57_window_family", Kpis.windowFamily,
       """WITH m AS (
         | SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS order_month,
         |   CAST(year(o_orderdate) AS BIGINT) AS year,
@@ -1163,38 +426,94 @@ object SparkEntry {
         |  wh AS (PARTITION BY year ORDER BY order_month
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
         |  br AS (PARTITION BY year ORDER BY rev_cents DESC, order_month)
-        |ORDER BY order_month""".stripMargin,
+        |ORDER BY order_month""".stripMargin),
 
-    "q58_sequence_packing" -> OracleTwins.sequencePacking,
-    "q59_percentile_gate"  -> OracleTwins.percentileGate,
-    "q60_stratified_split" -> OracleTwins.stratifiedSplit,
+    // ---- LLM-pipeline: packing, adaptive quality gate, 3-way split ----
+    Query("q58_sequence_packing", TextOps.sequencePacking, OracleTwins.sequencePacking),
+    Query("q59_percentile_gate", TextOps.percentileGate, OracleTwins.percentileGate),
+    Query("q60_stratified_split", TextOps.stratifiedSplit, OracleTwins.stratifiedSplit),
 
-    "q67_decontamination" -> OracleTwins.decontamination,
-    "q68_source_mixture"  -> OracleTwins.sourceMixture,
+    // ---- skew-mitigation salted aggregation (oracle = unsalted SQL) ----
+    // The oracle is deliberately the UNSALTED aggregate — the salted
+    // two-phase Spark plan must be semantics-preserving.
+    Query("q61_salted_revenue", Kpis.saltedRevenueByNation,
+      """SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders,
+        | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
+        |FROM orders
+        | JOIN customer ON o_custkey = c_custkey
+        | JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin),
 
-    // The sketch estimates have no DuckDB twin; the verdict columns do —
-    // exact values plus literal TRUE, so an out-of-bounds sketch flips a
-    // hashed cell (see Kpis.approxStats).
-    "q55_approx_stats" ->
-      """SELECT event_type, count(*) AS n_events,
-        | CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-        | quantile_cont(CAST(round(value*100) AS BIGINT), 0.5)
-        |   AS exact_p50_cents,
-        | TRUE AS users_ok, TRUE AS p50_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+    // ---- explicit GROUPING SETS lattice, map functions, interval join ----
+    Query("q62_grouping_sets", Kpis.statusGroupingSets,
+      """SELECT o_orderstatus AS status, o_orderpriority AS priority,
+        | count(*) AS n_orders,
+        | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
+        | CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS grp
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderpriority))
+        |ORDER BY grp, status, priority""".stripMargin),
 
-    "q70_exact_percentiles" ->
-      """SELECT l_returnflag, count(*) AS n,
-        | quantile_cont(l_quantity, 0.5) AS median_qty,
-        | quantile_cont(l_quantity, 0.9) AS p90_qty,
-        | quantile_cont(CAST(round(l_extendedprice*100) AS BIGINT), 0.5)
-        |   AS median_price_cents
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+    Query("q63_map_props", SourceOps.mapProps,
+      """WITH k AS (
+        | SELECT event_type, len(json_keys(props))::BIGINT AS n_keys,
+        |  CAST(json_extract(props, '$.k') AS BIGINT) AS k,
+        |  json_extract(props, '$.missing') IS NOT NULL AS has_missing
+        | FROM events)
+        |SELECT event_type, count(*) AS n_events,
+        | CAST(SUM(n_keys) AS BIGINT) AS total_keys,
+        | CAST(SUM(k) AS BIGINT) AS total_k,
+        | CAST(SUM(CASE WHEN has_missing THEN 1 ELSE 0 END) AS BIGINT) AS n_has_missing
+        |FROM k GROUP BY event_type ORDER BY event_type""".stripMargin),
 
+    Query("q64_order_event_window", Kpis.orderEventWindow,
+      """WITH o AS (
+        | SELECT o_orderkey, o_custkey,
+        |  TIMESTAMP '2024-01-01' + (o_orderkey % 672) * INTERVAL 1 HOUR AS t0
+        | FROM orders),
+        |j AS (
+        | SELECT o.o_orderkey, e.user_id, e.event_type
+        | FROM o JOIN events e
+        |  ON e.user_id = o.o_custkey
+        |  AND e.ts >= o.t0
+        |  AND e.ts < o.t0 + INTERVAL 1 DAY)
+        |SELECT event_type, count(*) AS n_pairs,
+        | CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders,
+        | CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+        |FROM j GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    // ---- ORC round-trip (columnar interchange beyond parquet) ----
+    // Oracle aggregates the parquet original; the Spark side routes
+    // through an ORC write+read, so format loss breaks the match.
+    Query("q65_orc_roundtrip", SourceOps.orcRoundtrip,
+      """SELECT o_orderstatus, count(*) AS n_orders,
+        | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
+        | CAST(min(o_orderdate) AS DATE) AS first_date,
+        | CAST(max(o_orderdate) AS DATE) AS last_date
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+
+    // ---- latest-wins compaction (CDC/upsert merge shape) ----
+    Query("q66_latest_event", Kpis.latestEventPerUser,
+      """WITH r AS (
+        | SELECT user_id, event_id, event_type, ts, value,
+        |  row_number() OVER (PARTITION BY user_id
+        |    ORDER BY ts DESC, event_id DESC) AS rn
+        | FROM events)
+        |SELECT user_id, event_id, event_type,
+        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, value
+        |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin),
+
+    // ---- train/test decontamination (leakage audit; naive id split
+    // leaks where the content-hash split of q60 cannot) ----
+    Query("q67_decontamination", Dedup.decontamination, OracleTwins.decontamination),
+    // ---- source-mixture weighting (deterministic data mixing) ----
+    Query("q68_source_mixture", TextOps.sourceMixture, OracleTwins.sourceMixture),
+
+    // ---- exact-moment descriptive stats (deterministic covar/corr) ----
     // Same fixed derivation from the same five integer power sums — the
     // doubles are bit-identical because every input to the float math is
     // an exact integer.
-    "q69_stats_moments" ->
+    Query("q69_stats_moments", Kpis.statsMoments,
       """WITH m AS (
         | SELECT l_returnflag, count(*) AS n,
         |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sx,
@@ -1210,65 +529,45 @@ object SparkEntry {
         | ((sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE / n) / n) /
         |  (sqrt(sx2::DOUBLE / n - (sx::DOUBLE / n) * (sx::DOUBLE / n)) *
         |   sqrt(sy2::DOUBLE / n - (sy::DOUBLE / n) * (sy::DOUBLE / n))) AS corr
-        |FROM m ORDER BY l_returnflag""".stripMargin,
+        |FROM m ORDER BY l_returnflag""".stripMargin),
 
-    "q66_latest_event" ->
-      """WITH r AS (
-        | SELECT user_id, event_id, event_type, ts, value,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events)
-        |SELECT user_id, event_id, event_type,
-        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, value
-        |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin,
+    // ---- exact grouped percentiles (non-sketch twin of q55) ----
+    Query("q70_exact_percentiles", Kpis.exactPercentiles,
+      """SELECT l_returnflag, count(*) AS n,
+        | quantile_cont(l_quantity, 0.5) AS median_qty,
+        | quantile_cont(l_quantity, 0.9) AS p90_qty,
+        | quantile_cont(CAST(round(l_extendedprice*100) AS BIGINT), 0.5)
+        |   AS median_price_cents
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    // Oracle aggregates the parquet original; the Spark side routes
-    // through an ORC write+read, so format loss breaks the match.
-    "q65_orc_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
-        | CAST(min(o_orderdate) AS DATE) AS first_date,
-        | CAST(max(o_orderdate) AS DATE) AS last_date
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+    // ---- round 4: curation quality signals + retrieval index ----
+    Query("q71_repetition", TextOps.repetition, OracleTwins.repetition),
+    Query("q72_pii_scan", TextOps.piiScan, OracleTwins.piiScan),
+    Query("q73_doc_chunks", TextOps.docChunks, OracleTwins.docChunks),
 
-    "q62_grouping_sets" ->
-      """SELECT o_orderstatus AS status, o_orderpriority AS priority,
-        | count(*) AS n_orders,
-        | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
-        | CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS grp
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderpriority))
-        |ORDER BY grp, status, priority""".stripMargin,
+    Query("q74_schema_evolution", SourceOps.schemaEvolution,
+      """WITH v1 AS (
+        | SELECT o_orderkey AS order_id,
+        |  CAST(round(o_totalprice*100) AS BIGINT) AS price_cents
+        | FROM orders WHERE year(o_orderdate) <= 1994),
+        |v2 AS (
+        | SELECT o_orderkey AS order_id, o_orderstatus AS status,
+        |  o_orderpriority AS priority
+        | FROM orders WHERE year(o_orderdate) >= 1995),
+        |u AS (SELECT * FROM v1 UNION ALL BY NAME SELECT * FROM v2)
+        |SELECT coalesce(status, '<legacy>') AS status, count(*) AS n_rows,
+        | CAST(SUM(CASE WHEN price_cents IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_missing_price,
+        | CAST(SUM(coalesce(price_cents, 0)) AS DOUBLE)/CAST(100 AS DOUBLE)
+        |   AS revenue,
+        | CAST(count(DISTINCT priority) AS BIGINT) AS n_priorities
+        |FROM u GROUP BY 1 ORDER BY status""".stripMargin),
 
-    "q63_map_props" ->
-      """WITH k AS (
-        | SELECT event_type, len(json_keys(props))::BIGINT AS n_keys,
-        |  CAST(json_extract(props, '$.k') AS BIGINT) AS k,
-        |  json_extract(props, '$.missing') IS NOT NULL AS has_missing
-        | FROM events)
-        |SELECT event_type, count(*) AS n_events,
-        | CAST(SUM(n_keys) AS BIGINT) AS total_keys,
-        | CAST(SUM(k) AS BIGINT) AS total_k,
-        | CAST(SUM(CASE WHEN has_missing THEN 1 ELSE 0 END) AS BIGINT) AS n_has_missing
-        |FROM k GROUP BY event_type ORDER BY event_type""".stripMargin,
+    Query("q75_inverted_index", TextOps.invertedIndex, OracleTwins.invertedIndex),
+    Query("q76_semantic_dedup", Sim.semanticDedup, OracleTwins.semanticDedup),
 
-    "q64_order_event_window" ->
-      """WITH o AS (
-        | SELECT o_orderkey, o_custkey,
-        |  TIMESTAMP '2024-01-01' + (o_orderkey % 672) * INTERVAL 1 HOUR AS t0
-        | FROM orders),
-        |j AS (
-        | SELECT o.o_orderkey, e.user_id, e.event_type
-        | FROM o JOIN events e
-        |  ON e.user_id = o.o_custkey
-        |  AND e.ts >= o.t0
-        |  AND e.ts < o.t0 + INTERVAL 1 DAY)
-        |SELECT event_type, count(*) AS n_pairs,
-        | CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders,
-        | CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM j GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q77_reconciliation" ->
+    // ---- full-outer reconciliation + time-series densification ----
+    Query("q77_reconciliation", Kpis.reconciliation,
       """WITH o AS (
         | SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
         | FROM orders GROUP BY o_custkey),
@@ -1284,9 +583,9 @@ object SparkEntry {
         |SELECT side, count(*) AS n_keys,
         | CAST(SUM(coalesce(n_orders, 0)) AS BIGINT) AS total_orders,
         | CAST(SUM(coalesce(n_events, 0)) AS BIGINT) AS total_events
-        |FROM j GROUP BY side ORDER BY side""".stripMargin,
+        |FROM j GROUP BY side ORDER BY side""".stripMargin),
 
-    "q78_gap_fill" ->
+    Query("q78_gap_fill", Kpis.gapFill,
       """WITH rev AS (
         | SELECT n_name, CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
         |  CAST(count(*) AS BIGINT) AS n_orders,
@@ -1310,9 +609,10 @@ object SparkEntry {
         | rev.rc IS NULL AS is_gap
         |FROM spine s
         |LEFT JOIN rev ON s.n_name = rev.n_name AND s.month = rev.month
-        |ORDER BY s.n_name, s.month""".stripMargin,
+        |ORDER BY s.n_name, s.month""".stripMargin),
 
-    "q79_unpivot" ->
+    // ---- wide→long reshape + VariantType semi-structured path ----
+    Query("q79_unpivot", Kpis.nationMetricsLong,
       """WITH w AS (
         | SELECT n_name, CAST(count(*) AS DOUBLE) AS n_orders,
         |  CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
@@ -1322,9 +622,9 @@ object SparkEntry {
         | GROUP BY n_name)
         |SELECT n_name, metric, CAST(value AS DOUBLE) AS value
         |FROM w UNPIVOT (value FOR metric IN (n_orders, revenue))
-        |ORDER BY n_name, metric""".stripMargin,
+        |ORDER BY n_name, metric""".stripMargin),
 
-    "q80_variant_props" ->
+    Query("q80_variant_props", SourceOps.variantProps,
       """WITH v AS (
         | SELECT event_type,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k,
@@ -1335,84 +635,12 @@ object SparkEntry {
         | min(k) AS min_k, max(k) AS max_k,
         | CAST(SUM(CASE WHEN miss IS NULL THEN 1 ELSE 0 END) AS BIGINT)
         |   AS n_without_missing
-        |FROM v GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM v GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    // first-touch times compared at µs grain (epoch_us) — Spark timestamps
-    // are µs, parquet ns would flip a strict '>' inside one µs (q17 rule)
-    "q83_event_funnel" ->
-      """WITH ft AS (
-        | SELECT user_id,
-        |  min(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END) AS t1,
-        |  min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS t2,
-        |  min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS t3
-        | FROM events GROUP BY user_id),
-        |r AS (
-        | SELECT
-        |  CAST(SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS s1,
-        |  CAST(SUM(CASE WHEN t1 IS NOT NULL AND t2 > t1
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS s2,
-        |  CAST(SUM(CASE WHEN t1 IS NOT NULL AND t2 > t1 AND t3 > t2
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS s3
-        | FROM ft)
-        |SELECT stage, event_type, n_users FROM (
-        | SELECT 1::BIGINT AS stage, 'signup' AS event_type, s1 AS n_users FROM r
-        | UNION ALL
-        | SELECT 2::BIGINT, 'click', s2 FROM r
-        | UNION ALL
-        | SELECT 3::BIGINT, 'purchase', s3 FROM r)
-        |ORDER BY stage""".stripMargin,
+    // ---- lexical retrieval scoring + CDC merge-apply ----
+    Query("q81_retrieval_topk", TextOps.retrievalTopK, OracleTwins.retrievalTopK),
 
-    "q84_retention_cohorts" ->
-      """WITH e AS (
-        | SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS active_week
-        | FROM events),
-        |c AS (
-        | SELECT user_id, min(active_week) AS cohort_week
-        | FROM e GROUP BY user_id)
-        |SELECT cohort_week,
-        | CAST((active_week - cohort_week) // 7 AS BIGINT) AS weeks_since,
-        | CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
-        |FROM e JOIN c ON e.user_id = c.user_id
-        |GROUP BY cohort_week, active_week
-        |ORDER BY cohort_week, weeks_since""".stripMargin,
-
-    "q81_retrieval_topk"  -> OracleTwins.retrievalTopK,
-    "q85_int8_quant"      -> OracleTwins.int8Quant,
-    "q86_scd2_dim"        -> OracleTwins.scd2Dimension,
-    "q87_matryoshka_rerank" -> OracleTwins.matryoshkaRerank,
-    "q88_binary_hamming"  -> OracleTwins.binaryQuantHamming,
-    "q89_column_profile"  -> OracleTwins.columnProfile,
-    "q90_record_linkage"  -> OracleTwins.recordLinkage,
-    "q91_pagerank_step"   -> OracleTwins.pageRankStep,
-    "q94_kmeans_iterated" -> OracleTwins.kmeansIterated,
-    "q95_pagerank_iterated" -> OracleTwins.pageRankIterated,
-
-    // The oracle is deliberately the plain one-pass aggregate — the
-    // merged partial-state plan must be semantics-preserving (q61's rule).
-    "q92_incremental_agg" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-        | CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
-        | CAST(min(CAST(round(o_totalprice*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS min_price,
-        | CAST(max(CAST(round(o_totalprice*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS max_price
-        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin,
-
-    "q93_quantile_bins" ->
-      s"""WITH o AS (
-        | SELECT o_orderpriority, o_orderkey,
-        |  CAST(round(o_totalprice*100) AS BIGINT) AS pc
-        | FROM orders),
-        |b AS (
-        | SELECT o_orderpriority, pc,
-        |  CAST(ntile(${Kpis.N_BINS}) OVER (
-        |    PARTITION BY o_orderpriority ORDER BY pc, o_orderkey)
-        |   AS BIGINT) AS bin
-        | FROM o)
-        |SELECT o_orderpriority, bin, count(*) AS n_orders,
-        | CAST(min(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS lo,
-        | CAST(max(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS hi
-        |FROM b GROUP BY 1, 2 ORDER BY o_orderpriority, bin""".stripMargin,
-
-    "q82_cdc_merge" ->
+    Query("q82_cdc_merge", Kpis.cdcMergeApply,
       s"""WITH o AS (
         | SELECT o_orderkey AS k, o_orderstatus AS status,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS pc, o_orderdate
@@ -1442,55 +670,113 @@ object SparkEntry {
         | WHERE coalesce(c.op, '') <> 'D')
         |SELECT status, provenance, count(*) AS n_rows,
         | CAST(SUM(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
-        |FROM m GROUP BY 1, 2 ORDER BY status, provenance""".stripMargin,
+        |FROM m GROUP BY 1, 2 ORDER BY status, provenance""".stripMargin),
 
-    "q71_repetition"      -> OracleTwins.repetition,
-    "q72_pii_scan"        -> OracleTwins.piiScan,
-    "q73_doc_chunks"      -> OracleTwins.docChunks,
-    "q75_inverted_index"  -> OracleTwins.invertedIndex,
-    "q76_semantic_dedup"  -> OracleTwins.semanticDedup,
+    // ---- product analytics: ordered funnel + retention cohorts ----
+    // first-touch times compared at µs grain (epoch_us) — Spark timestamps
+    // are µs, parquet ns would flip a strict '>' inside one µs (q17 rule)
+    Query("q83_event_funnel", Kpis.eventFunnel,
+      """WITH ft AS (
+        | SELECT user_id,
+        |  min(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END) AS t1,
+        |  min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS t2,
+        |  min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS t3
+        | FROM events GROUP BY user_id),
+        |r AS (
+        | SELECT
+        |  CAST(SUM(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS s1,
+        |  CAST(SUM(CASE WHEN t1 IS NOT NULL AND t2 > t1
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS s2,
+        |  CAST(SUM(CASE WHEN t1 IS NOT NULL AND t2 > t1 AND t3 > t2
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS s3
+        | FROM ft)
+        |SELECT stage, event_type, n_users FROM (
+        | SELECT 1::BIGINT AS stage, 'signup' AS event_type, s1 AS n_users FROM r
+        | UNION ALL
+        | SELECT 2::BIGINT, 'click', s2 FROM r
+        | UNION ALL
+        | SELECT 3::BIGINT, 'purchase', s3 FROM r)
+        |ORDER BY stage""".stripMargin),
 
-    "q74_schema_evolution" ->
-      """WITH v1 AS (
-        | SELECT o_orderkey AS order_id,
-        |  CAST(round(o_totalprice*100) AS BIGINT) AS price_cents
-        | FROM orders WHERE year(o_orderdate) <= 1994),
-        |v2 AS (
-        | SELECT o_orderkey AS order_id, o_orderstatus AS status,
-        |  o_orderpriority AS priority
-        | FROM orders WHERE year(o_orderdate) >= 1995),
-        |u AS (SELECT * FROM v1 UNION ALL BY NAME SELECT * FROM v2)
-        |SELECT coalesce(status, '<legacy>') AS status, count(*) AS n_rows,
-        | CAST(SUM(CASE WHEN price_cents IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_missing_price,
-        | CAST(SUM(coalesce(price_cents, 0)) AS DOUBLE)/CAST(100 AS DOUBLE)
-        |   AS revenue,
-        | CAST(count(DISTINCT priority) AS BIGINT) AS n_priorities
-        |FROM u GROUP BY 1 ORDER BY status""".stripMargin,
+    Query("q84_retention_cohorts", Kpis.retentionCohorts,
+      """WITH e AS (
+        | SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS active_week
+        | FROM events),
+        |c AS (
+        | SELECT user_id, min(active_week) AS cohort_week
+        | FROM e GROUP BY user_id)
+        |SELECT cohort_week,
+        | CAST((active_week - cohort_week) // 7 AS BIGINT) AS weeks_since,
+        | CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
+        |FROM e JOIN c ON e.user_id = c.user_id
+        |GROUP BY cohort_week, active_week
+        |ORDER BY cohort_week, weeks_since""".stripMargin),
 
-    // The oracle is deliberately the UNSALTED aggregate — the salted
-    // two-phase Spark plan must be semantics-preserving.
-    "q61_salted_revenue" ->
-      """SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders,
-        | CAST(SUM(CAST(round((o_totalprice)*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
-        |FROM orders
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
+    // ---- int8 embedding quantization (vector-store compression) ----
+    Query("q85_int8_quant", Sim.int8Quant, OracleTwins.int8Quant),
+    // ---- SCD Type 2 dimension build (warehouse versioned history) ----
+    Query("q86_scd2_dim", Kpis.scd2Dimension, OracleTwins.scd2Dimension),
+    // ---- matryoshka truncated-prefix ANN with full-dim rerank ----
+    Query("q87_matryoshka_rerank", Sim.matryoshkaRerank, OracleTwins.matryoshkaRerank),
+    // ---- binary sign quantization + Hamming top-k ----
+    Query("q88_binary_hamming", Sim.binaryQuantHamming, OracleTwins.binaryQuantHamming),
+    // ---- one-pass column profiler (catalog/data-quality stats) ----
+    Query("q89_column_profile", Kpis.columnProfile, OracleTwins.columnProfile),
+    // ---- blocked record linkage (entity resolution, edit distance) ----
+    Query("q90_record_linkage", Dedup.recordLinkage, OracleTwins.recordLinkage),
+    // ---- weighted PageRank over the nation trade graph ----
+    Query("q91_pagerank_step", Graph.pageRankStep, OracleTwins.pageRankStep),
 
+    // ---- mergeable-state incremental aggregate maintenance ----
+    // The oracle is deliberately the plain one-pass aggregate — the
+    // merged partial-state plan must be semantics-preserving (q61's rule).
+    Query("q92_incremental_agg", Kpis.incrementalAgg,
+      """SELECT o_orderstatus, count(*) AS n_orders,
+        | CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue,
+        | CAST(min(CAST(round(o_totalprice*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS min_price,
+        | CAST(max(CAST(round(o_totalprice*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS max_price
+        |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin),
+
+    // ---- per-group equal-frequency binning (quantile bucketizer),
+    // grouped-ntile window REFERENCE form — the semantic spec. Its scale
+    // path (run-level rank arithmetic, no per-group data sort) is q122;
+    // IndexAnalyticsSpec pins the two bit-for-bit equal ----
+    Query("q93_quantile_bins", Kpis.quantileBins,
+      s"""WITH o AS (
+        | SELECT o_orderpriority, o_orderkey,
+        |  CAST(round(o_totalprice*100) AS BIGINT) AS pc
+        | FROM orders),
+        |b AS (
+        | SELECT o_orderpriority, pc,
+        |  CAST(ntile(${Kpis.N_BINS}) OVER (
+        |    PARTITION BY o_orderpriority ORDER BY pc, o_orderkey)
+        |   AS BIGINT) AS bin
+        | FROM o)
+        |SELECT o_orderpriority, bin, count(*) AS n_orders,
+        | CAST(min(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS lo,
+        | CAST(max(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS hi
+        |FROM b GROUP BY 1, 2 ORDER BY o_orderpriority, bin""".stripMargin),
+
+    // ---- k-means trained to KMEANS_ITERS Lloyd rounds (loop discipline:
+    // per-round localCheckpoint, centroids fed back) ----
+    Query("q94_kmeans_iterated", Sim.kmeansIterated, OracleTwins.kmeansIterated),
+    // ---- PR_ITERS-round PageRank, all-BIGINT rank recurrence ----
+    Query("q95_pagerank_iterated", Graph.pageRankIterated, OracleTwins.pageRankIterated),
+
+    // ---- round 5: scan-pruning index structures ----
     // The oracle is the plain join with no bitmap — the bloom pre-filter
     // must be semantics-preserving (false positives die in the exact
     // semi join; bucket-miss pruning only drops definite non-matches).
-    "q96_bloom_prejoin" ->
+    Query("q96_bloom_prejoin", Indexing.bloomPrejoin,
       """SELECT l_returnflag, count(*) AS n_items,
         | CAST(SUM(CAST(round(l_extendedprice*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q97_triangle_count" -> OracleTwins.triangleCount,
+    Query("q97_triangle_count", Graph.triangleCount, OracleTwins.triangleCount),
 
-    "q98_minmax_skipping" ->
+    Query("q98_minmax_skipping", Indexing.minmaxSkipping,
       s"""WITH bd AS (
         | SELECT l_shipdate, CAST(count(*) AS BIGINT) AS n_d
         | FROM lineitem GROUP BY 1),
@@ -1523,12 +809,13 @@ object SparkEntry {
         |   AS BIGINT) FROM sc) AS n_matching,
         | (SELECT CAST(coalesce(SUM(CASE WHEN l_shipdate >= TIMESTAMP '${Indexing.SKIP_LO}'
         |    AND l_shipdate < TIMESTAMP '${Indexing.SKIP_HI}' THEN pc ELSE 0 END), 0)
-        |   AS DOUBLE)/CAST(100 AS DOUBLE) FROM sc) AS revenue""".stripMargin,
+        |   AS DOUBLE)/CAST(100 AS DOUBLE) FROM sc) AS revenue""".stripMargin),
 
-    "q99_zorder_locality" -> OracleTwins.zorderLocality,
+    Query("q99_zorder_locality", Indexing.zorderLocality, OracleTwins.zorderLocality),
 
+    // ---- round 5: exact statistical analytics ----
     // HUGEINT ≡ Spark decimal(38,0): the quadratic forms need ~1e26.
-    "q100_outlier_zscore" ->
+    Query("q100_outlier_zscore", Analytics.outlierZscore,
       """WITH d AS (
         | SELECT l_returnflag,
         |  CAST(round(l_extendedprice*100) AS BIGINT) AS pc
@@ -1549,9 +836,9 @@ object SparkEntry {
         |SELECT s.l_returnflag, s.n AS n_rows,
         | coalesce(o.n_outliers, 0) AS n_outliers, o.outlier_lo, o.outlier_hi
         |FROM s LEFT JOIN o USING (l_returnflag)
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
 
-    "q101_numeric_histogram" ->
+    Query("q101_numeric_histogram", Analytics.numericHistogram,
       s"""WITH long4 AS (
         | SELECT 'quantity' AS metric, CAST(l_quantity AS BIGINT) AS v
         | FROM lineitem
@@ -1568,11 +855,11 @@ object SparkEntry {
         |SELECT l.metric, (v - mn) // width AS bucket,
         | count(*) AS n, min(v) AS lo, max(v) AS hi
         |FROM long4 l JOIN r ON l.metric = r.metric
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // The oracle is the quadratic NOT-EXISTS dominance definition — the
     // O(n log n) sweep must reproduce it exactly.
-    "q102_skyline" ->
+    Query("q102_skyline", Analytics.skylineParts,
       """WITH p AS (
         | SELECT p_partkey, CAST(round(p_retailprice*100) AS BIGINT) AS pc,
         |  CAST(p_size AS BIGINT) AS sz
@@ -1585,9 +872,9 @@ object SparkEntry {
         | SELECT 1 FROM p d
         | WHERE d.pc <= c.pc AND d.sz >= c.sz
         |  AND (d.pc < c.pc OR d.sz > c.sz))
-        |ORDER BY price, p_size DESC, p_partkey""".stripMargin,
+        |ORDER BY price, p_size DESC, p_partkey""".stripMargin),
 
-    "q103_attribution" ->
+    Query("q103_attribution", Analytics.attribution,
       s"""WITH e AS (
         | SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
         |  CAST(round(value*100) AS BIGINT) AS vc
@@ -1606,11 +893,12 @@ object SparkEntry {
         |      ELSE -1 END AS lag_days,
         | count(*) AS n_purchases,
         | CAST(SUM(vc) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
-        |FROM p GROUP BY 1, 2 ORDER BY attributed, lag_days""".stripMargin,
+        |FROM p GROUP BY 1, 2 ORDER BY attributed, lag_days""".stripMargin),
 
-    "q104_label_propagation" -> OracleTwins.labelPropagation,
+    // ---- round 5: graph communities, drift monitoring, market basket ----
+    Query("q104_label_propagation", Graph.labelPropagation, OracleTwins.labelPropagation),
 
-    "q105_distribution_drift" ->
+    Query("q105_distribution_drift", Analytics.distributionDrift,
       s"""WITH o AS (
         | SELECT year(o_orderdate) <= ${Analytics.DRIFT_SPLIT_YEAR} AS base,
         |  least(CAST(round(o_totalprice*100) AS BIGINT)
@@ -1629,9 +917,9 @@ object SparkEntry {
         |SELECT bucket, n_base, n_current,
         | CAST(abs(CAST(n_base AS HUGEINT) * tb - CAST(n_current AS HUGEINT) * ta)
         |  * 1000000 // (CAST(ta AS HUGEINT) * tb) AS BIGINT) AS drift_ppm
-        |FROM c CROSS JOIN t ORDER BY bucket""".stripMargin,
+        |FROM c CROSS JOIN t ORDER BY bucket""".stripMargin),
 
-    "q106_copurchase" ->
+    Query("q106_copurchase", Analytics.coPurchase,
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |pairs AS (
         | SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS n_co
@@ -1644,11 +932,12 @@ object SparkEntry {
         |FROM pairs
         | JOIN po a ON p1 = a.l_partkey
         | JOIN po b ON p2 = b.l_partkey
-        |ORDER BY n_co DESC, p1, p2 LIMIT ${Analytics.COP_TOP}""".stripMargin,
+        |ORDER BY n_co DESC, p1, p2 LIMIT ${Analytics.COP_TOP}""".stripMargin),
 
+    // ---- round 5: robust stats + scale-correct global binning ----
     // 2·median and 2·MAD of integers are integers (interpolation only at
     // .5), so the robust rule is pure BIGINT in both engines.
-    "q107_mad_outliers" ->
+    Query("q107_mad_outliers", Analytics.madOutliers,
       s"""WITH d AS (
         | SELECT l_returnflag,
         |  CAST(round(l_extendedprice*100) AS BIGINT) AS pc
@@ -1671,11 +960,11 @@ object SparkEntry {
         | CAST(max(med2) AS DOUBLE)/2/CAST(100 AS DOUBLE) AS median,
         | CAST(max(mad4) AS DOUBLE)/4/CAST(100 AS DOUBLE) AS mad
         |FROM dev JOIN s USING (l_returnflag)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Eighth-quantile positions are dyadic, so the interpolated edges are
     // exactly-representable doubles in both engines; 8·edge is bit-exact.
-    "q108_equidepth_global" ->
+    Query("q108_equidepth_global", Analytics.equidepthGlobal,
       s"""WITH d AS (
         | SELECT CAST(round(o_totalprice*100) AS BIGINT) AS pc FROM orders),
         |e AS (
@@ -1692,9 +981,10 @@ object SparkEntry {
         |SELECT bin, count(*) AS n_orders,
         | CAST(min(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS lo,
         | CAST(max(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS hi
-        |FROM b GROUP BY 1 ORDER BY bin""".stripMargin,
+        |FROM b GROUP BY 1 ORDER BY bin""".stripMargin),
 
-    "q109_event_paths" ->
+    // ---- round 5: behavioral analytics (paths, multi-touch, seasonal) ----
+    Query("q109_event_paths", Analytics.eventPaths,
       s"""WITH r AS (
         | SELECT user_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
@@ -1704,9 +994,9 @@ object SparkEntry {
         | SELECT user_id, string_agg(event_type, '>' ORDER BY rk) AS path
         | FROM r WHERE rk <= ${Analytics.PATH_LEN} GROUP BY 1)
         |SELECT path, count(*) AS n_users FROM p GROUP BY 1
-        |ORDER BY n_users DESC, path LIMIT ${Analytics.PATH_TOP}""".stripMargin,
+        |ORDER BY n_users DESC, path LIMIT ${Analytics.PATH_TOP}""".stripMargin),
 
-    "q110_multitouch" ->
+    Query("q110_multitouch", Analytics.multiTouchAttribution,
       s"""WITH e AS (
         | SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
         |  CAST(hour(ts) AS BIGINT) AS hr,
@@ -1742,9 +1032,9 @@ object SparkEntry {
         |SELECT hr AS click_hour, count(*) AS n_credits,
         | CAST(SUM(credit) AS DOUBLE)/CAST(100 AS DOUBLE) AS revenue
         |FROM (SELECT * FROM cr UNION ALL SELECT * FROM dr) u
-        |GROUP BY 1 ORDER BY click_hour""".stripMargin,
+        |GROUP BY 1 ORDER BY click_hour""".stripMargin),
 
-    "q111_seasonal_residuals" ->
+    Query("q111_seasonal_residuals", Analytics.seasonalResiduals,
       s"""WITH p AS (
         | SELECT event_id, user_id, CAST(isodow(ts) AS BIGINT) AS dow,
         |  CAST(round(value*100) AS BIGINT) AS vc
@@ -1758,11 +1048,18 @@ object SparkEntry {
         | n AS n_dow, n*vc - sx AS resid_scaled
         |FROM p JOIN s USING (dow)
         |ORDER BY abs(n*vc - sx) DESC, event_id
-        |LIMIT ${Analytics.SEASONAL_TOP}""".stripMargin,
+        |LIMIT ${Analytics.SEASONAL_TOP}""".stripMargin),
 
+    // ---- round 5: native sorted-merge as-of join (custom LogicalPlan +
+    // SparkStrategy + SparkPlan; q41's semantics, O(n+m) execution) ----
+    // same oracle on purpose: the native sorted-merge operator must be
+    // indistinguishable from the window form, row for row
+    Query("q112_asof_native", Kpis.eventOrderAsofNative, asofOracle),
+
+    // ---- round 5: UDTF-class Generator through the SQL registry ----
     // The oracle rebuilds the capped pair fan-out relationally — the
     // generator must be just an execution strategy, not new semantics.
-    "q113_pair_generator" ->
+    Query("q113_pair_generator", Graph.coSupplyTopEdges,
       s"""WITH sp0 AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
         |sp AS (
         | SELECT l_partkey, l_suppkey FROM (
@@ -1775,9 +1072,10 @@ object SparkEntry {
         |FROM sp a JOIN sp b
         | ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey
         |GROUP BY 1, 2
-        |ORDER BY w DESC, s1, s2 LIMIT ${Graph.COSUPPLY_TOP}""".stripMargin,
+        |ORDER BY w DESC, s1, s2 LIMIT ${Graph.COSUPPLY_TOP}""".stripMargin),
 
-    "q114_windowed_funnel" ->
+    // ---- round 5: time-constrained funnel + native XML round-trip ----
+    Query("q114_windowed_funnel", Kpis.windowedFunnel,
       s"""WITH e AS (
         | SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |s1 AS (
@@ -1799,20 +1097,21 @@ object SparkEntry {
         | (SELECT CAST(count(*) AS BIGINT) FROM s2) AS n_click,
         | (SELECT CAST(count(*) AS BIGINT) FROM s3) AS n_purchase,
         | (SELECT CAST(coalesce(SUM(t3 - t1), 0) AS BIGINT) FROM s3)
-        |  AS conv_us_sum""".stripMargin,
+        |  AS conv_us_sum""".stripMargin),
 
     // The oracle aggregates the parquet ORIGINAL — any escaping or
     // numeric loss in the XML text boundary breaks the hash (q65's rule).
-    "q115_xml_roundtrip" ->
+    Query("q115_xml_roundtrip", SourceOps.xmlRoundtrip,
       """SELECT CAST(s_nationkey AS BIGINT) AS nation_key,
         | count(*) AS n_suppliers,
         | CAST(SUM(CAST(round(s_acctbal*100) AS BIGINT)) AS DOUBLE)/CAST(100 AS DOUBLE) AS total_balance,
         | min(s_name) AS first_name, max(s_name) AS last_name
-        |FROM supplier GROUP BY 1 ORDER BY nation_key""".stripMargin,
+        |FROM supplier GROUP BY 1 ORDER BY nation_key""".stripMargin),
 
+    // ---- round 5: exact-moment model fits ----
     // HUGEINT ≡ decimal(38,0); the one float derivation replays in the
     // same operation order, then round6 — q69's moment discipline.
-    "q116_ols_regression" ->
+    Query("q116_ols_regression", Analytics.olsRegression,
       """WITH d AS (
         | SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS x,
         |  CAST(round(l_extendedprice*100) AS BIGINT) AS y
@@ -1841,9 +1140,9 @@ object SparkEntry {
         | CAST(round((CAST(num AS DOUBLE) * CAST(num AS DOUBLE) /
         |   (CAST(denx AS DOUBLE) * CAST(deny AS DOUBLE)))*1000000)
         |  AS BIGINT)/CAST(1000000 AS DOUBLE) AS r2
-        |FROM b ORDER BY l_returnflag""".stripMargin,
+        |FROM b ORDER BY l_returnflag""".stripMargin),
 
-    "q117_chi_square" ->
+    Query("q117_chi_square", Analytics.chiSquare,
       """WITH d AS (
         | SELECT event_type, CAST(hour(ts) // 6 AS BIGINT) AS day_part
         | FROM events),
@@ -1861,20 +1160,23 @@ object SparkEntry {
         | JOIN rm ON cells.event_type = rm.event_type
         | JOIN cm ON cells.day_part = cm.day_part
         | CROSS JOIN t
-        |ORDER BY cells.event_type, cells.day_part""".stripMargin,
+        |ORDER BY cells.event_type, cells.day_part""".stripMargin),
 
+    // ---- round 5: two-phase exact heavy hitters (scale path of q48) ----
     // The oracle is the PLAIN top-k — candidate pruning must be an
     // execution detail, invisible in the result (q61/q96's rule).
-    "q118_heavy_hitters" ->
+    Query("q118_heavy_hitters", TextOps.heavyHitters,
       s"""WITH w AS (
         | SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word
         | FROM documents)
         |SELECT word, count(*) AS n FROM w WHERE len(word) > 0
-        |GROUP BY 1 ORDER BY n DESC, word LIMIT ${TextOps.HH_TOP_K}""".stripMargin,
+        |GROUP BY 1 ORDER BY n DESC, word LIMIT ${TextOps.HH_TOP_K}""".stripMargin),
 
-    "q119_ann_recall" -> OracleTwins.annRecall,
+    // ---- round 5: ANN index evaluation (recall@k vs brute force) ----
+    Query("q119_ann_recall", Sim.annRecall, OracleTwins.annRecall),
 
-    "q120_weighted_median" ->
+    // ---- round 5: weighted median + revenue-concentration (Gini) ----
+    Query("q120_weighted_median", Analytics.weightedMedian,
       """WITH d AS (
         | SELECT l_returnflag,
         |  CAST(round(l_extendedprice*100) AS BIGINT) AS pc,
@@ -1893,9 +1195,9 @@ object SparkEntry {
         |SELECT l_returnflag, max(totw) AS total_weight,
         | CAST(min(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS weighted_median
         |FROM cw WHERE cumw * 2 >= totw
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
+        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin),
 
-    "q121_gini_by_nation" ->
+    Query("q121_gini_by_nation", Analytics.giniByNation,
       """WITH rev AS (
         | SELECT o_custkey,
         |  CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS x
@@ -1917,11 +1219,14 @@ object SparkEntry {
         |   CAST(n_customers + 1 AS DOUBLE) * CAST(sx AS DOUBLE))
         |  / (CAST(n_customers AS DOUBLE) * CAST(sx AS DOUBLE)))*1000000)
         |  AS BIGINT)/CAST(1000000 AS DOUBLE) AS gini
-        |FROM g ORDER BY n_name""".stripMargin,
+        |FROM g ORDER BY n_name""".stripMargin),
 
+    // ---- round 6: grouped equal-frequency binning, scale path of q93
+    // (exact ntile output via run-level rank arithmetic over the
+    // distinct-value aggregate — one sharded window, no data sort) ----
     // q122 computes the SAME result as q93 through the scale path —
     // the oracle is deliberately the identical grouped-ntile twin.
-    "q122_quantile_bins_grouped" ->
+    Query("q122_quantile_bins_grouped", Analytics.quantileBinsGrouped,
       s"""WITH o AS (
         | SELECT o_orderpriority, o_orderkey,
         |  CAST(round(o_totalprice*100) AS BIGINT) AS pc
@@ -1935,6 +1240,532 @@ object SparkEntry {
         |SELECT o_orderpriority, bin, count(*) AS n_orders,
         | CAST(min(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS lo,
         | CAST(max(pc) AS DOUBLE)/CAST(100 AS DOUBLE) AS hi
-        |FROM b GROUP BY 1, 2 ORDER BY o_orderpriority, bin""".stripMargin,
-  )
+        |FROM b GROUP BY 1, 2 ORDER BY o_orderpriority, bin""".stripMargin),
+
+    // ---- round 6: direction + tolerance knobs on the native as-of
+    // operator (kdb aj / pandas merge_asof parity) ----
+    // direction/tolerance knobs of the native operator, each against an
+    // independent window-form twin (expand within tolerance + rank)
+    Query("q123_asof_forward", Kpis.eventOrderAsofForward,
+      """WITH c AS (SELECT event_id, user_id, ts FROM events
+        |           WHERE event_type = 'click'),
+        |p AS (SELECT event_id AS p_event_id, user_id AS p_user_id,
+        |       ts AS p_ts FROM events WHERE event_type = 'purchase'),
+        |j AS (
+        | SELECT c.event_id, c.user_id, p.p_event_id, p.p_ts,
+        |  row_number() OVER (PARTITION BY c.event_id
+        |    ORDER BY p.p_ts ASC NULLS LAST, p.p_event_id ASC NULLS LAST) AS rn
+        | FROM c LEFT JOIN p
+        |   ON c.user_id = p.p_user_id AND p.p_ts >= c.ts
+        |    AND epoch_us(p.p_ts) - epoch_us(c.ts) <= 86400000000)
+        |SELECT event_id, user_id, p_event_id AS purchase_id,
+        | strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts
+        |FROM j WHERE rn = 1 ORDER BY event_id""".stripMargin),
+
+    // nearest: rank by |Δt|, backward preferred on a distance tie; among
+    // equal times the backward side takes the max tie (event_id DESC,
+    // hence the negated CASE branch), the forward side the min
+    Query("q124_asof_nearest", Kpis.eventOrderAsofNearest,
+      """WITH c AS (SELECT event_id, user_id, ts FROM events
+        |           WHERE event_type = 'click'),
+        |p AS (SELECT event_id AS p_event_id, user_id AS p_user_id,
+        |       ts AS p_ts FROM events WHERE event_type = 'purchase'),
+        |j AS (
+        | SELECT c.event_id, c.user_id, p.p_event_id, p.p_ts,
+        |  row_number() OVER (PARTITION BY c.event_id
+        |    ORDER BY abs(epoch_us(p.p_ts) - epoch_us(c.ts)) ASC,
+        |     (p.p_ts > c.ts) ASC,
+        |     CASE WHEN p.p_ts > c.ts THEN p.p_event_id
+        |          ELSE -p.p_event_id END ASC) AS rn
+        | FROM c LEFT JOIN p
+        |   ON c.user_id = p.p_user_id
+        |    AND abs(epoch_us(p.p_ts) - epoch_us(c.ts)) <= 86400000000)
+        |SELECT event_id, user_id, p_event_id AS purchase_id,
+        | strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts
+        |FROM j WHERE rn = 1 ORDER BY event_id""".stripMargin),
+
+    // ---- round 6: selective salted join (join twin of q61's salted
+    // agg; oracle is the unsalted join, proving semantics preserved) ----
+    // the UNSALTED join: hot-path + cold-path + union must be invisible
+    Query("q125_salted_skew_join", Skew.saltedSkewJoin,
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
+        | CAST(SUM(CAST(round((l_extendedprice)*100) AS BIGINT)) AS DOUBLE)
+        |  / CAST(100 AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+
+    // ---- round 6: broadcast as-of strategy (zero probe-side shuffle),
+    // round 7: re-pointed at its contract shape — the broadcast side is
+    // a reference table bounded by CONSTRUCTION, not a scale-growing
+    // fact (the broadcast≡merge equality proof stays in AsOfJoinSpec) ----
+    // the broadcast strategy, held to the same as-of semantics as the
+    // window (q41) and sorted-merge (q112) forms: broadcast as-of on its
+    // contract shape: bounded nation×epoch rate book, latest epoch ≤ ts
+    // per event, aggregated per nation (the window twin mirrors q41's
+    // rank form)
+    Query("q126_asof_broadcast", Kpis.eventNationRateAsof,
+      s"""WITH e AS (
+        | SELECT event_id, user_id % ${Kpis.RATE_NATIONS} AS nk, ts
+        | FROM events),
+        |r AS (
+        | SELECT nk.v AS rnk, ep.v AS ep,
+        |  TIMESTAMP '${Kpis.RATE_START}' + INTERVAL (ep.v) DAY AS rate_from,
+        |  nk.v * 1000 + ep.v AS rate_id
+        | FROM (SELECT unnest(range(0, ${Kpis.RATE_NATIONS})) AS v) nk
+        | CROSS JOIN (SELECT unnest(range(0, ${Kpis.RATE_EPOCHS})) AS v) ep),
+        |j AS (
+        | SELECT e.event_id, e.nk, r.rate_id,
+        |  row_number() OVER (PARTITION BY e.event_id
+        |    ORDER BY r.rate_from DESC, r.rate_id DESC) AS rn
+        | FROM e LEFT JOIN r ON e.nk = r.rnk AND r.rate_from <= e.ts)
+        |SELECT nk, CAST(count(*) AS BIGINT) AS n_events,
+        | CAST(count(rate_id) AS BIGINT) AS n_matched,
+        | CAST(sum(rate_id) AS BIGINT) AS sum_rate_ids
+        |FROM j WHERE rn = 1 GROUP BY nk ORDER BY nk""".stripMargin),
+
+    // ---- round 6: multi-column-key as-of (kdb aj by-columns parity) ----
+    // multi-key as-of with a NATIVE STRING key (no code map): the
+    // reference epochs are synthesized identically (EXACTLY ONE per
+    // supplier × flag, so the backward winner is that row iff its epoch
+    // has started — no rank needed, which also sidesteps the synthetic
+    // lineitem's non-unique (orderkey, line#))
+    Query("q127_asof_multikey", Kpis.lineitemRateAsof,
+      """WITH r AS (
+        | SELECT s_suppkey, fc,
+        |  CASE fc WHEN 1 THEN 'A' WHEN 2 THEN 'N' ELSE 'R' END AS rf,
+        |  TIMESTAMP '1995-01-01'
+        |   + INTERVAL ((s_suppkey * 7 + fc * 11) % 1000) DAY AS rate_from,
+        |  s_suppkey * 10 + fc AS rate_id
+        | FROM supplier CROSS JOIN (SELECT unnest([1, 2, 3]) AS fc)),
+        |l AS (
+        | SELECT l_suppkey, l_returnflag, l_shipdate FROM lineitem)
+        |SELECT l.l_suppkey, l.l_returnflag,
+        | CAST(count(*) AS BIGINT) AS n_items,
+        | CAST(count(r.rate_id) AS BIGINT) AS n_matched,
+        | CAST(sum(r.rate_id) AS BIGINT) AS sum_rate_ids
+        |FROM l LEFT JOIN r ON l.l_suppkey = r.s_suppkey
+        |  AND l.l_returnflag = r.rf
+        |  AND r.rate_from <= l.l_shipdate
+        |GROUP BY l.l_suppkey, l.l_returnflag
+        |ORDER BY l.l_suppkey, l.l_returnflag""".stripMargin),
+
+    // ---- round 7: incremental near-dup against a PERSISTED band index
+    // (build once, probe each delta — no corpus signature recompute) ----
+    Query("q128_incremental_neardup", Dedup.incrementalNearDup, OracleTwins.incrementalNearDup),
+    // ---- round 7: persisted IVF index lifecycle (train once, append
+    // deltas against frozen centroids, cell-pruned probes) ----
+    Query("q129_ivf_index_probe", Sim.ivfIndexProbe, OracleTwins.ivfIndexProbe),
+    // ---- round 7: C4-style cross-document boilerplate accounting
+    // (relative-df heavy grams, broadcast back — corpus never shuffled) --
+    Query("q130_boilerplate_ngrams", TextOps.boilerplateNgrams, OracleTwins.boilerplateNgrams),
+    // ---- round 8: IVF recall@k as a function of nprobe on one persisted
+    // index — the measurement behind probeIvfIndex's multi-cell knob ----
+    Query("q131_ivf_nprobe_recall", Sim.ivfNprobeRecall, OracleTwins.ivfNprobeRecall),
+
+    // ---- round 8: the heavy-gram drift monitor's table (same operator
+    // streams in DocsStream.heavyGramMonitor; StreamingSpec pins ≡) ----
+    Query("q132_heavy_gram_monitor", ((s, dir) =>
+      graft.streaming.DocsStream.heavyGramMonitor(
+        Tables.documents(s, dir), TextOps.heavyGramSet(s, dir))
+        .orderBy("g")),
+      OracleTwins.heavyGramMonitor),
+
+    // ---- round 8: exact-substring (repeated-span) dedup signal —
+    // position-kept window fingerprints, cross-document df≥2 ----
+    Query("q133_repeated_spans", TextOps.repeatedSpans, OracleTwins.repeatedSpans),
+    // ---- round 8: the dedup keep/drop decision over q43's clusters ----
+    Query("q134_dedup_keep_list", Dedup.dedupKeepList, OracleTwins.dedupKeepList),
+    // ---- round 8: tokenizer-sizing signal — top-N vocab coverage ----
+    Query("q135_vocab_coverage", TextOps.vocabCoverage, OracleTwins.vocabCoverage),
+    // ---- round 8: composed IVF-PQ search (coarse cells → ADC scan of
+    // compressed codes → exact rerank of the shortlist) ----
+    Query("q136_ivfpq_topk", Sim.ivfpqTopK, OracleTwins.ivfpqTopK),
+    // ---- round 8: RRF fusion of lexical + dense similar-doc rankings ----
+    Query("q137_hybrid_retrieval", TextOps.hybridRetrieval, OracleTwins.hybridRetrieval),
+    // ---- round 8: bigram-LM fluency scoring (CCNet-style quality) ----
+    Query("q138_lm_score", TextOps.lmScore, OracleTwins.lmScore),
+    // ---- round 8: persisted inverted-index lifecycle (lexical twin of
+    // the MinHash/IVF indexes — build/append/probe/compact) ----
+    Query("q139_term_index_probe", TermIndex.termIndexProbe,
+      OracleTwins.retrievalSql(engine.TermIndex.TI_TERMS)),
+    // ---- round 8: LSH banding-geometry recall/precision sweep ----
+    Query("q140_lsh_recall", Dedup.lshRecall, OracleTwins.lshRecall),
+    // ---- round 8: temperature-flattened mixture sampling (α=0.5) ----
+    Query("q141_temperature_sample", TextOps.temperatureSample, OracleTwins.temperatureSample),
+    // ---- round 8: leakage-proof split keyed on near-dup clusters ----
+    Query("q142_cluster_split", Dedup.clusterAwareSplit, OracleTwins.clusterAwareSplit),
+    // ---- round 8: deterministic global training shuffle manifest ----
+    Query("q143_training_shards", TextOps.trainingShards, OracleTwins.trainingShards),
+    // ---- round 8: embedding drift vs frozen baseline centroids ----
+    Query("q144_embedding_drift", Sim.embeddingDrift, OracleTwins.embeddingDrift),
+    // ---- round 8: 13-gram benchmark decontamination ----
+    Query("q145_ngram_decontamination", Dedup.ngramDecontamination,
+      OracleTwins.ngramDecontamination),
+    // ---- round 8: doc-in-doc containment dedup (bottom-k sketch) ----
+    Query("q146_containment_dedup", Dedup.containmentDedup, OracleTwins.containmentDedup),
+    // ---- round 8: end-to-end curation pipeline in one plan ----
+    Query("q147_curation_pipeline", TextOps.curationPipeline, OracleTwins.curationPipeline),
+    // ---- round 8: cluster-stratified coverage sample ----
+    Query("q148_cell_coverage_sample", Sim.cellCoverageSample, OracleTwins.cellCoverageSample),
+    // ---- round 8: persisted IVF-PQ compressed-index lifecycle ----
+    Query("q149_ivfpq_index_probe", Sim.ivfpqIndexProbe, OracleTwins.ivfpqIndexProbe),
+    // ---- round 8: source-pair duplication matrix ----
+    Query("q150_source_pair_dups", Dedup.sourcePairDups, OracleTwins.sourcePairDups),
+    // ---- round 8: token-budget mixture via exact waterfilling ----
+    Query("q151_token_budget_mixture", TextOps.tokenBudgetMixture,
+      OracleTwins.tokenBudgetMixture),
+    // ---- round 8: exact phrase search via positioned span hashes ----
+    Query("q152_phrase_search", TextOps.phraseSearch, OracleTwins.phraseSearch),
+    // ---- round 9: steady-state consumers of the maintained label
+    //      table (merge, never re-cluster) — same oracles as the full
+    //      recomputes they replace (q134/q142) ----
+    Query("q153_lifecycle_keep_list", Dedup.lifecycleKeepList, OracleTwins.dedupKeepList),
+    Query("q154_lifecycle_cluster_split", Dedup.lifecycleClusterSplit,
+      OracleTwins.clusterAwareSplit),
+    // ---- round 9: containment head-fingerprint index lifecycle ----
+    Query("q155_containment_increment", Dedup.containmentIncrementProbe,
+      OracleTwins.containmentIncrementProbe),
+    // ---- round 9: the remaining closure consumers, lifecycle-served
+    //      (same oracles as q147/q43) ----
+    Query("q156_lifecycle_curation", TextOps.lifecycleCuration, OracleTwins.curationPipeline),
+    Query("q157_lifecycle_dup_clusters", Dedup.lifecycleDupClusters, OracleTwins.dupClusters),
+    // ---- round 9: the DECREMENTAL paths, oracle-gated — forget must
+    //      arrive at the closure/scoring of a corpus the deleted docs
+    //      were never in ----
+    Query("q158_forget_clusters", Dedup.forgetClustersProbe, OracleTwins.forgetClusters),
+
+    Query("q159_term_forget_probe", TermIndex.termForgetProbe,
+      OracleTwins.retrievalSql(
+        engine.TermIndex.TI_TERMS,
+        docWhere = s"doc_id % ${engine.Dedup.FORGET_MOD} <> 0")),
+
+    // ---- round 9: soft dedup — weight, don't drop ----
+    Query("q160_soft_dedup_weights", Dedup.softDedupWeights, OracleTwins.softDedupWeights),
+    Query("q161_lifecycle_soft_weights", Dedup.lifecycleSoftWeights,
+      OracleTwins.softDedupWeights),
+    // ---- round 9: funnel ledger + quality-ranked canonicals ----
+    Query("q162_curation_funnel", TextOps.curationFunnel, OracleTwins.curationFunnel),
+    Query("q163_quality_canonicals", Dedup.qualityCanonicals, OracleTwins.qualityCanonicals),
+    Query("q164_quality_keep_list", Dedup.qualityKeepList, OracleTwins.qualityKeepList),
+    Query("q165_weighted_mixture", TextOps.weightedTokenMixture,
+      OracleTwins.weightedTokenMixture),
+    Query("q166_lifecycle_semdedup", Sim.lifecycleSemanticDedup,
+      OracleTwins.lifecycleSemanticDedup),
+    Query("q167_source_token_cap", TextOps.sourceTokenCap, OracleTwins.sourceTokenCap),
+    Query("q168_stratified_eval", TextOps.stratifiedEvalSample,
+      OracleTwins.stratifiedEvalSample),
+    Query("q169_length_percentiles", TextOps.lengthPercentiles, OracleTwins.lengthPercentiles),
+    // ---- round 9: winnowing fingerprints (local-overlap dedup channel)
+    //      + BPE tokenizer training over the word histogram ----
+    Query("q170_winnow_neardup", Dedup.winnowNearDup, OracleTwins.winnowNearDup),
+    Query("q171_bpe_merges", TextOps.bpeMerges, OracleTwins.bpeMerges),
+    Query("q172_bpe_fertility", TextOps.bpeFertility, OracleTwins.bpeFertility),
+    Query("q173_winnow_increment", Dedup.winnowIncrementProbe,
+      OracleTwins.winnowIncrementProbe),
+    // ---- round 10: sampling-theory + sketch-calibration operators ----
+    Query("q174_weighted_sample", TextOps.weightedSample, OracleTwins.weightedSample),
+    Query("q175_random_projection_audit", Sim.randomProjectionAudit,
+      OracleTwins.randomProjectionAudit),
+    Query("q176_source_overlap", Dedup.sourceOverlap, OracleTwins.sourceOverlap),
+    Query("q177_dsir_weights", TextOps.dsirWeights, OracleTwins.dsirWeights),
+    // ---- round 10: REAL image decode (PPM/P6 wire round trip) ----
+    Query("q178_image_decode", graft.multimodal.Multimodal.imageDecodeStats,
+      OracleTwins.imageDecodeStats),
+    Query("q179_image_resize", graft.multimodal.Multimodal.imageResizeStats,
+      OracleTwins.imageResizeStats),
+    // ---- round 10: the streaming lineage, oracle-gated end-to-end ----
+    Query("q180_stream_curated", graft.streaming.DocsStream.streamCuratedProbe,
+      OracleTwins.streamCurated),
+    // ---- round 10: the reference's availability-JSON schedule parse ----
+    Query("q181_availability_json", SourceOps.availabilityJson, OracleTwins.availabilityJson),
+    // ---- round 10: persisted exact-hash "seen-before" admission gate ----
+    Query("q182_hash_index_probe", Dedup.hashIndexProbe, OracleTwins.hashIndexProbe),
+    // ---- round 10: REAL audio decode (RIFF/WAVE PCM wire round trip)
+    //      + oracle-gated video frame sampling ----
+    Query("q183_audio_decode", graft.multimodal.Multimodal.audioDecodeStats,
+      OracleTwins.audioDecodeStats),
+    Query("q184_audio_resample", graft.multimodal.Multimodal.audioResampleStats,
+      OracleTwins.audioResampleStats),
+    Query("q185_video_frames", graft.multimodal.Multimodal.videoFrameStats,
+      OracleTwins.videoFrameStats),
+    // ---- round 10: perceptual image dedup (dHash over the real codec) ----
+    Query("q186_image_dhash", graft.multimodal.Multimodal.imageDHash, OracleTwins.imageDHash),
+    Query("q187_image_pdup_groups", graft.multimodal.Multimodal.imagePdupGroups,
+      OracleTwins.imagePdupGroups),
+    Query("q188_image_pdup_pairs", graft.multimodal.Multimodal.imagePdupPairs,
+      OracleTwins.imagePdupPairs),
+    // ---- round 10: crawl-scale URL identity + frame-level audio features ----
+    Query("q189_url_canonical", SourceOps.urlCanonicalDedup, OracleTwins.urlCanonicalDedup),
+    Query("q190_audio_frames", graft.multimodal.Multimodal.audioFrameStats,
+      OracleTwins.audioFrameStats),
+    // ---- round 10: domain-grain curation gate (blocklist + quality) ----
+    Query("q191_domain_gate", SourceOps.domainGate, OracleTwins.domainGate),
+    // ---- round 10: fastText-shaped hashed-linear quality classifier ----
+    Query("q192_quality_classifier", TextOps.qualityClassifier, OracleTwins.qualityClassifier),
+    // ---- round 10: CCNet line-level dedup with doc reconstruction ----
+    Query("q193_line_dedup", TextOps.lineDedup, OracleTwins.lineDedup),
+    // ---- round 10: audio perceptual fingerprint near-dup ----
+    Query("q194_audio_pdup_pairs", graft.multimodal.Multimodal.audioPdupPairs,
+      OracleTwins.audioPdupPairs),
+    // ---- round 10: deterministic KMV cardinality sketch + merge ----
+    Query("q195_kmv_distinct", TextOps.kmvDistinctShingles, OracleTwins.kmvDistinctShingles),
+    // ---- round 10: video near-dup via frame-fingerprint matching ----
+    Query("q196_video_pdup_pairs", graft.multimodal.Multimodal.videoPdupPairs,
+      OracleTwins.videoPdupPairs),
+    // ---- round 10: streaming near-dup lifecycle, oracle-gated ----
+    Query("q197_stream_neardup", graft.streaming.DedupStream.streamNearDupProbe,
+      OracleTwins.streamNearDup),
+    // ---- round 10: KMV sketch-store lifecycle (build/append/serve) ----
+    Query("q198_kmv_lifecycle", TextOps.kmvLifecycle, OracleTwins.kmvLifecycle),
+    // ---- round 10: contrastive hard-negative mining band ----
+    Query("q199_hard_negatives", Sim.hardNegatives, OracleTwins.hardNegatives),
+    // ---- round 10: watermarked windowed agg, oracle-gated ----
+    Query("q200_stream_hourly", graft.streaming.EventsStream.streamHourlyProbe,
+      OracleTwins.streamHourly),
+    // ---- round 11: flatMapGroupsWithState sessionizer, oracle-gated ----
+    Query("q201_stream_sessions", graft.streaming.EventsStream.streamSessionsProbe,
+      OracleTwins.streamSessions),
+    // ---- round 11: stream-stream as-of join, all 3 directions ----
+    Query("q202_stream_asof", graft.streaming.AsOfStream.streamAsOfProbe,
+      OracleTwins.streamAsOf),
+    // ---- round 11: REAL BMP codec (wire-layout pins) ----
+    Query("q203_bmp_decode", graft.multimodal.Multimodal.bmpDecodeStats,
+      OracleTwins.bmpDecodeStats),
+    // ---- round 11: mixed-format sniffing decode + resize ----
+    Query("q204_mixed_decode", graft.multimodal.Multimodal.mixedDecodeStats,
+      OracleTwins.mixedDecodeStats),
+    // ---- round 11: session_window merge under out-of-order arrival ----
+    Query("q205_stream_session_windows", graft.streaming.EventsStream.streamSessionWindowsProbe,
+      OracleTwins.streamSessionWindows),
+    // ---- round 11: KMV pairwise source-overlap estimation ----
+    Query("q206_kmv_source_overlap", TextOps.kmvSourceOverlap, OracleTwins.kmvSourceOverlap),
+    // ---- round 11: k-core decomposition (iterative peeling) ----
+    Query("q207_kcore", Graph.kCore, OracleTwins.kCore),
+    // ---- round 11: stream-stream interval join, emission-law gated ----
+    Query("q208_stream_interval_join", graft.streaming.EventsStream.streamIntervalJoinProbe,
+      OracleTwins.streamIntervalJoin),
+    // ---- round 11: stream-static as-of sink, row-grain gated ----
+    Query("q209_stream_asof_sink", graft.streaming.AsOfStream.streamAsOfSinkProbe,
+      OracleTwins.streamAsOfSink),
+    // ---- round 11: complete-mode drift histogram ----
+    Query("q210_stream_drift", graft.streaming.EventsStream.streamDriftProbe,
+      OracleTwins.streamDrift),
+    // ---- round 11: term-index ingest stream (+ mid-stream compaction) ----
+    Query("q211_stream_term_index", graft.streaming.TermIndexStream.streamTermIndexProbe,
+      OracleTwins.retrievalSql(graft.streaming.TermIndexStream.ST_TERMS)),
+    // ---- round 11: vec-index ingest + probe-serving streams ----
+    // same oracle as q129 on purpose (the q41/q112 device): streamed
+    // ingest + streamed serving must be indistinguishable from the
+    // batch index lifecycle, row for row
+    Query("q212_stream_vec_index", graft.streaming.VecIndexStream.streamVecIndexProbe,
+      OracleTwins.ivfIndexProbe),
+    // ---- round 11: sorted-neighbourhood linkage (bounded-pair ER) ----
+    Query("q213_sorted_neighbourhood", Dedup.sortedNeighbourhood,
+      OracleTwins.sortedNeighbourhood),
+    // ---- round 11: drift-cell ingest stream, (batch, cell) grain ----
+    Query("q214_stream_drift_cells", graft.streaming.DriftStream.streamDriftCellsProbe,
+      OracleTwins.streamDriftCells),
+    // ---- round 11: built-in exact streaming dedup under replayed feed ----
+    Query("q215_stream_dedup", graft.streaming.EventsStream.streamDedupProbe,
+      OracleTwins.streamDedup),
+    // ---- round 11: stream-stream LEFT OUTER interval join ----
+    Query("q216_stream_outer_join", graft.streaming.EventsStream.streamOuterJoinProbe,
+      OracleTwins.streamOuterJoin),
+    // ---- round 11: stream-stream FULL OUTER interval join ----
+    Query("q217_stream_full_outer_join", graft.streaming.EventsStream.streamFullOuterJoinProbe,
+      OracleTwins.streamFullOuterJoin),
+    // ---- round 12: REAL PNG codec — hand-rolled DEFLATE inflate + the
+    // five scanline unfilters; compressed mainstream format coverage ----
+    Query("q218_png_decode", graft.multimodal.Multimodal.pngDecodeStats,
+      OracleTwins.pngDecodeStats),
+    // ---- round 12: deterministic bottom-k-sample quantiles (vs q55's
+    // merge-order-sensitive percentile_approx) ----
+    Query("q219_quantile_sketch", TextOps.quantileSketch, OracleTwins.quantileSketch),
+    // ---- round 12: the reference's OWN 13-table schema end-to-end —
+    // CSV fixtures → bronze → silver → gold, then its 8 KPI queries ----
+    Query("q220_v2_active_categories", V2Demo.kpiActiveCategories,
+      OracleTwins.v2ActiveCategories),
+    Query("q221_v2_top_providers", V2Demo.kpiTopProviders, OracleTwins.v2TopProviders),
+    Query("q222_v2_disputed_providers", V2Demo.kpiDisputedProviders,
+      OracleTwins.v2DisputedProviders),
+    Query("q223_v2_demand_by_area", V2Demo.kpiDemandByArea, OracleTwins.v2DemandByArea),
+    Query("q224_v2_avg_rating", V2Demo.kpiAvgRating, OracleTwins.v2AvgRating),
+    Query("q225_v2_monthly_revenue", V2Demo.kpiMonthlyRevenue, OracleTwins.v2MonthlyRevenue),
+    Query("q226_v2_ai_usage", V2Demo.kpiAiUsage, OracleTwins.v2AiUsage),
+    Query("q227_v2_top_rated", V2Demo.kpiTopRated, OracleTwins.v2TopRated),
+    // ---- round 13: baseline JPEG — the dominant real-corpus format;
+    // entropy decode + IDCT hash-gated via coefficient-constructed
+    // exactly-rational blocks (VERDICT r12 ask #1) ----
+    Query("q228_jpeg_decode", graft.multimodal.Multimodal.jpegDecodeStats,
+      OracleTwins.jpegDecodeStats),
+    // ---- round 13: PROGRESSIVE JPEG (SOF2) — multi-scan spectral
+    // selection + EOBn runs, same exact-integer oracle device ----
+    Query("q229_jpeg_progressive", graft.multimodal.Multimodal.jpegProgressiveStats,
+      OracleTwins.jpegProgressiveStats),
+    // ---- round 13: crawl-archive ingestion — .warc.gz member decode
+    // (RFC 1952 over the hand-rolled inflate), WARC/HTTP envelopes,
+    // HTML→text extraction; md5(text) gated cross-engine ----
+    Query("q230_warc_ingest", Crawl.warcIngest, OracleTwins.warcIngest),
+    Query("q231_crawl_host_stats", Crawl.crawlHostStats, OracleTwins.crawlHostStats),
+    // ---- round 13: GIF — fifth image format, third hand-rolled
+    // compression family (LZW: variable-width codes, dict growth,
+    // KwKwK, interlace) ----
+    Query("q232_gif_decode", graft.multimodal.Multimodal.gifDecodeStats,
+      OracleTwins.gifDecodeStats),
+    // ---- round 13: charset-aware page decode — Content-Type charset
+    // parameter honored (UTF-8 / latin-1 / cp1252), wrong-charset
+    // decodes cannot hash-match ----
+    Query("q233_charset_pages", Crawl.charsetPages, OracleTwins.charsetPages),
+    // ---- round 13: robots.txt (RFC 9309) frontier gate — broadcast
+    // per-host rules, longest-match precedence, map-side verdicts ----
+    Query("q234_robots_gate", ((s, d) => Crawl.robotsGate(s, d)), OracleTwins.robotsGate),
+    // ---- round 13: crawl → curation end-to-end — wire bytes through
+    // the decode chain into the shared quality gates and per-verdict
+    // corpus accounting ----
+    Query("q235_crawl_curation", Crawl.crawlCuration, OracleTwins.crawlCuration),
+    // ---- round 14: PDF text extraction, dependency-free ISO 32000
+    // subset (xref table → object graph → page tree → FlateDecode zlib
+    // inflate → Tj/TJ/'/" operator machine), reached through the crawl
+    // ingest's Content-Type DISPATCH next to HTML (VERDICT r13 ask #1) ----
+    Query("q236_pdf_text", Crawl.pdfTextIngest, OracleTwins.pdfTextIngest),
+    // ---- round 14: MAIN-CONTENT extraction — the jusText-shaped
+    // block classifier (chrome ancestry / main-container override /
+    // integer length+link-density law); q235's corpus gained chrome and
+    // its gate rides the same extractor (VERDICT r13 ask #4) ----
+    Query("q237_main_content", Crawl.mainContentExtract, OracleTwins.mainContentExtract),
+    // ---- round 14: CDX record-grain index — response captures indexed
+    // (urlkey, archive, member byte span) at ingest; a URL probe decodes
+    // ONLY matched members by random access (VERDICT r13 ask #5) ----
+    Query("q238_cdx_probe", Crawl.cdxProbe, OracleTwins.cdxProbe),
+    // ---- round 14: the beyond-broadcast robots gate — rules as a
+    // host-keyed TABLE met in a sort-merge join (the 10⁷-host regime's
+    // shape); same oracle as q234 (VERDICT r13 ask #2) ----
+    // q239 shares q234's oracle STRING (the q41/q112 device): one
+    // decision algebra, two execution strategies — broadcast map-side
+    // vs host-keyed sort-merge join — provably interchangeable.
+    Query("q239_robots_gate_joined", Crawl.robotsGateJoined, OracleTwins.robotsGate),
+    // ---- round 14: sitemap discovery (sitemaps.org protocol) — each
+    // host's sitemapindex fetched and parsed, child urlsets fetched BY
+    // THE PARSED LOCS; namespace-prefixed and default forms, CDATA,
+    // entities, extension elements with decoy locs all on the wire ----
+    Query("q240_sitemap_discover", Crawl.sitemapDiscover, OracleTwins.sitemapDiscover),
+    // ---- round 14: crawl-frontier construction — the composition the
+    // crawl surface exists for: sitemap-discovered ∖ seen-before ∩
+    // robots-allowed, scheduled into per-host politeness waves ----
+    Query("q241_crawl_frontier", Crawl.crawlFrontier, OracleTwins.crawlFrontier),
+    // ---- round 14: WebDataset-style tar shard ingest — the ustar
+    // distribution wrapper of real multimodal training corpora: shard
+    // bytes parsed, members grouped into samples by key, text + class +
+    // image members decoded map-side (the file IS the row) ----
+    Query("q242_tar_shard_samples", graft.multimodal.Multimodal.tarShardSamples,
+      OracleTwins.tarShardSamples),
+    // ---- round 14: ZIP document-dump probe — central-directory
+    // listing (an archive-tail read) + selective CRC-checked extraction
+    // of seed members only: the container whose record-grain random
+    // access is native to the wire ----
+    Query("q243_zip_probe", Crawl.zipArchiveProbe, OracleTwins.zipArchiveProbe),
+    // ---- round 14: WET emission — the crawl surface gains its EMIT
+    // side: extracted text serialized as real conversion records
+    // (WARC envelope + gzip member framing) and read back through the
+    // hand-rolled decode; gate columns are the q230 text law's ----
+    Query("q244_wet_roundtrip", Crawl.wetRoundTrip, OracleTwins.wetRoundTrip),
+    // ---- round 14: the frontier SCHEDULE — q241's politeness waves
+    // paced by each host's Crawl-delay (surfaced from robots.txt, the
+    // de-facto extension real fleets honor) into fetch times ----
+    Query("q245_frontier_schedule", Crawl.frontierSchedule, OracleTwins.frontierSchedule),
+    // ---- round 14: recrawl-due — the frontier's other half: seen URLs
+    // whose sitemap lastmod is strictly newer than their LATEST
+    // capture's WARC-Date (read through the real archive decode) ----
+    Query("q246_recrawl_due", Crawl.recrawlDue, OracleTwins.recrawlDue),
+    // ---- round 14: discovery via robots.txt Sitemap lines — the real
+    // frontier's entry point; same oracle as q240 ----
+    // q247 shares q240's oracle STRING; q248 shares q242's (the
+    // q41/q112 device: one semantics, two execution paths, one oracle)
+    Query("q247_sitemap_via_robots", Crawl.sitemapDiscoverViaRobots,
+      OracleTwins.sitemapDiscover),
+    // ---- round 14: tar reshard — loader-parallelism resharding of
+    // WebDataset corpora through the real ustar writer; same oracle as
+    // q242 (resharding must be invisible to the sample set) ----
+    Query("q248_tar_reshard", graft.multimodal.Multimodal.tarReshard,
+      OracleTwins.tarShardSamples),
+    // ---- round 14: Avro OCF round trip — the row-oriented interchange
+    // container, hand-rolled (the distribution has no spark-avro):
+    // embedded JSON schema, zigzag varints, deflate blocks, sync law ----
+    Query("q249_avro_roundtrip", Crawl.avroRoundTrip, OracleTwins.avroRoundTrip),
+    // ---- round 14: sitemap REWRITE — the emit side of discovery:
+    // parsed urlsets written back (entity re-encoding, optional-field
+    // preservation) and re-parsed; same oracle as q240 ----
+    // q250 shares q240's oracle STRING: the write→parse round trip
+    // must be invisible to the discovered entries (the q244 device)
+    Query("q250_sitemap_rewrite", Crawl.sitemapRewrite, OracleTwins.sitemapDiscover),
+    // ---- round 15: PDF 1.5+ layout — cross-reference STREAMS
+    // (W-typed binary rows, PNG-predicted on half the corpus)
+    // resolving objects INTO object streams; the modern layout the
+    // majority of real-world PDFs use (VERDICT r14 ask #1) ----
+    Query("q251_pdf_xref_stream", Crawl.pdfXrefStreamIngest, OracleTwins.pdfXrefStreamIngest),
+    // ---- round 15: PDF Form XObjects — text riding /Subtype /Form
+    // draws (headers/footers/stamps): form-scoped resources (name
+    // shadowing), nested forms, Do's implicit state save/restore, the
+    // form-boundary separator law (VERDICT r14 ask #6) ----
+    Query("q252_pdf_forms", Crawl.pdfFormTextIngest, OracleTwins.pdfFormTextIngest),
+    // ---- round 15: the politeness window at HOST-SKEW scale — a
+    // planted Zipf-head host, two-path on measured cardinalities (the
+    // q125/q61 device): cold hosts keep the plain window, hot hosts
+    // decompose the rank over the bounded leading sort key
+    // (VERDICT r14 ask #8) ----
+    // q253's twin computes the PLAIN per-host window — the two-path
+    // decomposition must be exactly rank-equal to it
+    Query("q253_frontier_skew", Crawl.frontierSkewedWaves, OracleTwins.frontierSkewedWaves),
+    // ---- round 15: Type0/CID fonts — Identity-H 2-byte CIDs through
+    // a /ToUnicode CMap (bfchar singles incl. a surrogate pair,
+    // incrementing bfrange), the composite-font layout CJK documents
+    // and subset-embedded fonts ship (VERDICT r14 missing #2) ----
+    Query("q254_pdf_cid_text", Crawl.pdfCidTextIngest, OracleTwins.pdfCidTextIngest),
+    // ---- round 15: incremental updates — /Prev xref chains (classic
+    // AND xref-stream sections), newest-section-wins shadowing, freed
+    // entries masking older generations; the append-only save layout
+    // editors actually write ----
+    Query("q255_pdf_incremental", Crawl.pdfIncrementalIngest, OracleTwins.pdfIncrementalIngest),
+    // ---- round 15: Unicode normalization as a native codegen
+    // expression (Spark has no built-in): NFC for dedup-ahead
+    // canonicalization, NFKC for compatibility folding; NFC gated
+    // against DuckDB's independent utf8proc implementation ----
+    Query("q256_unicode_normalize", TextOps.unicodeNormalize, OracleTwins.unicodeNormalize),
+    // ---- round 15: BOM-precedence HTML decode (HTML5 sniffing step
+    // 1): the byte-order mark outranks a lying Content-Type charset
+    // header; four transport arms under ONE arithmetic text law ----
+    Query("q257_bom_charset", Crawl.bomCharsetPages, OracleTwins.bomCharsetPages),
+    // ---- round 15: chunked transfer-coding decode (RFC 9112 §7.1):
+    // WARC stores the raw wire, so chunked captures are common; the
+    // framing must be removed (sizes, extensions) and trailers kept,
+    // under one text law shared with the Content-Length control ----
+    Query("q258_chunked_http", Crawl.chunkedPages, OracleTwins.chunkedPages),
+  ))
+
+  /** Returns `qs` unchanged; throws if two entries share a name. */
+  def checkUnique(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, v) if v.size > 1 => n }
+    require(dups.isEmpty,
+      s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
+
+  /** The queries a `SPARK_GRAFT_ONLY` value selects: all of them when
+    * unset, else every query whose name contains one of the
+    * comma-separated patterns (`q218` selects `q218_png_decode`). A
+    * pattern list that selects nothing throws. */
+  def select(only: Option[String]): Seq[Query] = only match {
+    case None => registry
+    case Some(spec) =>
+      val pats = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val hit = registry.filter(q => pats.exists(q.name.contains))
+      require(hit.nonEmpty, s"SPARK_GRAFT_ONLY='$spec' selects no query")
+      hit
+  }
 }

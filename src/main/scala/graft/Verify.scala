@@ -1,51 +1,53 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
+
+import graft.engine.Sessions
+
+/** Correctness dump for the DuckDB compare (`tools/selfcheck.py`). Usage:
+  * `runMain graft.Verify <sfDir> <outDir>`; `SPARK_GRAFT_ONLY` narrows the
+  * queries ([[SparkEntry.select]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.engine.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY unset (the default) dumps the full surface
+    dump(spark, sfDir, outDir, SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")))
+    spark.stop()
+  }
+
+  /** Writes each selected query's result to `<outDir>/<name>` (parquet),
+    * the queries that threw to `failed.json`, and every registered twin
+    * to `oracle_sql.json`. One failure never stops the others, so a
+    * broken query cannot hide the results of the rest. Returns the
+    * failures. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           selected: Seq[Query]): Seq[QueryFailure] = {
     new java.io.File(outDir).mkdirs()
-    // comma-separated substring filter for fast local iteration; the
-    // driver never sets it, so the full surface always dumps per-round
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(pats) =>
-        SparkEntry.queries.filter { case (n, _) => pats.exists(n.contains) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = selected.flatMap { q =>
+      try {
+        q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
+        None
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+          Some(QueryFailure(q.name, e))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/failed.json"),
+      QueryFailure.jsonArray(failed))
+    import QueryFailure.jsonString
+    val json = SparkEntry.registry
+      .map(q => s"${jsonString(q.name)}: ${jsonString(q.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

@@ -276,8 +276,6 @@ object Dedup {
       changed = obs.get("changed").asInstanceOf[Long]
       labels = next.select(col("id"), col("label"))
       iters += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] iter=$iters changed=$changed")
     }
     e.unpersist()
     if (changed > 0)

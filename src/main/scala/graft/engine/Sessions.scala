@@ -5,9 +5,12 @@ import java.util.Locale
 import org.apache.spark.sql.SparkSession
 
 /** Session-level environment setup, applied once per SparkSession at the
-  * entry points (graft.Verify, graft.Bench, SparkEntry.entry, test fixture)
-  * — NOT inside table loaders, so no reader mutates global state as a side
-  * effect of being called (a trap once queries run concurrently).
+  * entry points — NOT inside table loaders, so no reader mutates global
+  * state as a side effect of being called (a trap once queries run
+  * concurrently). [[local]] is the one place that builds a session: every
+  * main (graft.Verify, graft.Bench, the graft.tools harnesses) and the
+  * test fixture call it. [[tune]] alone serves sessions built elsewhere
+  * ([[graft.SparkEntry.entry]] tunes the session its caller passes in).
   */
 object Sessions {
 
@@ -33,8 +36,11 @@ object Sessions {
     spark
   }
 
-  /** Local session for tests and ad-hoc runs: shuffle partitions sized to
-    * cores (not the 200 default — SURVEY.md §4), AQE left on. */
+  /** Local session for the mains and the tests: `local[cores]`, shuffle
+    * partitions sized to cores (not the 200 default — SURVEY.md §4), AQE
+    * left on, the graft SQL extensions installed, no UI, then [[tune]].
+    * A caller that wants another partition count sets
+    * `spark.sql.shuffle.partitions` on the returned session. */
   def local(cores: Int = 4, appName: String = "graft"): SparkSession =
     tune(SparkSession.builder()
       .master(s"local[$cores]")

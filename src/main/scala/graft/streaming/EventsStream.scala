@@ -247,7 +247,7 @@ object EventsStream {
         "tindex" -> (() => {
           graft.engine.TermIndex.maintainedTermIndex(spark, dir); () }),
         // under a bounded width the list order is the admission order —
-        // longest-serial builds (PrewarmProfile) lead so the wall's
+        // longest-serial builds (OPTIMIZATION_r15.md) lead so the wall's
         // critical path starts at t=0 (LPT scheduling)
         "asof" -> (() => { AsOfStream.streamAsOfProbe(spark, dir).count(); () }),
         "vec" -> (() => { VecIndexStream.streamVecIndexProbe(spark, dir).count(); () }),
@@ -273,7 +273,7 @@ object EventsStream {
       // builds are micro-batch-commit/IO-wait bound, not CPU bound, so a
       // bounded width only serializes wait — the full 19-lineage wall
       // read 14.8 s unbounded vs 19.4/16.7/24.4 s at widths 6/10/4
-      // (PrewarmWall, same host, fresh JVM each).
+      // (OPTIMIZATION_r15.md, same host, fresh JVM each).
       family.filter(_._1 != except).map { case (tag, build) =>
         val t = new Thread(() => {
           // per-lineage build seconds document the wall's width-scaling:
@@ -347,7 +347,7 @@ object EventsStream {
     * partition count is frozen at checkpoint-create time — and a count
     * tuned to the HOST (cpus) pays `cpus` state-store commits, task
     * launches and landed files per micro-batch regardless of data size.
-    * Measured (StreamProfile, sf0.1): the q202 backward drain is 7.4 s
+    * Measured (OPTIMIZATION_r15.md, sf0.1): the q202 backward drain is 7.4 s
     * at 32 state partitions vs 2.8 s at 4, identical output rows.
     * Derive the count from the INPUT SIZE instead — one partition per
     * ~32 MB of the stream's input bytes, capped at 4×cores — so the

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
@@ -24,12 +24,7 @@ object AsOfBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.engine.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = graft.engine.Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     def drain(df: DataFrame): Unit =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan auditor: run any registered queries and print the executed
   * plan's load-bearing shape — exchange count/kinds, parquet scans (with
   * pushed filters visible), codegen span count, and any nested-loop or
@@ -12,10 +10,7 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.engine.Sessions.tune(SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate())
+    val spark = graft.engine.Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { q =>
       println(s"===== $q =====")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Test-data scale-up: replicate an SF directory `factor`× with disjoint,
@@ -43,11 +43,7 @@ object ScaleUp {
     val Array(src, dst, factorS) = args.filterNot(_.startsWith("--"))
     val factor = factorS.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.engine.Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = graft.engine.Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
