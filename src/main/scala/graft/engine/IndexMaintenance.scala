@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Compaction for the persisted incremental indexes ([[Dedup]]'s MinHash
   * band index, [[Sim]]'s IVF cell index). Each ingest lands as its own
   * `increment=<n>` partition — correct and idempotent, but after many
@@ -73,10 +75,10 @@ object IndexMaintenance {
           .take(400) finally in.close()
         "epoch_ms=(\\d+)".r.findAllMatchIn(s).toSeq.lastOption
           .map(_.group(1).toLong)
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     parsed.getOrElse(
       try fs.getFileStatus(lease).getModificationTime
-      catch { case _: Throwable => Long.MaxValue /* vanished = not stale */ })
+      catch { case NonFatal(_) => Long.MaxValue /* vanished = not stale */ })
   }
 
   /** Overwrite the lease stamp IN PLACE — never delete-then-create,
@@ -103,7 +105,7 @@ object IndexMaintenance {
       val in = fs.open(lease)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.take(200)
       finally in.close()
-    } catch { case _: Throwable => "<unreadable>" }
+    } catch { case NonFatal(_) => "<unreadable>" }
 
   /** Acquire the single-writer lease on `indexDir`, run `body`, release.
     * Acquisition is an atomic exclusive create — `Files.createFile` on a
@@ -166,7 +168,7 @@ object IndexMaintenance {
         try {
           if (readStamp(fs, lease).contains(s"nonce=$nonce"))
             restamp(fs, lease, stampOf(owner, nonce))
-        } catch { case _: Throwable => () } // lost/taken over: stop renewing
+        } catch { case NonFatal(_) => () } // lost/taken over: stop renewing
       }
     }, s"graft-lease-heartbeat-$owner")
     hb.setDaemon(true)
@@ -214,7 +216,7 @@ object IndexMaintenance {
     if (age < maxAgeMs) return false // live (or too fresh to judge)
     val tomb = new Path(lease.toString + ".stale-" +
       java.util.UUID.randomUUID().toString.take(12))
-    val won = try fs.rename(lease, tomb) catch { case _: Throwable => false }
+    val won = try fs.rename(lease, tomb) catch { case NonFatal(_) => false }
     if (won) fs.delete(tomb, false)
     won
   }

@@ -1,14 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 import graft.sources.Sources
 
-/** Sequential medallion pipeline runner with retry (O1/O2, SURVEY.md §2.12):
-  * the reference's Step Functions DAG (extract → silver → gold, ref
+/** Medallion pipeline runner with retry (O1/O2, SURVEY.md §2.12): the
+  * reference's Step Functions DAG (extract → silver → gold, ref
   * stepfunctions.tf:8–226) with its 3-attempt / 2×-backoff retry policy
-  * (ref stepfunctions.tf:17–22), as ordinary sequential Scala.
+  * (ref stepfunctions.tf:17–22), as ordinary Scala. The stages run in
+  * order; the tables within a stage are independent of each other and run
+  * concurrently ([[concurrently]]).
   *
   * Layering composes through the filesystem exactly like the reference's
   * S3 buckets: each stage writes `$out/<layer>/<table>.parquet` and the next
@@ -40,6 +42,57 @@ object Pipeline {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Run independent units of work at once and return their results in
+    * input order. At small scale a table write is one or two Spark jobs
+    * that leave most cores idle, so a stage that ran its writes one after
+    * another paid the sum of their driver latencies; run together it pays
+    * about the slowest one.
+    *
+    * Each unit gets a fresh daemon thread named `graft-<tag>-<name>`, not
+    * a pool: a new thread inherits the caller's Spark local properties
+    * (job group, scheduler pool, tracing span), while a pooled thread
+    * keeps those of whichever thread created it. Admission is unbounded;
+    * callers pass one stage's tables, about a dozen units at most.
+    *
+    * Every thread is joined before this returns or throws, even if the
+    * caller is interrupted mid-join: nothing a unit writes can outlive the
+    * call (a writer lease around it stays held until the units are done).
+    * After the drain an interrupt is re-asserted on the caller and thrown
+    * as an `InterruptedException`, so the next stage never starts; else
+    * the first failure in input order is rethrown. Any other failures are
+    * suppressed on the one thrown. */
+  def concurrently[T](tag: String, units: Seq[(String, () => T)]): Seq[T] = {
+    val results = new Array[Any](units.size)
+    val failures = new Array[Throwable](units.size)
+    val threads = units.zipWithIndex.map { case ((name, unit), i) =>
+      val t = new Thread(() =>
+        // Throwable, not NonFatal: nothing is swallowed, every failure is
+        // rethrown on the caller's thread below.
+        try results(i) = unit() catch { case e: Throwable => failures(i) = e },
+        s"graft-$tag-$name")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) {
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true }
+      }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val interrupt =
+      if (interrupted) Seq(new InterruptedException(s"interrupted joining $tag"))
+      else Nil
+    (interrupt ++ failures.filter(_ != null)) match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => results.toSeq.asInstanceOf[Seq[T]]
+    }
+  }
+
   /** Full bronze→silver→gold run from a testdata dir into `$out/...`.
     * Returns the per-stage names executed (for the smoke test). */
   def run(spark: SparkSession, sfDir: String, out: String,
@@ -58,7 +111,7 @@ object Pipeline {
     * bronze_ingestion_script.py:60–61). One table routes through CSV to
     * exercise the S8 reader on real pipeline data. */
   def bronze(spark: SparkSession, sfDir: String, out: String): Unit =
-    Tables.names.foreach { t =>
+    concurrently("bronze", Tables.names.map { t => t -> { () =>
       val df = t match {
         // events: ns→µs timestamp normalization happens at ingest
         case "events" => Tables.events(spark, sfDir)
@@ -69,7 +122,7 @@ object Pipeline {
         case other => Tables.raw(spark, sfDir, other)
       }
       df.write.mode("overwrite").parquet(s"$out/bronze/$t.parquet")
-    }
+    }})
 
   /** Silver: schema enforce + validate + dedup per table (ref
     * transformations_script.py:147–181). Returns per-table
@@ -79,7 +132,7 @@ object Pipeline {
     * per table (transformations_script.py:171) with separate count()
     * actions; at 100 TB a second pass per table is a second full scan. */
   def silver(spark: SparkSession, out: String): Map[String, (Long, Long)] =
-    Tables.names.map { t =>
+    concurrently("silver", Tables.names.map { t => t -> { () =>
       val obsIn = Observation(s"silver_in_$t")
       val obsOut = Observation(s"silver_out_$t")
       val raw = Tables.raw(spark, s"$out/bronze", t)
@@ -93,18 +146,22 @@ object Pipeline {
         .observe(obsOut, count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$out/silver/$t.parquet")
       t -> (obsIn.get("n").asInstanceOf[Long], obsOut.get("n").asInstanceOf[Long])
-    }.toMap
+    }}).toMap
 
   /** Gold: star-schema builders over the silver layer, fact partitioned by
     * year/month, dims unpartitioned (ref gold_data_curation_script.py). */
   def gold(spark: SparkSession, out: String): Unit = {
     val silverDir = s"$out/silver"
-    Gold.writePartitioned(Gold.factOrders(spark, silverDir), s"$out/gold/fact_orders")
-    Gold.writeDim(Gold.dimDate(spark, silverDir), s"$out/gold/dim_date")
-    Gold.writeDim(Gold.dimCustomer(spark, silverDir), s"$out/gold/dim_customer")
-    Gold.writeDim(Gold.dimRegionNation(spark, silverDir), s"$out/gold/dim_region_nation")
-    Gold.writeDim(Gold.dimPart(spark, silverDir), s"$out/gold/dim_part")
-    Gold.writeDim(Gold.dimReview(spark, silverDir), s"$out/gold/dim_review")
-    Gold.writeDim(Gold.dimDispute(spark, silverDir), s"$out/gold/dim_dispute")
+    def dim(name: String, build: (SparkSession, String) => DataFrame) =
+      name -> (() => Gold.writeDim(build(spark, silverDir), s"$out/gold/$name"))
+    concurrently("gold", Seq(
+      "fact_orders" -> (() => Gold.writePartitioned(
+        Gold.factOrders(spark, silverDir), s"$out/gold/fact_orders")),
+      dim("dim_date", Gold.dimDate),
+      dim("dim_customer", Gold.dimCustomer),
+      dim("dim_region_nation", Gold.dimRegionNation),
+      dim("dim_part", Gold.dimPart),
+      dim("dim_review", Gold.dimReview),
+      dim("dim_dispute", Gold.dimDispute)))
   }
 }

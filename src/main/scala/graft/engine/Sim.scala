@@ -507,40 +507,17 @@ object Sim {
     // The two frozen training artifacts are independent of each other
     // (centroids read only `e`, the codebook only `base`) and both must
     // exist before the cell write reads them back — overlap the two
-    // small write jobs (guide §2.6) instead of paying their driver
-    // latencies back-to-back; failures stay loud via join.
-    val failures =
-      new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val writes = Seq[(String, () => Unit)](
+    // small write jobs (guide §2.6) through the shared fan-out,
+    // [[Pipeline.concurrently]], instead of paying their driver latencies
+    // back-to-back. It joins both writers before returning or throwing,
+    // even on an interrupt, so the lease is never released while one of
+    // them still writes (a later writer could overlap it).
+    Pipeline.concurrently("ivfpq-build", Seq[(String, () => Unit)](
       "centroids" -> (() => strideCentroids(e, avoid).write.mode("overwrite")
         .parquet(s"$indexDir/centroids")),
       "codebook" -> (() => pqCodebookOf(
           base.select(col("vec_id"), col("embedding")))
-        .write.mode("overwrite").parquet(s"$indexDir/codebook"))
-    ).map { case (tag, w) =>
-      val t = new Thread(() =>
-        try w() catch { case e: Throwable => failures.add(e) },
-        s"ivfpq-build-$tag")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    // An interrupt mid-join must NOT let the lease release while the
-    // daemon writers are still writing (a later writer could overlap
-    // them): re-join in a finally so the threads are always drained
-    // before control leaves the lease scope (r15 ADVICE).
-    try writes.foreach(_.join())
-    finally {
-      var interrupted = false
-      writes.foreach { t =>
-        while (t.isAlive) {
-          try t.join()
-          catch { case _: InterruptedException => interrupted = true }
-        }
-      }
-      if (interrupted) Thread.currentThread().interrupt()
-    }
-    if (!failures.isEmpty) throw failures.peek()
+        .write.mode("overwrite").parquet(s"$indexDir/codebook"))))
     writePqCells(e, indexDir, increment = 0L) // re-enters the root lease
   }
 

@@ -235,38 +235,15 @@ object V2Demo {
 
   // ------------------------------------------------------- the pipeline
 
-  /** Run independent per-table jobs of ONE stage concurrently — the
-    * stage's tables have no cross-dependencies and its jobs are mostly
-    * 1-task (single-file CSV writes/reads), i.e. LATENCY-bound with
-    * idle cores, which made the sequential form the prewarm wall's
-    * ×100 critical path (666 s while the 16 other lineages packed into
-    * ~215 s — SCALE_r14 §4). Stage BARRIERS are unchanged ([[ensure]]
-    * still runs fixtures → bronze → silver → gold sequentially); the
-    * first per-table failure rethrows after the join, so a silver
-    * enum violation still aborts the stage loudly. */
-  private def perTable(tag: String, work: Seq[(String, () => Unit)]): Unit = {
-    val failures =
-      new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = work.map { case (name, w) =>
-      val t = new Thread(() =>
-        try w() catch { case e: Throwable => failures.add(e) },
-        s"v2-$tag-$name")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    threads.foreach(_.join())
-    if (!failures.isEmpty) throw failures.peek()
-  }
-
   /** Land the fixtures as CSV — real headers, quoting, embedded newlines.
     * Timestamps are written as `yyyy-MM-dd HH:mm:ss` text (the reference
     * CSVs' shape); bronze parses them back under the declared schema. */
   def writeCsvFixtures(spark: SparkSession, dir: String,
       root: String): Unit =
-    perTable("fixtures", fixtures(spark, dir).map { case (name, df) =>
-      name -> (() => csvOf(df, root, name))
-    })
+    Pipeline.concurrently("v2-fixtures",
+      fixtures(spark, dir).map { case (name, df) =>
+        name -> (() => csvOf(df, root, name))
+      })
 
   private def csvOf(df: DataFrame, root: String, name: String): Unit = {
     val out = df.schema.fields.foldLeft(df) { (d, f) =>
@@ -354,7 +331,7 @@ object V2Demo {
   /** Bronze: CSV → parquet per table under the declared schema (ref
     * bronze_ingestion_script.py's land-as-is stage, S8 reader). */
   def bronze(spark: SparkSession, root: String): Unit =
-    perTable("bronze", schemas.keys.toSeq.sorted.map { t =>
+    Pipeline.concurrently("v2-bronze", schemas.keys.toSeq.sorted.map { t =>
       t -> (() => bronzeOf(spark, root, t))
     })
 
@@ -362,7 +339,7 @@ object V2Demo {
     * transformations stage). A non-empty violation set aborts the stage
     * — the V3 error channel. */
   def silver(spark: SparkSession, root: String): Unit =
-    perTable("silver", schemas.keys.toSeq.sorted.map { t =>
+    Pipeline.concurrently("v2-silver", schemas.keys.toSeq.sorted.map { t =>
       t -> (() => silverOf(spark, root, t))
     })
 
@@ -433,7 +410,7 @@ object V2Demo {
         dayofweek(col("date")).as("day_of_week"),
         dayofweek(col("date")).isin(1, 7).as("is_weekend"))
       .write.mode("overwrite").parquet(s"$root/gold/dim_date")))
-    perTable("gold", writes)
+    Pipeline.concurrently("v2-gold", writes)
   }
 
   // -------------------------------------------------- staged runner
@@ -452,16 +429,20 @@ object V2Demo {
       // only gold joins across silver tables. One barrier instead of
       // three: wall = max(per-table chain) + gold, where the stage-
       // barrier form paid max(fixtures) + max(bronze) + max(silver).
-      // Retry stays per unit of work (one table's chain, then gold),
-      // and every write is an overwrite, so a retried chain replaces
-      // itself — the same idempotence the stage form had.
-      perTable("chain", fixtures(spark, dir).map { case (t, df) =>
-        t -> (() => Pipeline.retry() {
-          csvOf(df, root, t)
-          bronzeOf(spark, root, t)
-          silverOf(spark, root, t)
+      // The chains run through the shared fan-out,
+      // [[Pipeline.concurrently]]; the first failed chain rethrows after
+      // every chain has finished, so a silver enum violation still
+      // aborts loudly. Retry stays per unit of work (one table's chain,
+      // then gold), and every write is an overwrite, so a retried chain
+      // replaces itself — the same idempotence the stage form had.
+      Pipeline.concurrently("v2-chain",
+        fixtures(spark, dir).map { case (t, df) =>
+          t -> (() => Pipeline.retry() {
+            csvOf(df, root, t)
+            bronzeOf(spark, root, t)
+            silverOf(spark, root, t)
+          })
         })
-      })
       Pipeline.retry()(gold(spark, root))
       root
     })

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{CurationLoop, Dedup, Pipeline, Tables}
@@ -25,6 +30,74 @@ class PipelineSpec extends SparkSpecBase {
       }
     }
     assert(calls == 3)
+  }
+
+  test("concurrently: results in input order, every unit drained before " +
+      "a failure or an interrupt reaches the caller, local properties " +
+      "inherited") {
+    // 1. results come back in input order although the units finish in
+    // reverse order
+    val order = Pipeline.concurrently("order", (0 until 5).map { i =>
+      s"u$i" -> (() => { Thread.sleep((5 - i) * 20L); i })
+    })
+    assert(order == (0 until 5))
+
+    // 2. a failure is rethrown only after every other unit has finished:
+    // the original exception, each other failure suppressed on it
+    val slowDone = new AtomicInteger()
+    val boom = intercept[IllegalStateException] {
+      Pipeline.concurrently[Unit]("fail", Seq(
+        "slow1" -> (() => { Thread.sleep(300); slowDone.incrementAndGet() }),
+        "first" -> (() => throw new IllegalStateException("boom")),
+        "second" -> (() => { Thread.sleep(50); sys.error("also") }),
+        "slow2" -> (() => { Thread.sleep(200); slowDone.incrementAndGet() })))
+    }
+    assert(slowDone.get == 2, "a unit was still running at the throw")
+    assert(boom.getMessage == "boom")
+    assert(boom.getSuppressed.toSeq.map(e => (e.getClass, e.getMessage)) ==
+      Seq((classOf[RuntimeException], "also")))
+
+    // 3. a local property the caller set is visible inside every unit
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.test.prop", "caller")
+    val seen =
+      try Pipeline.concurrently("props", (0 until 3).map { i =>
+        s"u$i" -> (() => sc.getLocalProperty("graft.test.prop"))
+      })
+      finally sc.setLocalProperty("graft.test.prop", null)
+    assert(seen == Seq.fill(3)("caller"))
+
+    // 4. an interrupt mid-join returns only after every unit finished,
+    // with the caller's interrupt flag set. The units are held until the
+    // interrupt has been delivered and some time has passed.
+    val started = new CountDownLatch(3)
+    val release = new CountDownLatch(1)
+    val finished = new AtomicInteger()
+    @volatile var outcome: Option[(Throwable, Int, Boolean)] = None
+    val caller = new Thread(() => {
+      val thrown =
+        try {
+          Pipeline.concurrently[Unit]("interrupt", (0 until 3).map { i =>
+            s"u$i" -> (() => {
+              started.countDown(); release.await(); finished.incrementAndGet()
+            })
+          })
+          null
+        } catch { case e: Throwable => e }
+      outcome = Some((thrown, finished.get,
+        Thread.currentThread().isInterrupted))
+    })
+    caller.start()
+    assert(started.await(30, TimeUnit.SECONDS))
+    caller.interrupt()
+    Thread.sleep(200)
+    release.countDown()
+    caller.join(30000)
+    val (thrown, doneAtReturn, flagSet) =
+      outcome.getOrElse(fail("the caller did not return"))
+    assert(thrown.isInstanceOf[InterruptedException])
+    assert(doneAtReturn == 3, "returned before every unit finished")
+    assert(flagSet, "the interrupt must be re-asserted on the caller")
   }
 
   test("silver observe() metrics account rows without extra passes") {
@@ -536,6 +609,43 @@ class PipelineSpec extends SparkSpecBase {
     assert(spark.read.parquet(s"$out/gold/dim_date").count() == 2557)
     assert(spark.read.parquet(s"$out/gold/dim_review")
       .filter(col("review_id").isNull).count() == 0)
+
+    // silver's table writes overlap: rerun it (every write is an
+    // overwrite) under a listener that tracks how many of its jobs are
+    // open at once. Jobs are told apart by a local property, which the
+    // per-table threads inherit; a sentinel job submitted after silver
+    // returns arrives on the listener bus after every silver event.
+    val sc = spark.sparkContext
+    val key = "graft.test.stage"
+    var open, maxOpen = 0
+    val silverJobs = scala.collection.mutable.Set.empty[Int]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case "silver" =>
+            silverJobs += e.jobId
+            open += 1
+            maxOpen = maxOpen max open
+          case "sentinel" => drained.countDown()
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (silverJobs.contains(e.jobId)) open -= 1
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "silver")
+      Pipeline.silver(spark, out)
+      sc.setLocalProperty(key, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus not drained")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(silverJobs.size >= Tables.names.size)
+    assert(maxOpen >= 2, s"silver ran its ${silverJobs.size} jobs one at a time")
   }
 
   test("v2 parity demo: the reference's 13-table schema runs CSV -> " +
