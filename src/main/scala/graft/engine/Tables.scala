@@ -27,6 +27,11 @@ import org.apache.spark.sql.functions.{expr, timestamp_micros}
   */
 object Tables {
 
+  /** Input bytes per [[spread]] partition: 64 KB, low because the
+    * consumers are CPU-heavy per byte (minhash/shingle hashing, vector
+    * math). */
+  private val SPREAD_TARGET_BYTES = 64L << 10
+
   /** The local testdata tables are single parquet files → one input split,
     * which would serialize CPU-heavy downstream projections (hashing,
     * vector math). Spread across the cores first. At cluster scale the
@@ -37,23 +42,19 @@ object Tables {
     *
     * r16 (guide §2.2, the r15 buildSession argument applied to the batch
     * operators): the fan-out count is SIZE-DERIVED, not the host's core
-    * count — one partition per `graft.spread.targetBytes` of the input's
-    * optimizer-estimated bytes (default 64 KB — low because the consumers
-    * are CPU-heavy per byte: minhash/shingle hashing, vector math),
-    * capped at defaultParallelism (exactly today's value, so the ×100
+    * count — one partition per [[SPREAD_TARGET_BYTES]] of the input's
+    * optimizer-estimated bytes, capped at defaultParallelism (exactly
+    * today's value, so the ×100
     * corpus and any real cluster see the IDENTICAL fan-out as before —
     * only the small-data regime stops paying 32 tasks per downstream
     * stage to process a few thousand rows). Unknown stats (non-scan
     * inputs) hit the cap, i.e. the pre-r16 behavior. */
   private[engine] def spread(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val cap = sc.defaultParallelism
-    val target = df.sparkSession.conf
-      .get("graft.spread.targetBytes", (64L << 10).toString).toLong
+    val cap = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n =
       if (bytes <= 0 || bytes >= BigInt(Long.MaxValue)) cap
-      else math.min((bytes / target + 1).toLong, cap.toLong).toInt
+      else math.min((bytes / SPREAD_TARGET_BYTES + 1).toLong, cap.toLong).toInt
     df.repartition(n)
   }
 

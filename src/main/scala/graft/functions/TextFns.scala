@@ -129,13 +129,15 @@ object TextFns {
   def winnowHashes(text: Column, k: Int, w: Int): Column =
     TextHashExprs.winnowHashes(text, k, w)
 
-  /** Higher-order-function form of [[winnowHashes]] (spec twin). */
-  def winnowHashesFold(text: Column, k: Int, w: Int): Column = {
-    val g = charGramHashesFold(text, k)
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(g) - (w - 1), lit(1))),
-      i => array_min(slice(g, i, lit(w)))))
-  }
+  /** Higher-order-function form of [[winnowHashes]] (spec twin). The
+    * gram array is bound once through a one-element `transform`: a
+    * Column is an expression tree, so naming `g` inside the window
+    * lambda would recompute every gram hash for every window (O(n²·k)). */
+  def winnowHashesFold(text: Column, k: Int, w: Int): Column =
+    element_at(transform(array(charGramHashesFold(text, k)), g =>
+      array_distinct(transform(
+        sequence(lit(1), greatest(size(g) - (w - 1), lit(1))),
+        i => array_min(slice(g, i, lit(w)))))), 1)
 
   /** Exact Jaccard of two distinct-hash arrays (verify step for LSH
     * candidates): one integer ratio → one IEEE division, identical both

@@ -218,10 +218,8 @@ object AsOfStream {
     * matches nothing (no click carries key −1) and emits nothing (refs
     * never emit). */
   def streamAsOfProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = EventsStream.prewarmSiblings(spark, dir, except = "asof")
     val out = asofProbeState.computeIfAbsent(dir, _ =>
       runAsOfLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("direction").cast("string").as("direction"),
         col("k").as("user_id"), col("id").as("click_id"),
@@ -268,10 +266,8 @@ object AsOfStream {
     * the probe's slice index — pinning both the per-batch broadcast
     * as-of result AND the batch-keyed exactly-once landing. */
   def streamAsOfSinkProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = EventsStream.prewarmSiblings(spark, dir, except = "asink")
     val out = asofSinkProbeState.computeIfAbsent(dir, _ =>
       runAsOfSinkLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("event_id"), col("nk"), col("rate_id"),
         col("batch").cast("long").as("batch"))

@@ -147,10 +147,8 @@ object DedupStream {
     * must land in (and only in) the micro-batch that delivered its
     * later-arriving member. */
   def streamNearDupProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = EventsStream.prewarmSiblings(spark, dir, except = "neardup")
     val out = probeState.computeIfAbsent(dir, _ =>
       runNearDupLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
         col("batch").cast("long").as("batch"))

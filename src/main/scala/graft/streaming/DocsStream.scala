@@ -198,10 +198,8 @@ object DocsStream {
     * order cannot matter) and in-slice duplicates are identical rows
     * (whichever arrives first, the emitted row is byte-identical). */
   def streamCuratedProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = EventsStream.prewarmSiblings(spark, dir, except = "curated")
     val (_, out, _) = streamProbeState.computeIfAbsent(dir, _ =>
       runCuratedLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("doc_id"), col("lang"), col("source"), col("content_hash"),
         col("batch").cast("long").as("batch"))

@@ -66,9 +66,7 @@ object DriftStream {
   def streamDriftCellsProbe(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val warm = EventsStream.prewarmSiblings(spark, dir, except = "dcells")
     val out = probeState.computeIfAbsent(dir, _ => runDriftLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("batch").cast("long").as("batch"), col("cent_id"),
         col("n"), col("s_fp6"))

@@ -154,6 +154,17 @@ object EventsStream {
   final case class SessState(lastUs: Long, nEvents: Long, nSessions: Long)
   final case class UserSessions(user_id: Long, n_events: Long, n_sessions: Long)
 
+  /** Gap-based sessionization via the built-in `session_window` — the
+    * watermark-aware form: out-of-order events are buffered and merged
+    * into their session until the watermark closes it, so this one is
+    * correct for late-arriving feeds where [[sessionize]]'s carried state
+    * assumes time-ordered batches. The same 30-minute gap as the batch
+    * lag-window query; works identically in batch (StreamingSpec pins
+    * per-user window counts ≡ Kpis.eventSessions n_sessions). */
+  def sessionWindowCounts(df: DataFrame): DataFrame =
+    df.groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events"))
+
   /** Custom-state sessionization via `flatMapGroupsWithState` — the
     * streaming twin of [[graft.engine.Kpis.eventSessions]]'s lag-window
     * gaps-and-islands: per-user state carries (last event time, counts)
@@ -170,17 +181,6 @@ object EventsStream {
     * later micro-batches needs the watermark-aware built-in instead —
     * `session_window` ([[sessionWindowCounts]]), which buffers and merges
     * out-of-order events until the watermark closes the session. */
-  /** Gap-based sessionization via the built-in `session_window` — the
-    * watermark-aware form: out-of-order events are buffered and merged
-    * into their session until the watermark closes it, so this one is
-    * correct for late-arriving feeds where [[sessionize]]'s carried state
-    * assumes time-ordered batches. The same 30-minute gap as the batch
-    * lag-window query; works identically in batch (StreamingSpec pins
-    * per-user window counts ≡ Kpis.eventSessions n_sessions). */
-  def sessionWindowCounts(df: DataFrame): DataFrame =
-    df.groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-
   def sessionize(spark: SparkSession, dir: String,
       filesPerTrigger: Option[Int] = None): Dataset[UserSessions] = {
     import spark.implicits._
@@ -205,143 +205,6 @@ object EventsStream {
         })
   }
 
-  /** (out dir) of each materialized watermark replay, keyed by corpus dir
-    * — one lineage per corpus per session (the q180 contract). */
-  /** Bench-only lineage concurrency (session conf `graft.stream.prewarm`
-    * = "1", set by [[graft.Bench]]): the SIXTEEN streaming replay
-    * lineages (q180/q197/q200/q201/q202/q205/q208–q217) are
-    * INDEPENDENT one-time builds (own scratch dirs, own checkpoints;
-    * lineages over the same corpus share only the slice caches, which
-    * hand every caller ONE slicing pass), yet a sequential bench pays
-    * them back-to-back — the top of the sf0.1 wall. The first probe of
-    * the family to run kicks the other builds off on background daemon
-    * threads (the q202 device — its three direction streams already run
-    * concurrently INSIDE one query). The kicking probe JOINS the sibling threads before
-    * returning, so the whole family's cost lands inside ONE timed window
-    * (the parallel wall) instead of leaking CPU contention into whatever
-    * queries run next — the later probes then serve from their caches in
-    * ~0.1 s. Default off, so Verify, specs, and library callers keep the
-    * sequential, deterministic-cost behavior; ConcurrencySpec's parallel
-    * mix separately pins that concurrent lineage builders are safe. A
-    * background failure only clears the prewarm's head start — the timed
-    * query rebuilds synchronously. */
-  private val prewarmKicked =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  private[streaming] def prewarmSiblings(spark: SparkSession, dir: String,
-      except: String): Seq[Thread] =
-    if (spark.conf.get("graft.stream.prewarm", "0") == "1" &&
-        prewarmKicked.compareAndSet(false, true)) {
-      val family: Seq[(String, () => Unit)] = Seq(
-        // the v2 parity demo's CSV→bronze→silver→gold materialization is
-        // the same one-time-build class — fold it into the wall
-        "v2" -> (() => { graft.engine.V2Demo.ensure(spark, dir); () }),
-        // the maintained label store and term index (r15): the same
-        // build-once class as v2 — each previously landed its whole cold
-        // build (~12 s / ~3 s at sf0.1) inside whichever label-/term-
-        // family query a single-run bench reached first (q134/q139),
-        // breaking that query's cross-round series exactly the way the
-        // r12 q180 wall did. Consumers are unchanged cache serves.
-        "labels" -> (() => {
-          graft.engine.Dedup.lifecycleLabels(spark, dir); () }),
-        "tindex" -> (() => {
-          graft.engine.TermIndex.maintainedTermIndex(spark, dir); () }),
-        // under a bounded width the list order is the admission order —
-        // longest-serial builds (OPTIMIZATION_r15.md) lead so the wall's
-        // critical path starts at t=0 (LPT scheduling)
-        "asof" -> (() => { AsOfStream.streamAsOfProbe(spark, dir).count(); () }),
-        "vec" -> (() => { VecIndexStream.streamVecIndexProbe(spark, dir).count(); () }),
-        "loj" -> (() => { streamOuterJoinProbe(spark, dir).count(); () }),
-        "foj" -> (() => { streamFullOuterJoinProbe(spark, dir).count(); () }),
-        "curated" -> (() => { DocsStream.streamCuratedProbe(spark, dir).count(); () }),
-        "neardup" -> (() => { DedupStream.streamNearDupProbe(spark, dir).count(); () }),
-        "hourly" -> (() => { streamHourlyProbe(spark, dir).count(); () }),
-        "sessions" -> (() => { streamSessionsProbe(spark, dir).count(); () }),
-        "sesswin" -> (() => { streamSessionWindowsProbe(spark, dir).count(); () }),
-        "asink" -> (() => { AsOfStream.streamAsOfSinkProbe(spark, dir).count(); () }),
-        "ti" -> (() => { TermIndexStream.streamTermIndexProbe(spark, dir).count(); () }),
-        // dcells re-admitted (round 13): its r12 exclusion predates the
-        // stride-coprime fix and the frozen-baseline/loud-empty guards —
-        // the intermittent empty was the (scale-dependent) modulus
-        // arithmetic, not concurrency; re-measured green under the full
-        // wall at ×100, three consecutive runs (SCALE_r13 §wall).
-        "dcells" -> (() => { DriftStream.streamDriftCellsProbe(spark, dir).count(); () }),
-        "ivj" -> (() => { streamIntervalJoinProbe(spark, dir).count(); () }),
-        "drift" -> (() => { streamDriftProbe(spark, dir).count(); () }),
-        "dedup" -> (() => { streamDedupProbe(spark, dir).count(); () }))
-      // Admission stays UNBOUNDED on purpose (r15, measured): these
-      // builds are micro-batch-commit/IO-wait bound, not CPU bound, so a
-      // bounded width only serializes wait — the full 19-lineage wall
-      // read 14.8 s unbounded vs 19.4/16.7/24.4 s at widths 6/10/4
-      // (OPTIMIZATION_r15.md, same host, fresh JVM each).
-      family.filter(_._1 != except).map { case (tag, build) =>
-        val t = new Thread(() => {
-          // per-lineage build seconds document the wall's width-scaling:
-          // the wall is max(lineage), not sum — these lines in the bench
-          // log show which lineage sets the critical path
-          val t0 = System.nanoTime()
-          try {
-            build()
-            System.err.println(f"[prewarm] $tag built in " +
-              f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-          } catch {
-            case e: Throwable => System.err.println(
-              s"[prewarm] $tag lineage background build failed " +
-                s"(timed query will rebuild): ${e.getMessage}")
-          }
-        }, s"graft-prewarm-$tag")
-        t.setDaemon(true)
-        t.start()
-        t
-      }
-    } else Nil
-
-  /** Bench-preamble form of the wall: kick EVERY lineage build (none
-    * excepted) and join them all — run UNTIMED before the query loop,
-    * so every streaming probe's per-query number is a pure cache serve
-    * (r13; in r12 the wall landed inside whichever probe ran first and
-    * broke its cross-round series). The wall duration is reported as
-    * its own bench line via [[takePrewarmJoinWaitSec]]. */
-  def prewarmAll(spark: SparkSession, dir: String): Unit =
-    joinPrewarm(spark, prewarmSiblings(spark, dir, except = ""))
-
-  /** Seconds the kicking probe spent joining the sibling wall, for
-    * [[graft.Bench]] to read once ([[takePrewarmJoinWaitSec]]): the wall
-    * is reported as its own bench line and SUBTRACTED from the hosting
-    * query's number, so per-query series stay comparable with the
-    * pre-prewarm rounds (r12's q180 carried the whole 16-build wall). */
-  private val prewarmJoinWaitNanos =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** One-shot read of the last recorded sibling-join wait (seconds). */
-  def takePrewarmJoinWaitSec(): Double =
-    prewarmJoinWaitNanos.getAndSet(0L) / 1e9
-
-  /** Join the sibling prewarm threads with a GENEROUS total budget
-    * (`graft.stream.prewarm.joinTimeoutSec`, default 1800 s — the ×100
-    * wall runs minutes, never half an hour) instead of forever: one
-    * wedged background build (a hung processAllAvailable) must cost the
-    * kicking query its head start, not hang the whole bench. Stragglers
-    * are logged and abandoned — each lineage's OWN query still blocks on
-    * its cache entry, so nothing is silently skipped. Records the wait
-    * for [[takePrewarmJoinWaitSec]]. */
-  private[streaming] def joinPrewarm(spark: SparkSession,
-      warm: Seq[Thread]): Unit = {
-    if (warm.isEmpty) return
-    val budgetMs = spark.conf.get(
-      "graft.stream.prewarm.joinTimeoutSec", "1800").toLong * 1000L
-    val t0 = System.nanoTime()
-    val deadline = System.currentTimeMillis() + budgetMs
-    warm.foreach { t =>
-      t.join(math.max(1L, deadline - System.currentTimeMillis()))
-      if (t.isAlive) System.err.println(
-        s"[prewarm] ${t.getName} still building after ${budgetMs / 1000}s " +
-          "— abandoning the join (its own query will wait on the cache)")
-    }
-    prewarmJoinWaitNanos.addAndGet(System.nanoTime() - t0)
-    ()
-  }
-
   /** Session for the one-time lineage BUILDS (r15, guide §2.2/§2.5):
     * stateful streaming execs cannot use AQE, so the state/shuffle
     * partition count is frozen at checkpoint-create time — and a count
@@ -352,30 +215,27 @@ object EventsStream {
     * Derive the count from the INPUT SIZE instead — one partition per
     * ~32 MB of the stream's input bytes, capped at 4×cores — so the
     * replays stay scale-adaptive: kB-sized sf0.1 slices run one state
-    * partition, a ×100 corpus grows the count with the data, and a real
-    * deployment overrides via `graft.stream.statePartitions`. Only the
+    * partition and a ×100 corpus grows the count with the data. Only the
     * BUILD runs here; probes/serves stay on the caller's session, so
     * their plans and numbers are untouched. */
   private[graft] def buildSession(spark: SparkSession,
       sizePath: String): SparkSession = {
     val s2 = graft.engine.Sessions.tune(spark.newSession())
-    val n = spark.conf.getOption("graft.stream.statePartitions")
-      .map(_.toInt).getOrElse {
-        val p = new org.apache.hadoop.fs.Path(sizePath)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        // NonFatal only: an OOM or interrupt must propagate, not silently
-        // degrade to the 1-partition fallback (r15 ADVICE)
-        val bytes =
-          try fs.getContentSummary(p).getLength
-          catch { case scala.util.control.NonFatal(_) => 0L }
-        val target = bytes / (32L << 20) + 1L
-        math.min(target,
-          spark.sparkContext.defaultParallelism.toLong * 4L).toInt
-      }
+    val p = new org.apache.hadoop.fs.Path(sizePath)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // NonFatal only: an OOM or interrupt must propagate, not silently
+    // degrade to the 1-partition fallback (r15 ADVICE)
+    val bytes =
+      try fs.getContentSummary(p).getLength
+      catch { case scala.util.control.NonFatal(_) => 0L }
+    val n = math.min(bytes / (32L << 20) + 1L,
+      spark.sparkContext.defaultParallelism.toLong * 4L)
     s2.conf.set("spark.sql.shuffle.partitions", n.toString)
     s2
   }
 
+  /** (out dir) of each materialized watermark replay, keyed by corpus dir
+    * — one lineage per corpus per session (the q180 contract). */
   private[graft] val hourlyProbeState =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -394,22 +254,14 @@ object EventsStream {
     * identical cutoff to the batch aggregate — so a dropped late row, a
     * double emission, or a wrong watermark all flip hashed cells. */
   def streamHourlyProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "hourly")
     val out = hourlyProbeState.computeIfAbsent(dir, _ =>
       runHourlyLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("hour_start"), col("event_type"), col("n_events"),
         col("total_value"), col("avg_value"))
       .orderBy("hour_start", "event_type")
   }
 
-  /** Write the events table as three TIME-ORDERED slice files (thirds of
-    * the [tmin, tmax] range, pinned mtimes) under a fresh scratch dir —
-    * the deterministic-and-lossless arrival construction shared by the
-    * q200/q201 watermark replays: every batch's events are newer than
-    * every earlier watermark, so nothing is ever dropped as late. The
-    * range bounds come from two bounded scalars, never a global sort. */
   /** Slice-set cache: the time-thirds slicing of a corpus is a pure
     * function of (corpus dir, flush variant), and SEVEN replay probes
     * consume it — each lineage re-deriving its own copy cost a full
@@ -418,6 +270,12 @@ object EventsStream {
   private val sliceDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Write the events table as three TIME-ORDERED slice files (thirds of
+    * the [tmin, tmax] range, pinned mtimes) under a fresh scratch dir —
+    * the deterministic-and-lossless arrival construction shared by the
+    * q200/q201 watermark replays: every batch's events are newer than
+    * every earlier watermark, so nothing is ever dropped as late. The
+    * range bounds come from two bounded scalars, never a global sort. */
   private[streaming] def writeTimeSlices(spark: SparkSession, dir: String,
       tag: String, flushHeartbeat: Boolean = false,
       flushTypes: Seq[String] = Nil): String = {
@@ -545,10 +403,8 @@ object EventsStream {
     * dropped batch, stale state after replay, a wrong fold order, or an
     * update emitted from the wrong micro-batch all flip hashed cells. */
   def streamSessionsProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "sessions")
     val out = sessionsProbeState.computeIfAbsent(dir, _ =>
       runSessionsLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .groupBy(col("user_id"))
       .agg(
@@ -604,10 +460,8 @@ object EventsStream {
     * row, a double emission, or wrong gap arithmetic all flip hashed
     * cells. */
   def streamSessionWindowsProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "sesswin")
     val out = sessionWindowsProbeState.computeIfAbsent(dir, _ =>
       runSessionWindowsLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .filter(col("user_id") >= 0) // drop the key-−1 flush heartbeat
       .select(col("user_id"), col("session_start"), col("session_end"),
@@ -661,10 +515,8 @@ object EventsStream {
     * buffered across the slice boundary. A lost buffer row, an eager or
     * repeated emission, or wrong watermark eviction all flip cells. */
   def streamIntervalJoinProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "ivj")
     val out = intervalJoinProbeState.computeIfAbsent(dir, _ =>
       runIntervalJoinLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         unix_micros(col("click_ts")).as("click_us"),
@@ -707,10 +559,8 @@ object EventsStream {
     * what complete mode means — and what makes the landing trivially
     * idempotent under retry); the oracle checks the final state. */
   def streamDriftProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "drift")
     val out = driftProbeState.computeIfAbsent(dir, _ =>
       runDriftLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("event_type"), col("bucket"), col("n"))
       .orderBy("event_type", "bucket")
@@ -751,10 +601,8 @@ object EventsStream {
     * state forever. The twin is the plain batch LEFT interval join, no
     * cutoff clause. */
   def streamOuterJoinProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "loj")
     val out = outerJoinProbeState.computeIfAbsent(dir, _ =>
       runOuterJoinLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .filter(col("user_id") >= 0) // drop the key-−1 flush pair
       .select(col("click_id"), col("purchase_id"), col("user_id"),
@@ -798,10 +646,8 @@ object EventsStream {
     * its own timestamp on the click watermark). Same two-row flush
     * heartbeat as q216; twin = the plain batch FULL join. */
   def streamFullOuterJoinProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "foj")
     val out = fullOuterJoinProbeState.computeIfAbsent(dir, _ =>
       runFullOuterJoinLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .filter(coalesce(col("user_id"), lit(0L)) >= 0 &&
         coalesce(col("purchase_id"), lit(0L)) >= 0) // drop flush rows
@@ -866,10 +712,8 @@ object EventsStream {
     * duplicate leaking through, a first arrival suppressed, or an
     * emission from the wrong batch all flip hashed cells. */
   def streamDedupProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = prewarmSiblings(spark, dir, except = "dedup")
     val out = dedupProbeState.computeIfAbsent(dir, _ =>
       runDedupLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(out)
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("value"),

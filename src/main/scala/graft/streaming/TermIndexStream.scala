@@ -77,9 +77,7 @@ object TermIndexStream {
     * row landing twice (n_docs/avg-len skew every score), or a
     * compaction that dropped/duplicated postings all hash-mismatch. */
   def streamTermIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val warm = EventsStream.prewarmSiblings(spark, dir, except = "ti")
     val idx = probeState.computeIfAbsent(dir, _ => runIngestLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     TermIndex.probeTermIndex(spark, ST_TERMS, idx, TextOps.RETRIEVAL_TOP_K)
   }
 

@@ -119,10 +119,8 @@ object VecIndexStream {
     * hash-mismatch. */
   def streamVecIndexProbe(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val warm = EventsStream.prewarmSiblings(spark, dir, except = "vec")
     val resDir = probeState.computeIfAbsent(dir, _ =>
       runVecLineage(spark, dir))
-    EventsStream.joinPrewarm(spark, warm)
     spark.read.parquet(resDir)
       .select(col("probe_id"), col("rank"), col("neighbor_id"),
         col("cosine"))

@@ -8,7 +8,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 /** The mains' contracts on two synthetic queries (no registry query
-  * runs): Bench and Verify record a throwing query as data, one
+  * runs): Bench and Verify record a throwing query (and Bench a failed
+  * preamble build) as data, one
   * `SPARK_GRAFT_ONLY` rule selects for both, and the registry rejects a
   * duplicated name. */
 class EntryPointsSpec extends SparkSpecBase {
@@ -41,6 +42,26 @@ class EntryPointsSpec extends SparkSpecBase {
     assert(compact.get("n_queries").asInt == 1)
     assertBoomListed(full.get("failed"))
     assertBoomListed(compact.get("failed"))
+  }
+
+  test("Bench.prewarm lists a failed build as prewarm after the others finish") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pre = Bench.prewarm(Seq(
+      "slow" -> (() => { Thread.sleep(300); slowDone.set(true) }),
+      "bad" -> (() => throw new IllegalStateException("no lineage"))))
+    assert(slowDone.get)
+    assert(pre.failed == Seq(QueryFailure("prewarm",
+      "java.lang.IllegalStateException", "no lineage")))
+    assert(pre.prewarmWallS >= 0.3)
+    val result = pre.copy(times = Bench.run(spark, sf, Seq(ok)).times)
+    val Seq(full, compact) = result.jsonLines(sf).map(parse)
+    for (line <- Seq(full, compact)) {
+      assert(line.get("prewarm_wall_s").asDouble == pre.prewarmWallS)
+      assert(line.get("prewarm_host").asText == "preamble")
+      assert(line.get("failed").get(0).get("name").asText == "prewarm")
+    }
+    assert(result.total == result.times.head._2 + pre.prewarmWallS)
+    assert(compact.get("total_s").asDouble == result.total)
   }
 
   test("Verify.dump writes the good result, failed.json and oracle_sql.json") {
