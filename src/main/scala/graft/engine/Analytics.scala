@@ -111,6 +111,7 @@ object Analytics {
         col("p_size").cast("long").as("size"))
     val best = p.groupBy(col("price_cents"))
       .agg(max(col("size")).as("size"))
+    // unpartitioned window, bounded by distinct price_cents (a price domain)
     val w = Window.orderBy(col("price_cents"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val frontier = best

@@ -157,7 +157,7 @@ object IndexMaintenance {
     // would block every writer with no named holder to verify dead.
     try restamp(fs, lease, stamp) catch {
       case e: Throwable =>
-        try fs.delete(lease, false) catch { case _: Throwable => () }
+        try fs.delete(lease, false) catch { case NonFatal(x) => e.addSuppressed(x) }
         throw e
     }
     val hbMs = spark.conf.get("graft.lease.heartbeatMs",

@@ -16,6 +16,14 @@ object Sessions {
 
   /** Apply the session-wide settings every entry point needs.
     *
+    *  - [[LocalFiles]]: the `file:` filesystem that creates files and
+    *    directories and reads links without forking `chmod`/`readlink`.
+    *    It is set on the SparkContext's Hadoop configuration and is
+    *    JVM-wide in effect, because Hadoop caches one FileSystem per scheme.
+    *    It must come before the first `spark.conf.set`: that call builds the
+    *    session's SharedState, which creates and caches the `file:`
+    *    FileSystem. A `file:` FileSystem cached earlier in the JVM keeps the
+    *    stock class; that costs speed only, never results.
     *  - `Locale.US`: month/day names from `date_format("MMMM"/"EEEE")` must
     *    match DuckDB's English `monthname()`/`dayname()` regardless of the
     *    container locale (build.sbt additionally pins -Duser.language=en for
@@ -30,6 +38,7 @@ object Sessions {
     *    (SURVEY.md §7 risk 5).
     */
   def tune(spark: SparkSession): SparkSession = {
+    LocalFiles.install(spark.sparkContext.hadoopConfiguration)
     Locale.setDefault(Locale.US)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

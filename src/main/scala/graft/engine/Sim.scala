@@ -481,6 +481,7 @@ object Sim {
       base.filter(col("vec_id") % PQ_STRIDE === 0 &&
           col("vec_id") < PQ_K * PQ_STRIDE)
         .select(col("vec_id"), col("embedding"))
+        // unpartitioned window, bounded by PQ_K rows (the filter above)
         .withColumn("j", (row_number().over(
           Window.orderBy("vec_id")) - 1).cast("int"))
         .select(col("j"), col("embedding")),

@@ -878,6 +878,7 @@ object TextOps {
       .agg(sum("base").as("sum_base"))
       .select((lit(EVAL_N) - col("sum_base")).as("extra"))
     val quotas = based.crossJoin(broadcast(seats))
+      // unpartitioned window, bounded by |langs| (one row per language)
       .withColumn("rr", row_number().over(
         Window.orderBy(col("rem").desc, col("lang"))).cast("long"))
       .select(col("lang"), col("n_docs"),
