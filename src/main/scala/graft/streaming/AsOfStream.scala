@@ -25,22 +25,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Delivery is exactly-once under micro-batch retry: each batch lands
   * under its own `batch=<id>` partition with dynamic partition
-  * overwrite, so a replayed batch replaces itself instead of
-  * re-appending — the same batch-id-keyed idempotence device as
-  * [[DedupStream]] (StreamingSpec simulates the retry). Readers that
-  * don't care about provenance just read `outDir`; `batch` is one more
-  * hive column. */
+  * overwrite ([[Replay.landBatch]]), so a replayed batch replaces itself
+  * instead of re-appending (StreamingSpec simulates the retry). Readers
+  * that don't care about provenance just read `outDir`; `batch` is one
+  * more hive column. */
 object AsOfStream {
-
-  /** The landing half of [[asOfSink]], exposed for retry simulation:
-    * idempotent per (batchId, outDir). */
-  private[graft] def landAsOf(enriched: DataFrame, batchId: Long,
-      outDir: String): Unit =
-    enriched
-      .withColumn("batch", org.apache.spark.sql.functions.lit(batchId))
-      .write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(outDir)
 
   // ---- stream-STREAM as-of: both sides unbounded ----
 
@@ -237,7 +226,7 @@ object AsOfStream {
     // them CONCURRENTLY and drain each: wall cost ≈ the slowest run
     // instead of the sum (each run is micro-batch-scheduling-bound, not
     // CPU-bound, so they overlap almost perfectly)
-    val bs = EventsStream.buildSession(spark, s"$dir/events.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/events.parquet")
     val qs = Seq("backward", "forward", "nearest").map { d =>
       val ckpt = IndexMaintenance.scratchIndexDir(spark, s"stream-asof-ckpt-$d")
       clickPurchaseAsOf(bs, inDir, Some(SS_TOL_US), d,
@@ -246,7 +235,7 @@ object AsOfStream {
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          landAsOf(batch, batchId, s"$outDir/direction=$d")
+          Replay.landBatch(batch, batchId, s"$outDir/direction=$d")
         }
         .start()
     }
@@ -279,7 +268,7 @@ object AsOfStream {
     val inDir = EventsStream.writeTimeSlices(spark, dir, "stream-asink")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-asink-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-asink-ckpt")
-    val bs = EventsStream.buildSession(spark, s"$dir/events.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/events.parquet")
     val probe = EventsStream.readEvents(bs, inDir, filesPerTrigger = Some(1))
       .select(col("event_id"),
         (col("user_id") % Kpis.RATE_NATIONS).as("nk"), col("ts"))
@@ -305,7 +294,7 @@ object AsOfStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landAsOf(
+        Replay.landBatch(
           graft.plans.AsOf.joinMulti(batch, reference, keys,
             leftTime, rightTime, rightTie, direction, tolerance,
             broadcastRight = true),

@@ -157,35 +157,17 @@ object DedupStream {
 
   private def runNearDupLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.{Dedup, Tables}
-    import org.apache.hadoop.fs.Path
     val indexDir = IndexMaintenance.scratchIndexDir(spark, "stream-nd-index")
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-nd-in")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-nd-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-nd-ckpt")
     // base-index build on the size-derived session too (r15 §1)
-    val bs = EventsStream.buildSession(spark, s"$dir/documents.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/documents.parquet")
     val docs = Tables.documents(bs, dir).select("doc_id", "text")
     Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 3 === 0), indexDir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(inDir).getFileSystem(conf)
-    fs.mkdirs(new Path(inDir))
-    (1 to 2).foreach { s =>
-      val tmp = IndexMaintenance.scratchIndexDir(spark, s"stream-nd-slice$s")
-      docs.filter(col("doc_id") % 3 === s)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-      val dst = new Path(s"$inDir/slice-$s.parquet")
-      fs.rename(part, dst)
-      fs.delete(new Path(tmp), true)
-      // pin arrival order structurally: strictly increasing mtimes, so
-      // the file source's oldest-first scheduling is deterministic even
-      // if both writes land in the same clock tick
-      fs.setTimes(dst, 1000000L + s * 60000L, -1L)
-    }
-    val schema = bs.read.parquet(inDir).schema
-    val stream = bs.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = nearDupSink(stream, indexDir, outDir, ckpt)
+    Replay.landSlices(spark, inDir, "stream-nd",
+      (1 to 2).map(s => s -> docs.filter(col("doc_id") % 3 === s)))
+    val q = nearDupSink(Replay.sliceStream(bs, inDir), indexDir, outDir, ckpt)
     try q.processAllAvailable() finally q.stop()
     outDir
   }

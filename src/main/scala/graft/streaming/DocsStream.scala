@@ -212,21 +212,12 @@ object DocsStream {
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-in")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-ckpt")
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(inDir).getFileSystem(conf)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(inDir))
     val docs = Tables.documents(spark, dir)
-    (0 until STREAM_SLICES).foreach { s =>
+    Replay.landSlices(spark, inDir, "stream", (0 until STREAM_SLICES).map { s =>
       val slice = docs.filter(col("doc_id") % STREAM_SLICES === s)
-      val withDups = slice.unionByName(slice.filter(col("doc_id") % 7 === 0))
-      val tmp = IndexMaintenance.scratchIndexDir(spark, s"stream-slice$s")
-      withDups.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$tmp/part-*.parquet"))(0).getPath
-      fs.rename(part, new org.apache.hadoop.fs.Path(s"$inDir/slice-$s.parquet"))
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-    val bs = EventsStream.buildSession(spark, s"$dir/documents.parquet")
+      s -> slice.unionByName(slice.filter(col("doc_id") % 7 === 0))
+    })
+    val bs = Replay.buildSession(spark, s"$dir/documents.parquet")
     val q = curatedSink(bs, inDir, outDir, ckpt, filesPerTrigger = Some(1))
     try q.processAllAvailable() finally q.stop()
     compactCurated(spark, outDir)
@@ -263,10 +254,7 @@ object DocsStream {
             batch.select(col("doc_id"), col("text")), hashDir,
             excludeIncrement = inc)
           .localCheckpoint() // feeds the audit landing AND the admit join
-        verdicts.withColumn("batch", lit(inc))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
+        Replay.landBatch(verdicts, inc, outDir)
         val admitted = batch
           .join(verdicts.filter(col("verdict") === "fresh")
             .select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -327,7 +315,7 @@ object DocsStream {
   }
 
   /** [[sourceCapGate]] → lake: verdict rows land batch-keyed under
-    * dynamic overwrite ([[landScored]]'s device), so a replayed
+    * dynamic overwrite ([[Replay.landBatch]]), so a replayed
     * micro-batch replaces its own partition with the identical rows the
     * rolled-back state re-derives. */
   def sourceCapSink(docs: DataFrame, cap: Long, out: String,
@@ -337,7 +325,7 @@ object DocsStream {
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landScored(batch, batchId, out)
+        Replay.landBatch(batch, batchId, out)
       }
       .start()
 
@@ -345,16 +333,6 @@ object DocsStream {
     * pass the quality gate ([[graft.engine.TextOps.lmScore]] semantics;
     * calibrate against the reference corpus's score distribution). */
   val LM_GATE_MIN = 0.03
-
-  /** The landing half of [[lmGateSink]]: batch-keyed partition + dynamic
-    * overwrite, so a replayed micro-batch replaces its own partition —
-    * the exactly-once device every sink in this library uses. */
-  private[graft] def landScored(batch: DataFrame, batchId: Long,
-      out: String): Unit =
-    batch.withColumn("batch", lit(batchId))
-      .write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(out)
 
   /** Streaming bigram-LM quality gate — the ingest-path form of
     * [[graft.engine.TextOps.lmScore]]: the model trains ONCE on a
@@ -372,7 +350,7 @@ object DocsStream {
     * Scale shape: the model is counting-bounded at (V+1)² rows
     * (broadcast at any corpus size); no streaming state at all — the
     * gate is stateless per doc, so an unbounded feed runs at constant
-    * memory. Exactly-once under retry via [[landScored]]. */
+    * memory. Exactly-once under retry via [[Replay.landBatch]]. */
   def lmGateSink(docs: DataFrame, vocab: DataFrame, model: DataFrame,
       out: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -380,7 +358,7 @@ object DocsStream {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landScored(
+        Replay.landBatch(
           graft.engine.TextOps.lmScoreAgainst(batch, vocab, model)
             .withColumn("kept", col("lm_score") >= LM_GATE_MIN),
           batchId, out)

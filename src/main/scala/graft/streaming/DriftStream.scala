@@ -28,13 +28,9 @@ object DriftStream {
     * cell histogram lands as partition `batch=<batchId>`. */
   private[graft] def landDriftCells(batch: DataFrame, batchId: Long,
       cents: DataFrame, out: String): Unit =
-    Sim.cellHistogram(Sim.assignTo(Sim.withNorm(batch), cents))
-      .withColumn("batch", lit(batchId))
-      .coalesce(1)
-      .write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(out)
+    Replay.landBatch(
+      Sim.cellHistogram(Sim.assignTo(Sim.withNorm(batch), cents)).coalesce(1),
+      batchId, out)
 
   /** Start the drift monitor over a vector stream (needs `vec_id`,
     * `embedding`); one histogram partition lands per micro-batch. */
@@ -84,19 +80,8 @@ object DriftStream {
     val live = Tables.embeddings(spark, dir)
       .select("vec_id", "embedding")
       .filter(col("vec_id") % Sim.DRIFT_MOD === 0)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(inDir).getFileSystem(conf)
-    fs.mkdirs(new Path(inDir))
-    (0 to 1).foreach { s =>
-      val tmp = IndexMaintenance.scratchIndexDir(spark, s"stream-dc-slice$s")
-      live.filter(expr(s"(vec_id div ${Sim.DRIFT_MOD}) % 2") === s)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-      val dst = new Path(s"$inDir/slice-$s.parquet")
-      fs.rename(part, dst)
-      fs.delete(new Path(tmp), true)
-      fs.setTimes(dst, 1000000L + s * 60000L, -1L) // pinned arrival order
-    }
+    Replay.landSlices(spark, inDir, "stream-dc", (0 to 1).map(s =>
+      s -> live.filter(expr(s"(vec_id div ${Sim.DRIFT_MOD}) % 2") === s)))
     // Physically FREEZE the baseline: the monitor's contract is frozen
     // centroids, so land them once as a bounded LocalRelation
     // (≤ IVF_MAX_CELLS rows by construction — never a corpus collect)
@@ -123,17 +108,14 @@ object DriftStream {
     val frozen = frozenDf.collect()
     require(frozen.nonEmpty, "baseline centroids evaluated empty — " +
       "refusing to start the drift stream against nothing")
-    val bs = EventsStream.buildSession(spark, s"$dir/embeddings.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/embeddings.parquet")
     val cents = bs.createDataFrame(
       java.util.Arrays.asList(frozen: _*), frozenDf.schema)
-    val schema = bs.read.parquet(inDir).schema
-    val q = driftSink(
-      bs.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir),
-      cents, outDir, ckpt)
+    val q = driftSink(Replay.sliceStream(bs, inDir), cents, outDir, ckpt)
     try q.processAllAvailable() finally q.stop()
     // A lineage that landed nothing must FAIL here, not poison the
     // per-dir cache with an empty lake for every later caller.
+    val fs = new Path(outDir).getFileSystem(spark.sessionState.newHadoopConf())
     val landed = fs.listStatus(new Path(outDir))
       .map(_.getPath.getName).filter(_.startsWith("batch="))
     require(landed.nonEmpty,

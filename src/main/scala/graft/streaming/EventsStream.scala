@@ -33,8 +33,10 @@ object EventsStream {
     * data scan), declare the stream schema from what is actually there, and
     * normalize `ts` to TimestampType(µs) the same way the batch path does
     * ([[graft.engine.Tables]] events loader: nanos → exact integer `div
-    * 1000`, micros untouched). Every readStream site below goes through
-    * this one helper, so a new physical type is a one-place change. */
+    * 1000`, micros untouched). Every events-file stream in the package
+    * (here and in [[AsOfStream]]) goes through this one helper, so a new
+    * physical type is a one-place change; the other lineages' slice dirs
+    * carry no `ts` and stream through [[Replay.sliceStream]]. */
   def readEvents(spark: SparkSession, dir: String,
       filesPerTrigger: Option[Int] = None): DataFrame = {
     val physical = spark.read.parquet(dir).schema
@@ -205,35 +207,6 @@ object EventsStream {
         })
   }
 
-  /** Session for the one-time lineage BUILDS (r15, guide §2.2/§2.5):
-    * stateful streaming execs cannot use AQE, so the state/shuffle
-    * partition count is frozen at checkpoint-create time — and a count
-    * tuned to the HOST (cpus) pays `cpus` state-store commits, task
-    * launches and landed files per micro-batch regardless of data size.
-    * Measured (OPTIMIZATION_r15.md, sf0.1): the q202 backward drain is 7.4 s
-    * at 32 state partitions vs 2.8 s at 4, identical output rows.
-    * Derive the count from the INPUT SIZE instead — one partition per
-    * ~32 MB of the stream's input bytes, capped at 4×cores — so the
-    * replays stay scale-adaptive: kB-sized sf0.1 slices run one state
-    * partition and a ×100 corpus grows the count with the data. Only the
-    * BUILD runs here; probes/serves stay on the caller's session, so
-    * their plans and numbers are untouched. */
-  private[graft] def buildSession(spark: SparkSession,
-      sizePath: String): SparkSession = {
-    val s2 = graft.engine.Sessions.tune(spark.newSession())
-    val p = new org.apache.hadoop.fs.Path(sizePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // NonFatal only: an OOM or interrupt must propagate, not silently
-    // degrade to the 1-partition fallback (r15 ADVICE)
-    val bytes =
-      try fs.getContentSummary(p).getLength
-      catch { case scala.util.control.NonFatal(_) => 0L }
-    val n = math.min(bytes / (32L << 20) + 1L,
-      spark.sparkContext.defaultParallelism.toLong * 4L)
-    s2.conf.set("spark.sql.shuffle.partitions", n.toString)
-    s2
-  }
-
   /** (out dir) of each materialized watermark replay, keyed by corpus dir
     * — one lineage per corpus per session (the q180 contract). */
   private[graft] val hourlyProbeState =
@@ -263,7 +236,7 @@ object EventsStream {
   }
 
   /** Slice-set cache: the time-thirds slicing of a corpus is a pure
-    * function of (corpus dir, flush variant), and SEVEN replay probes
+    * function of (corpus dir, flush variant), and EIGHT replay probes
     * consume it — each lineage re-deriving its own copy cost a full
     * events pass per probe. Consumers read the shared files read-only;
     * checkpoints and landings stay per-probe. */
@@ -292,9 +265,7 @@ object EventsStream {
     import graft.engine.{IndexMaintenance, Tables}
     val inDir = IndexMaintenance.scratchIndexDir(spark, s"$tag-in")
     val ev = Tables.events(spark, dir)
-    val Array(tmin, tmax) = ev
-      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
+    val (tmin, tmax) = eventRangeUs(ev)
     val span = tmax - tmin + 1L
     // Exact integer division (`div`), not Column `/` (floating Divide):
     // the q201/q208/q209 twins restate this slice id with integer `//`,
@@ -320,8 +291,17 @@ object EventsStream {
           Seq(3 -> types.map(t => flushRow(ev, "INTERVAL 72 HOURS", t))
             .reduce(_ unionByName _))
         else Nil)
-    landSliceFiles(spark, inDir, tag, slices)
+    Replay.landSlices(spark, inDir, tag, slices)
     inDir
+  }
+
+  /** (min, max) event time of `ev` in exact µs: two bounded scalars from
+    * one aggregate, never a global sort. */
+  private def eventRangeUs(ev: DataFrame): (Long, Long) = {
+    val Seq(lo, hi) = ev
+      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
+      .collect()(0).toSeq.map(_.asInstanceOf[Long])
+    (lo, hi)
   }
 
   /** A single far-future reference row (key −1) whose arrival advances
@@ -335,28 +315,6 @@ object EventsStream {
       .withColumn("user_id", lit(-1L))
       .withColumn("event_id", lit(-1L))
 
-  /** Land each slice as a single parquet FILE `slice-<i>.parquet` with
-    * pinned ascending mtimes — the file source orders by mtime, so the
-    * arrival order of the replay is part of the construction, not the
-    * scheduler's choice. */
-  private def landSliceFiles(spark: SparkSession, inDir: String,
-      tag: String, slices: Seq[(Int, DataFrame)]): Unit = {
-    import graft.engine.IndexMaintenance
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(inDir).getFileSystem(conf)
-    fs.mkdirs(new Path(inDir))
-    slices.foreach { case (s, sliceDf) =>
-      val tmp = IndexMaintenance.scratchIndexDir(spark, s"$tag-slice$s")
-      sliceDf.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-      val dst = new Path(s"$inDir/slice-$s.parquet")
-      fs.rename(part, dst)
-      fs.delete(new Path(tmp), true)
-      fs.setTimes(dst, 1000000L + s * 60000L, -1L) // pinned arrival order
-    }
-  }
-
   /** The OUT-OF-ORDER replay: slices keyed by `event_id mod 3` — each
     * user's events arrive interleaved across micro-batches in
     * time-scrambled order, the adversarial case for any watermark-merge
@@ -369,15 +327,13 @@ object EventsStream {
     import graft.engine.{IndexMaintenance, Tables}
     val inDir = IndexMaintenance.scratchIndexDir(spark, s"$tag-in")
     val ev = Tables.events(spark, dir)
-    val Array(tmin, tmax) = ev
-      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
+    val (tmin, tmax) = eventRangeUs(ev)
     val spanUs = tmax - tmin
     val aheadSec = spanUs / 1000000L + 259200L // span + 72h
     val slices: Seq[(Int, DataFrame)] =
       (0 to 2).map(s => s -> ev.filter(pmod(col("event_id"), lit(3)) === s)) :+
         (3 -> flushRow(ev, s"INTERVAL $aheadSec SECONDS"))
-    landSliceFiles(spark, inDir, tag, slices)
+    Replay.landSlices(spark, inDir, tag, slices)
     (inDir, spanUs)
   }
 
@@ -416,26 +372,9 @@ object EventsStream {
   }
 
   private def runSessionsLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val inDir = writeTimeSlices(spark, dir, "stream-sess")
-    val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-sess-out")
-    val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-sess-ckpt")
-    val bs = buildSession(spark, s"$dir/events.parquet")
-    val q = sessionize(bs, inDir, filesPerTrigger = Some(1)).toDF
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // update-mode rows supersede earlier ones; batch-keyed dynamic
-        // overwrite makes the landing exactly-once under micro-batch retry
-        batch.withColumn("batch", lit(batchId))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    outDir
+    runLineage(spark, dir, "stream-sess", "update")(
+      sessionize(_, inDir, filesPerTrigger = Some(1)).toDF)
   }
 
   /** (out dir) of each materialized session-window replay, keyed by
@@ -470,34 +409,20 @@ object EventsStream {
   }
 
   private def runSessionWindowsLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val (inDir, spanUs) = writeUnorderedSlices(spark, dir, "stream-sesswin")
-    val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-sesswin-out")
-    val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-sesswin-ckpt")
     val delaySec = spanUs / 1000000L + 60L // ≥ span: scrambled rows never late
-    val bs = buildSession(spark, s"$dir/events.parquet")
-    val q = readEvents(bs, inDir, filesPerTrigger = Some(1))
-      .withWatermark("ts", s"$delaySec seconds")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("session_start"),
-        date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss")
-          .as("session_end"),
-        col("n_events"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch", lit(batchId))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    outDir
+    runLineage(spark, dir, "stream-sesswin", "append") { bs =>
+      readEvents(bs, inDir, filesPerTrigger = Some(1))
+        .withWatermark("ts", s"$delaySec seconds")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"),
+          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
+            .as("session_start"),
+          date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss")
+            .as("session_end"),
+          col("n_events"))
+    }
   }
 
   /** (out dir) of each materialized interval-join replay. */
@@ -526,24 +451,9 @@ object EventsStream {
   }
 
   private def runIntervalJoinLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val inDir = writeTimeSlices(spark, dir, "stream-ivj")
-    val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-ivj-out")
-    val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-ivj-ckpt")
-    val bs = buildSession(spark, s"$dir/events.parquet")
-    val q = clickPurchase(bs, inDir, filesPerTrigger = Some(1))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch", lit(batchId))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    outDir
+    runLineage(spark, dir, "stream-ivj", "append")(
+      clickPurchase(_, inDir, filesPerTrigger = Some(1)))
   }
 
   /** (out dir) of each materialized drift-histogram replay. */
@@ -571,7 +481,7 @@ object EventsStream {
     val inDir = writeTimeSlices(spark, dir, "stream-drift")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-drift-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-drift-ckpt")
-    val bs = buildSession(spark, s"$dir/events.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/events.parquet")
     val q = valueHistogram(bs, inDir, filesPerTrigger = Some(1))
       .writeStream
       .outputMode("complete")
@@ -612,26 +522,11 @@ object EventsStream {
   }
 
   private def runOuterJoinLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val inDir = writeTimeSlices(spark, dir, "stream-loj",
       flushTypes = Seq("purchase", "click"))
-    val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-loj-out")
-    val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-loj-ckpt")
-    val bs = buildSession(spark, s"$dir/events.parquet")
-    val q = clickPurchase(bs, inDir, filesPerTrigger = Some(1),
-        joinType = "left_outer")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch", lit(batchId))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    outDir
+    runLineage(spark, dir, "stream-loj", "append")(
+      clickPurchase(_, inDir, filesPerTrigger = Some(1),
+        joinType = "left_outer"))
   }
 
   /** (out dir) of each materialized full-outer-interval-join replay. */
@@ -659,26 +554,11 @@ object EventsStream {
   }
 
   private def runFullOuterJoinLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val inDir = writeTimeSlices(spark, dir, "stream-foj",
       flushTypes = Seq("purchase", "click"))
-    val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-foj-out")
-    val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-foj-ckpt")
-    val bs = buildSession(spark, s"$dir/events.parquet")
-    val q = clickPurchase(bs, inDir, filesPerTrigger = Some(1),
-        joinType = "full_outer")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch", lit(batchId))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    outDir
+    runLineage(spark, dir, "stream-foj", "append")(
+      clickPurchase(_, inDir, filesPerTrigger = Some(1),
+        joinType = "full_outer"))
   }
 
   /** (out dir) of each materialized streaming-dedup replay. */
@@ -723,25 +603,24 @@ object EventsStream {
 
   private def runDedupLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.{IndexMaintenance, Tables}
-    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.{FileUtil, Path}
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-dd-in")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-dd-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-dd-ckpt")
     val ev = Tables.events(spark, dir)
-    val Array(tmin, tmax) = ev
-      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
+    val (tmin, tmax) = eventRangeUs(ev)
     val delaySec = (tmax - tmin) / 1000000L + 60L
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(inDir).getFileSystem(conf)
-    landSliceFiles(spark, inDir, "stream-dd",
+    Replay.landSlices(spark, inDir, "stream-dd",
       (0 to 2).map(s => s -> ev.filter(pmod(col("event_id"), lit(3)) === s)))
     // slice 3: a byte-identical replay of slice 0, arriving last
-    fs.mkdirs(new Path(inDir))
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$inDir/slice-0.parquet"),
-      fs, new Path(s"$inDir/slice-3.parquet"), false, conf)
-    fs.setTimes(new Path(s"$inDir/slice-3.parquet"),
-      1000000L + 3 * 60000L, -1L)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(inDir).getFileSystem(conf)
+    val replayed = new Path(s"$inDir/slice-3.parquet")
+    if (!FileUtil.copy(fs, new Path(s"$inDir/slice-0.parquet"), fs, replayed,
+        false, conf))
+      throw new IllegalStateException(
+        s"q215 replay slice copy to $replayed failed")
+    fs.setTimes(replayed, Replay.arrivalMtime(3), -1L)
     // The lineage is run as a KILL-AND-RESTART pair on purpose (r11
     // verdict ask #3): the first query dies mid-run — AFTER batch 2's
     // sink write but BEFORE its commit, the worst spot — and a brand-new
@@ -751,7 +630,7 @@ object EventsStream {
     // to batch 3, so the landed lake the driver's q215 gate hashes is
     // the RESTARTED lineage — checkpoint recovery is oracle-gated on
     // every round, not demonstrated once in a spec.
-    val bs = buildSession(spark, s"$dir/events.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/events.parquet")
     def sinkQuery(killAtBatch: Long): StreamingQuery =
       readEvents(bs, inDir, filesPerTrigger = Some(1))
         .withWatermark("ts", s"$delaySec seconds")
@@ -760,10 +639,7 @@ object EventsStream {
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch", lit(batchId))
-            .write.partitionBy("batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(outDir)
+          Replay.landBatch(batch, batchId, outDir)
           if (batchId == killAtBatch) throw new SimulatedCrash
         }
         .start()
@@ -799,21 +675,30 @@ object EventsStream {
   }
 
   private def runHourlyLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val inDir = writeTimeSlices(spark, dir, "stream-hr")
-    val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-hr-out")
-    val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-hr-ckpt")
-    val bs = buildSession(spark, s"$dir/events.parquet")
-    val q = hourly(bs, inDir, filesPerTrigger = Some(1)).writeStream
-      .outputMode("append")
+    runLineage(spark, dir, "stream-hr", "append")(
+      hourly(_, inDir, filesPerTrigger = Some(1)))
+  }
+
+  /** The shared body of the events replay lineages: fresh `<tag>-out`
+    * and `<tag>-ckpt` dirs, the size-derived build session, `stream`
+    * built on it and drained to completion, each micro-batch landed
+    * through [[Replay.landBatch]]. Append-mode rows are final and
+    * update-mode rows supersede earlier ones; either way the batch-keyed
+    * landing is exactly-once under micro-batch retry. Returns the landing
+    * dir. q210 (complete mode overwrites wholesale) and q215
+    * (kill-and-restart) keep their own bodies. */
+  private def runLineage(spark: SparkSession, dir: String, tag: String,
+      outputMode: String)(stream: SparkSession => DataFrame): String = {
+    import graft.engine.IndexMaintenance
+    val outDir = IndexMaintenance.scratchIndexDir(spark, s"$tag-out")
+    val ckpt = IndexMaintenance.scratchIndexDir(spark, s"$tag-ckpt")
+    val bs = Replay.buildSession(spark, s"$dir/events.parquet")
+    val q = stream(bs).writeStream
+      .outputMode(outputMode)
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // append-mode rows are final: batch-keyed dynamic overwrite makes
-        // the landing exactly-once under micro-batch retry
-        batch.withColumn("batch", lit(batchId))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
+        Replay.landBatch(batch, batchId, outDir)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -860,10 +745,7 @@ object EventsStream {
       .outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch", lit(batchId))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(outDir)
+        Replay.landBatch(batch, batchId, outDir)
       }
       .start()
     // the rate source never ends: run until the corpus batches (0..2)

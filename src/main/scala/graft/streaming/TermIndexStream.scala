@@ -83,31 +83,17 @@ object TermIndexStream {
 
   private def runIngestLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.Tables
-    import org.apache.hadoop.fs.Path
     val indexDir = IndexMaintenance.scratchIndexDir(spark, "stream-ti-index")
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-ti-in")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-ti-ckpt")
     // base-index build on the size-derived session too (r15 §1)
-    val bs = EventsStream.buildSession(spark, s"$dir/documents.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/documents.parquet")
     val docs = Tables.documents(bs, dir).select("doc_id", "text")
     TermIndex.buildTermIndex(docs.filter(col("doc_id") % 4 === 0), indexDir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(inDir).getFileSystem(conf)
-    fs.mkdirs(new Path(inDir))
-    (1 to 3).foreach { s =>
-      val tmp = IndexMaintenance.scratchIndexDir(spark, s"stream-ti-slice$s")
-      docs.filter(col("doc_id") % 4 === s)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-      val dst = new Path(s"$inDir/slice-$s.parquet")
-      fs.rename(part, dst)
-      fs.delete(new Path(tmp), true)
-      fs.setTimes(dst, 1000000L + s * 60000L, -1L) // pinned arrival order
-    }
-    val schema = bs.read.parquet(inDir).schema
-    val stream = bs.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = indexSink(stream, indexDir, ckpt, compactEvery = 1)
+    Replay.landSlices(spark, inDir, "stream-ti",
+      (1 to 3).map(s => s -> docs.filter(col("doc_id") % 4 === s)))
+    val q = indexSink(Replay.sliceStream(bs, inDir), indexDir, ckpt,
+      compactEvery = 1)
     try q.processAllAvailable() finally q.stop()
     indexDir
   }

@@ -128,48 +128,29 @@ object VecIndexStream {
   }
 
   private def runVecLineage(spark: SparkSession, dir: String): String = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, expr}
     import graft.engine.{IndexMaintenance, Tables}
     val indexDir = IndexMaintenance.scratchIndexDir(spark, "stream-vec-index")
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-vec-in")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-vec-out")
     // the one-time base-index build is lineage-build work like the
     // stream itself: run it on the size-derived session too (r15 §1)
-    val bs = EventsStream.buildSession(spark, s"$dir/embeddings.parquet")
+    val bs = Replay.buildSession(spark, s"$dir/embeddings.parquet")
     val e = Tables.embeddings(bs, dir).select("vec_id", "embedding")
     Sim.buildIvfIndex(e.filter(col("vec_id") % Sim.ANN_DELTA_MOD =!= 0),
       indexDir, avoid = Sim.ANN_DELTA_MOD)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(inDir).getFileSystem(conf)
-    fs.mkdirs(new Path(inDir))
-    (0 to 1).foreach { s =>
-      val tmp = IndexMaintenance.scratchIndexDir(spark, s"stream-vec-slice$s")
-      e.filter(col("vec_id") % Sim.ANN_DELTA_MOD === 0 &&
-          org.apache.spark.sql.functions
-            .expr(s"(vec_id div ${Sim.ANN_DELTA_MOD}) % 2") === s)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-      val dst = new Path(s"$inDir/slice-$s.parquet")
-      fs.rename(part, dst)
-      fs.delete(new Path(tmp), true)
-      fs.setTimes(dst, 1000000L + s * 60000L, -1L) // pinned arrival order
-    }
-    val schema = bs.read.parquet(inDir).schema
-    val ingest = indexSink(
-      bs.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir),
-      indexDir, IndexMaintenance.scratchIndexDir(spark, "stream-vec-ckpt"))
+    Replay.landSlices(spark, inDir, "stream-vec", (0 to 1).map(s =>
+      s -> e.filter(col("vec_id") % Sim.ANN_DELTA_MOD === 0 &&
+        expr(s"(vec_id div ${Sim.ANN_DELTA_MOD}) % 2") === s)))
+    val ingest = indexSink(Replay.sliceStream(bs, inDir), indexDir,
+      IndexMaintenance.scratchIndexDir(spark, "stream-vec-ckpt"))
     try ingest.processAllAvailable() finally ingest.stop()
     // serve q129's probes through the REAL probe stream (one batch file)
     val probeDir = IndexMaintenance.scratchIndexDir(spark, "stream-vec-probes")
     e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("probe_id"), col("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(probeDir)
-    val pSchema = bs.read.parquet(probeDir).schema
-    val serve = probeSink(
-      bs.readStream.schema(pSchema).parquet(probeDir),
-      indexDir, outDir,
+    val serve = probeSink(Replay.sliceStream(bs, probeDir), indexDir, outDir,
       IndexMaintenance.scratchIndexDir(spark, "stream-vec-pckpt"))
     try serve.processAllAvailable() finally serve.stop()
     s"$outDir/results"
@@ -179,22 +160,15 @@ object VecIndexStream {
     * keyed (the retry unit — dynamic overwrite replaces both sinks). */
   def landProbeBatch(batch: DataFrame, indexDir: String, outDir: String,
       increment: Long, k: Int, nprobe: Int): Unit = {
-    import org.apache.spark.sql.functions.lit
     val spark = batch.sparkSession
     val (res, obs) = Sim.probeIvfIndexObserved(
       batch.select("probe_id", "embedding"), indexDir, k, nprobe)
-    res.withColumn("batch", lit(increment))
-      .write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$outDir/results")
+    Replay.landBatch(res, increment, s"$outDir/results")
     import spark.implicits._
-    Seq((obs.get("assignment_rows").asInstanceOf[Long],
-        obs.get("cells_probed").asInstanceOf[Long]))
-      .toDF("assignment_rows", "cells_probed")
-      .withColumn("batch", lit(increment))
-      .coalesce(1)
-      .write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$outDir/metrics")
+    Replay.landBatch(
+      Seq((obs.get("assignment_rows").asInstanceOf[Long],
+          obs.get("cells_probed").asInstanceOf[Long]))
+        .toDF("assignment_rows", "cells_probed").coalesce(1),
+      increment, s"$outDir/metrics")
   }
 }

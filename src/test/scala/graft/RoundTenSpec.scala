@@ -95,99 +95,6 @@ class RoundTenSpec extends SparkSpecBase {
     assert(scoredDocs == eligible)
   }
 
-  test("streamCuratedProbe: the fixed 3-batch replay lands batch " +
-      "semantics exactly once and compaction folds to batch 0") {
-    import graft.streaming.DocsStream
-    val rows = DocsStream.streamCuratedProbe(spark, sf).collect()
-    val docs = Tables.documents(spark, sf).count()
-    assert(rows.length == docs,
-      "every distinct doc exactly once — the planted in-slice dups dropped")
-    assert(rows.map(_.getString(3)).distinct.length == rows.length)
-    assert(rows.forall(_.getLong(4) == 0L), "compaction folded to batch 0")
-    // the replay really was multi-batch: one checkpoint offset per slice
-    val (_, _, ckpt) = DocsStream.streamProbeState.get(sf)
-    val offsets = new java.io.File(s"$ckpt/offsets").list()
-      .filter(_.forall(_.isDigit))
-    assert(offsets.length == DocsStream.STREAM_SLICES,
-      s"expected ${DocsStream.STREAM_SLICES} micro-batches, " +
-        s"saw ${offsets.toSeq}")
-    // second call reuses the landed lineage and is byte-identical
-    val again = DocsStream.streamCuratedProbe(spark, sf).collect()
-    assert(again.map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
-  }
-
-  test("streamNearDupProbe: landed pairs equal the batch recompute minus " +
-      "base-internal pairs, each in its later member's micro-batch") {
-    import graft.streaming.DedupStream
-    val rows = DedupStream.streamNearDupProbe(spark, sf).collect()
-    assert(rows.nonEmpty)
-    val expected = Dedup.minhashNearDup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter { case (a, b, _) => a % 3 != 0 || b % 3 != 0 }
-      .sortBy(p => (p._1, p._2))
-    val got = rows.map(r =>
-      (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(p => (p._1, p._2))
-    assert(got.toSeq == expected.toSeq,
-      s"${got.length} streamed vs ${expected.length} expected")
-    // the emission law: a pair lands in its LATER member's batch
-    rows.foreach { r =>
-      assert(r.getLong(3) ==
-        math.max(r.getLong(0) % 3, r.getLong(1) % 3))
-    }
-    // non-vacuity: both micro-batches emitted, and some batch-2 pair has
-    // a batch-1 member (so it could ONLY come from an index increment
-    // appended by the earlier micro-batch — a lost append loses it)
-    assert(rows.map(_.getLong(3)).distinct.sorted.toSeq == Seq(1L, 2L))
-    assert(rows.exists(r => r.getLong(3) == 2 &&
-      (r.getLong(0) % 3 == 1 || r.getLong(1) % 3 == 1)))
-    // second call reuses the landed lineage and is byte-identical
-    val again = DedupStream.streamNearDupProbe(spark, sf).collect()
-    assert(again.map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
-  }
-
-  test("streamHourlyProbe: the watermark replay equals the batch hourly " +
-      "aggregate under the final-watermark cutoff, tail held in state") {
-    import graft.streaming.EventsStream
-    val rows = EventsStream.streamHourlyProbe(spark, sf).collect()
-    assert(rows.nonEmpty)
-    val maxTs = Tables.events(spark, sf)
-      .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    val cutoffUs = maxTs - 2L * 3600L * 1000000L
-    val batch = graft.engine.Kpis.eventsHourly(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
-    val fmt = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)
-    def emitted(hourStart: String): Boolean = {
-      val startUs = java.time.LocalDateTime.parse(hourStart, fmt)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
-      startUs + 3600L * 1000000L <= cutoffUs
-    }
-    // every streamed row is a closed window and equals its batch twin
-    rows.foreach { r =>
-      val k = (r.getString(0), r.getString(1))
-      assert(emitted(k._1), s"$k emitted though inside the watermark tail")
-      val (n, tv, av) = batch(k)
-      assert(r.getLong(2) == n && r.getDouble(3) == tv &&
-        r.getDouble(4) == av)
-    }
-    // and every closed batch window was streamed — nothing dropped late
-    val streamedKeys = rows.map(r => (r.getString(0), r.getString(1))).toSet
-    val closed = batch.keys.filter(k => emitted(k._1)).toSet
-    assert(streamedKeys == closed)
-    // non-vacuity: the tail really is held back
-    assert(closed.size < batch.size, "cutoff must hold back a tail")
-    // the replay really was multi-batch, and the re-serve is stable
-    val (_) = {
-      val out = EventsStream.hourlyProbeState.get(sf)
-      val batches = spark.read.parquet(out)
-        .select(col("batch").cast("long")).distinct().count()
-      assert(batches >= 2, s"expected multi-batch emission, saw $batches")
-    }
-    val again = EventsStream.streamHourlyProbe(spark, sf).collect()
-    assert(again.map(_.toSeq).toSeq == rows.map(_.toSeq).toSeq)
-  }
-
   test("hashIndexProbe: verdicts partition the planted batch exactly, " +
       "canonicals point at the true first carriers") {
     import org.apache.spark.sql.functions.col

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Kpis, Tables}
-import graft.streaming.{DocsStream, EventsStream}
+import graft.streaming.{DocsStream, EventsStream, Replay}
 
 /** §2.9 — the streaming hourly aggregate must agree with its batch twin on
   * a static directory (same operator, same results). */
@@ -708,7 +708,7 @@ class StreamingSpec extends SparkSpecBase {
       "expected a multi-batch feed")
     // retry idempotence: replaying a batch id replaces its partition
     val n = spark.read.parquet(out).count()
-    DocsStream.landScored(
+    Replay.landBatch(
       TextOps.lmScoreAgainst(ref.filter(col("doc_id") % 2 === 0), vocab, model)
         .withColumn("kept", col("lm_score") >= DocsStream.LM_GATE_MIN),
       0L, out)
@@ -765,7 +765,7 @@ class StreamingSpec extends SparkSpecBase {
     // replay idempotence: re-landing batch 0's own rows must not duplicate
     val n = spark.read.parquet(out).count()
     val b0 = spark.read.parquet(out).filter(col("batch") === 0).drop("batch")
-    DocsStream.landScored(b0, 0L, out)
+    Replay.landBatch(b0, 0L, out)
     assert(spark.read.parquet(out).count() == n,
       "replayed source-cap batch duplicated rows")
   }
@@ -774,7 +774,6 @@ class StreamingSpec extends SparkSpecBase {
     // both sinks land under batch=<id> with dynamic partition overwrite —
     // re-running the landing half with the same batch id (the micro-batch
     // retry) must leave the landed row count unchanged
-    import graft.streaming.AsOfStream
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("source"),
         sha2(regexp_replace(lower(trim(col("text"))), "\\s+", " "), 256)
@@ -796,12 +795,44 @@ class StreamingSpec extends SparkSpecBase {
       Seq("user_id" -> "p_user_id"), "ts", "p_ts", "p_event_id",
       "backward", Some(Kpis.ASOF_TOLERANCE_US), broadcastRight = true)
     val out2 = tmpDir("graft-sink-idem-asof") + "/landed"
-    AsOfStream.landAsOf(enriched, 5L, out2)
+    Replay.landBatch(enriched, 5L, out2)
     val once2 = spark.read.parquet(out2).count()
     assert(once2 > 0)
-    AsOfStream.landAsOf(enriched, 5L, out2)
+    Replay.landBatch(enriched, 5L, out2)
     assert(spark.read.parquet(out2).count() == once2,
       "replayed as-of batch duplicated rows")
+  }
+
+  test("Replay.landSlices: one file per slice in pinned arrival order; a " +
+      "refused rename onto an existing slice throws and names both paths") {
+    val inDir = tmpDir("graft-replay-slices") + "/in"
+    val tag = "replay-spec-" + java.util.UUID.randomUUID().toString.take(8)
+    Replay.landSlices(spark, inDir, tag,
+      (0 to 2).map(s => s -> spark.range(s * 10L, s * 10L + 5L).toDF("id")))
+    val landed = new java.io.File(inDir).list().filterNot(_.startsWith("."))
+    assert(landed.sorted.toSeq == (0 to 2).map(s => s"slice-$s.parquet"))
+    val mtimes = (0 to 2).map(s =>
+      new java.io.File(s"$inDir/slice-$s.parquet").lastModified())
+    assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
+      s"slice mtimes not strictly ascending: $mtimes")
+    (0 to 2).foreach { s =>
+      assert(spark.read.parquet(s"$inDir/slice-$s.parquet").collect()
+        .map(_.getLong(0)).sorted.toSeq == (s * 10L until s * 10L + 5L))
+    }
+    val tmpRoot = new java.io.File(sys.props("java.io.tmpdir"))
+    assert(!tmpRoot.list().exists(_.startsWith(s"graft-$tag-slice")),
+      "a slice tmp dir was left behind")
+    // landing slice 0 again: the file: class refuses to rename onto the
+    // existing slice, and the writer must say so instead of keeping the
+    // old file and deleting the new one
+    val e = intercept[IllegalStateException] {
+      Replay.landSlices(spark, inDir, tag, Seq(0 -> spark.range(1).toDF("id")))
+    }
+    assert(e.getMessage.contains(s"$inDir/slice-0.parquet"), e.getMessage)
+    assert(e.getMessage.contains(s"graft-$tag-slice0-") &&
+      e.getMessage.contains("part-"), e.getMessage)
+    assert(spark.read.parquet(s"$inDir/slice-0.parquet").count() == 5L,
+      "the refused landing must leave the old slice as it was")
   }
 
   test("index append is idempotent: a retried increment replaces, not duplicates") {
