@@ -4,9 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.{Dedup, Pipeline, Sessions, TermIndex, V2Demo}
-import graft.streaming.{AsOfStream, DedupStream, DocsStream, DriftStream,
-  EventsStream, TermIndexStream, VecIndexStream}
+import graft.engine.{Lineages, Pipeline, Sessions}
 
 /** Perf surface: builds the one-time lineages in an untimed preamble
   * ([[prewarm]], full runs only), times every selected query and prints
@@ -19,20 +17,23 @@ object Bench {
   /** What the bench measured. `times`: seconds per query that ran, in
     * run order. `prewarmWallS`: wall of the one-time lineage builds, run
     * before the query loop by the preamble (`prewarmHost` "preamble"; 0.0
-    * and "" when it did not run). */
+    * and "" when it did not run). `prewarmS`: seconds of each preamble
+    * build that finished, in build order. */
   final case class Result(times: Seq[(String, Double)],
                           failed: Seq[QueryFailure],
                           prewarmWallS: Double = 0.0,
-                          prewarmHost: String = "") {
+                          prewarmHost: String = "",
+                          prewarmS: Seq[(String, Double)] = Nil) {
     // total INCLUDES the prewarm wall (it is real elapsed work this
     // process did); it is just not any one query's number.
     def total: Double = times.map(_._2).sum + prewarmWallS
 
     def jsonLines(sfDir: String): Seq[String] = {
-      val qs = times.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
+      def obj(kvs: Seq[(String, Double)]): String =
+        kvs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+      val qs = obj(times)
       val fs = QueryFailure.jsonArray(failed)
-      Seq(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"prewarm_wall_s":$prewarmWallS,"prewarm_host":"$prewarmHost","sf":"$sfDir"}""",
+      Seq(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"prewarm_wall_s":$prewarmWallS,"prewarm_s":${obj(prewarmS)},"prewarm_host":"$prewarmHost","sf":"$sfDir"}""",
         // Compact totals as the LAST stdout line: the artifact capture
         // keeps a bounded tail of stdout, and the full per-query line
         // above outgrew it (200+ queries), leaving the artifact with no
@@ -111,7 +112,8 @@ object Bench {
     // A SPARK_GRAFT_ONLY run skips it, so each selected query builds
     // only its own lineage, inside its own timing.
     val pre =
-      if (only.isEmpty) prewarm(prewarmBuilds(spark, sfDir))
+      if (only.isEmpty) prewarm(Lineages.all.map(l =>
+        l.name -> (() => { Lineages.out(l, spark, sfDir); () })))
       else Result(Nil, Nil)
     // Local-iteration knob: run each query N times, report the minimum (the
     // warm, codegen-compiled number — what the plan actually costs). The
@@ -162,48 +164,6 @@ object Bench {
       outcomes.collect { case (n, Left(e)) => QueryFailure(n, e) })
   }
 
-  /** The one-time builds over corpus `dir`, longest first: each builds
-    * and caches a lineage that its queries then serve from. They are
-    * independent (own scratch dirs, own checkpoints; lineages over the
-    * same corpus share only the slice caches, which hand every caller
-    * ONE slicing pass). */
-  def prewarmBuilds(spark: SparkSession,
-      dir: String): Seq[(String, () => Unit)] = Seq(
-    // the v2 parity demo's CSV→bronze→silver→gold materialization is
-    // the same one-time-build class — fold it into the wall
-    "v2" -> (() => { V2Demo.ensure(spark, dir); () }),
-    // the maintained label store and term index (r15): the same
-    // build-once class as v2 — each previously landed its whole cold
-    // build (~12 s / ~3 s at sf0.1) inside whichever label-/term-
-    // family query a single-run bench reached first (q134/q139),
-    // breaking that query's cross-round series exactly the way the
-    // r12 q180 wall did. Consumers are unchanged cache serves.
-    "labels" -> (() => { Dedup.lifecycleLabels(spark, dir); () }),
-    "tindex" -> (() => { TermIndex.maintainedTermIndex(spark, dir); () }),
-    // under a bounded width the list order is the admission order —
-    // longest-serial builds (OPTIMIZATION_r15.md) lead so the wall's
-    // critical path starts at t=0 (LPT scheduling)
-    "asof" -> (() => { AsOfStream.streamAsOfProbe(spark, dir).count(); () }),
-    "vec" -> (() => { VecIndexStream.streamVecIndexProbe(spark, dir).count(); () }),
-    "loj" -> (() => { EventsStream.streamOuterJoinProbe(spark, dir).count(); () }),
-    "foj" -> (() => { EventsStream.streamFullOuterJoinProbe(spark, dir).count(); () }),
-    "curated" -> (() => { DocsStream.streamCuratedProbe(spark, dir).count(); () }),
-    "neardup" -> (() => { DedupStream.streamNearDupProbe(spark, dir).count(); () }),
-    "hourly" -> (() => { EventsStream.streamHourlyProbe(spark, dir).count(); () }),
-    "sessions" -> (() => { EventsStream.streamSessionsProbe(spark, dir).count(); () }),
-    "sesswin" -> (() => { EventsStream.streamSessionWindowsProbe(spark, dir).count(); () }),
-    "asink" -> (() => { AsOfStream.streamAsOfSinkProbe(spark, dir).count(); () }),
-    "ti" -> (() => { TermIndexStream.streamTermIndexProbe(spark, dir).count(); () }),
-    // dcells re-admitted (round 13): its r12 exclusion predates the
-    // stride-coprime fix and the frozen-baseline/loud-empty guards —
-    // the intermittent empty was the (scale-dependent) modulus
-    // arithmetic, not concurrency; re-measured green under the full
-    // wall at ×100, three consecutive runs (SCALE_r13 §wall).
-    "dcells" -> (() => { DriftStream.streamDriftCellsProbe(spark, dir).count(); () }),
-    "ivj" -> (() => { EventsStream.streamIntervalJoinProbe(spark, dir).count(); () }),
-    "drift" -> (() => { EventsStream.streamDriftProbe(spark, dir).count(); () }),
-    "dedup" -> (() => { EventsStream.streamDedupProbe(spark, dir).count(); () }))
-
   /** The untimed preamble: run `builds` at once ([[Pipeline.concurrently]])
     * and report their wall as `prewarmWallS`. A build that throws is
     * recorded as the failure `prewarm` once every other build has
@@ -217,25 +177,28 @@ object Bench {
     * same host, fresh JVM each). */
   def prewarm(builds: Seq[(String, () => Unit)]): Result = {
     val t0 = System.nanoTime()
+    // per-lineage build seconds: the wall is max(lineage), not sum —
+    // these show which lineage sets the critical path. Each unit writes
+    // only its own slot, and every unit is joined before they are read.
+    val secs = Array.fill[Option[Double]](builds.size)(None)
     val failed = try {
-      Pipeline.concurrently("prewarm", builds.map { case (tag, build) =>
-        tag -> (() => {
-          // per-lineage build seconds: the wall is max(lineage), not
-          // sum — these lines show which lineage sets the critical path
+      Pipeline.concurrently("prewarm", builds.zipWithIndex.map {
+        case ((tag, build), i) => tag -> (() => {
           val t1 = System.nanoTime()
           try build() catch {
             case NonFatal(e) =>
               System.err.println(s"[prewarm] $tag failed: ${e.getMessage}")
               throw e
           }
-          System.err.println(
-            f"[prewarm] $tag built in ${(System.nanoTime() - t1) / 1e9}%.1f s")
+          secs(i) = Some((System.nanoTime() - t1) / 1e9)
+          System.err.println(f"[prewarm] $tag built in ${secs(i).get}%.1f s")
         })
       })
       Nil
     } catch {
       case NonFatal(e) => Seq(QueryFailure("prewarm", e))
     }
-    Result(Nil, failed, (System.nanoTime() - t0) / 1e9, "preamble")
+    Result(Nil, failed, (System.nanoTime() - t0) / 1e9, "preamble",
+      builds.map(_._1).zip(secs).collect { case (tag, Some(s)) => tag -> s })
   }
 }

@@ -1590,30 +1590,27 @@ object Dedup {
     * the closure. Re-building the identical store per consumer (the
     * pre-r9 shape) silently re-paid the corpus hash + closure five
     * times per surface run, contradicting the steady-state claim.
-    * `computeIfAbsent` gives build-once semantics under concurrent
-    * consumers (ConcurrencySpec races q153); consumers are read-only —
-    * the decremental path (q158) builds its OWN mutable copy and must
-    * never touch the shared table. Keyed on the corpus dir, which is
-    * immutable for a session (the testdata contract); a corpus that
-    * changes in place invalidates by JVM restart, exactly like a real
-    * maintained store invalidates by re-seed. */
-  private val maintainedLabelDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * [[Lineages]] gives build-once semantics per corpus dir under
+    * concurrent consumers (ConcurrencySpec races q153); consumers are
+    * read-only — the decremental path (q158) builds its OWN mutable copy
+    * and must never touch the shared table. */
   private[graft] def lifecycleLabels(spark: SparkSession,
-      dir: String): String =
-    maintainedLabelDirs.computeIfAbsent(dir, _ => {
-      val pairs = nearDupPairs(spark, dir).select(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
-      val labelDir = IndexMaintenance.scratchIndexDir(spark, "labels")
-      buildClusterLabels(
-        pairs.filter(col("doc_a") % DELTA_MOD =!= 0 &&
-          col("doc_b") % DELTA_MOD =!= 0), labelDir)
-      mergeClusterIncrement(spark, labelDir,
-        pairs.filter(col("doc_a") % DELTA_MOD === 0 ||
-          col("doc_b") % DELTA_MOD === 0))
-      labelDir
-    })
+      dir: String): String = Lineages.out(labelsLineage, spark, dir)
+
+  private[graft] val labelsLineage = Lineages.Lineage("labels", buildLabels)
+
+  private def buildLabels(spark: SparkSession, dir: String): String = {
+    val pairs = nearDupPairs(spark, dir).select(col("doc_a"), col("doc_b"))
+      .localCheckpoint()
+    val labelDir = IndexMaintenance.scratchIndexDir(spark, "labels")
+    buildClusterLabels(
+      pairs.filter(col("doc_a") % DELTA_MOD =!= 0 &&
+        col("doc_b") % DELTA_MOD =!= 0), labelDir)
+    mergeClusterIncrement(spark, labelDir,
+      pairs.filter(col("doc_a") % DELTA_MOD === 0 ||
+        col("doc_b") % DELTA_MOD === 0))
+    labelDir
+  }
 
   /** Record-linkage geometry: candidate pairs form only inside a
     * (lang, source) block; similarity is edit distance over a fixed-width

@@ -231,10 +231,13 @@ object IndexMaintenance {
     * the new copy at `<dir>.compacting`, the old dataset moves aside,
     * staging renames into place, the old copy is dropped. On a failed
     * swap the original is restored — the index is never left missing.
-    * Holds the writer lease on `leaseDir` (default: `dir` itself) for
-    * the duration: a compaction racing an ingest append on the same
-    * index is a contract violation and fails cleanly instead of folding
-    * a half-landed increment. A multi-artifact index (IVF: centroids +
+    * A process that died between the two renames left `<dir>` missing
+    * and its only live copy at `<dir>.old`: the next rewrite renames it
+    * back before deleting anything, so `.old` is dropped only while
+    * `<dir>` exists. Holds the writer lease on `leaseDir` (default: `dir`
+    * itself) for the duration: a compaction racing an ingest append on
+    * the same index is a contract violation and fails cleanly instead of
+    * folding a half-landed increment. A multi-artifact index (IVF: centroids +
     * vectors under one root) passes its ROOT as `leaseDir` so every
     * mutation in the family contends on ONE canonical lease — a
     * sub-path lease would let a root-level swap rename the index out
@@ -247,13 +250,19 @@ object IndexMaintenance {
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     val staging = new Path(dir + ".compacting")
     val backup = new Path(dir + ".old")
+    if (!fs.exists(target) && fs.exists(backup) &&
+        !fs.rename(backup, target))
+      throw new IllegalStateException(
+        s"compaction: cannot restore $dir from $backup")
     fs.delete(staging, true)
-    fs.delete(backup, true)
+    if (fs.exists(target)) fs.delete(backup, true)
     write(staging.toString)
     if (!fs.rename(target, backup))
       throw new IllegalStateException(s"compaction: cannot move aside $dir")
     if (!fs.rename(staging, target)) {
-      fs.rename(backup, target)
+      if (!fs.rename(backup, target))
+        throw new IllegalStateException(
+          s"compaction: cannot swap in $dir, nor restore it from $backup")
       throw new IllegalStateException(s"compaction: cannot swap in $dir")
     }
     fs.delete(backup, true)

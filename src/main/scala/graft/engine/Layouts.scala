@@ -53,28 +53,14 @@ object Layouts {
     * coalesce merges in place but caps upstream parallelism of everything
     * it fuses with and can produce wildly uneven files from uneven inputs;
     * the compaction shuffle is the price of even output sizes, paid once.
-    * Writes to a fresh directory then swaps rename-first: the live copy is
-    * renamed aside before the compacted one takes its place, so a failed
-    * swap never loses data (the aside copy is restored) and the table is
-    * gone only between two renames, never while bytes are being deleted. */
-  def compact(spark: SparkSession, dir: String, targetFiles: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = dir + ".compacting"
-    spark.read.parquet(dir).repartition(targetFiles)
-      .write.mode("overwrite").parquet(tmp)
-    val dst = new Path(dir)
-    // the path's own filesystem, not the default FS — dir may be s3a://…
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aside = new Path(dir + ".old")
-    fs.delete(aside, true) // leftover from a previously failed swap
-    if (!fs.rename(dst, aside))
-      throw new IllegalStateException(s"compaction swap failed for $dir: " +
-        s"could not move live dir aside")
-    if (!fs.rename(new Path(tmp), dst)) {
-      fs.rename(aside, dst) // restore the live copy; nothing was lost
-      throw new IllegalStateException(s"compaction swap failed for $dir: " +
-        s"could not move compacted dir into place (live dir restored)")
+    * Writes to a fresh directory then swaps it in through
+    * [[IndexMaintenance.rewrite]]: the live copy is renamed aside before
+    * the compacted one takes its place, so a failed swap never loses data
+    * and the table is gone only between two renames, never while bytes
+    * are being deleted. */
+  def compact(spark: SparkSession, dir: String, targetFiles: Int): Unit =
+    IndexMaintenance.rewrite(spark, dir) { staging =>
+      spark.read.parquet(dir).repartition(targetFiles)
+        .write.mode("overwrite").parquet(staging)
     }
-    fs.delete(aside, true)
-  }
 }

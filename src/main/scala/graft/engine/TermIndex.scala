@@ -292,22 +292,21 @@ object TermIndex {
     * (JVM, corpus dir) — base build over docs with doc_id %
     * [[Dedup.DELTA_MOD]] != 0, the rest appended as increment 1 — and
     * shared by every consumer thereafter (q139 probes it; q159 clones
-    * it before mutating). `computeIfAbsent` gives build-once semantics
-    * under concurrent demands; consumers are read-only. Keyed on the
-    * corpus dir, immutable for a session (the testdata contract). */
-  private val maintainedTermIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * it before mutating). [[Lineages]] gives build-once semantics
+    * under concurrent demands; consumers are read-only. */
   private[graft] def maintainedTermIndex(spark: SparkSession,
-      dir: String): String =
-    maintainedTermIndexes.computeIfAbsent(dir, _ => {
-      val d = spread(documents(spark, dir))
-      val indexDir = IndexMaintenance.scratchIndexDir(spark, "term-index")
-      buildTermIndex(d.filter(col("doc_id") % Dedup.DELTA_MOD =!= 0), indexDir)
-      appendTermIndex(d.filter(col("doc_id") % Dedup.DELTA_MOD === 0),
-        indexDir, increment = 1L)
-      indexDir
-    })
+      dir: String): String = Lineages.out(lineage, spark, dir)
+
+  private[graft] val lineage = Lineages.Lineage("tindex", buildMaintained)
+
+  private def buildMaintained(spark: SparkSession, dir: String): String = {
+    val d = spread(documents(spark, dir))
+    val indexDir = IndexMaintenance.scratchIndexDir(spark, "term-index")
+    buildTermIndex(d.filter(col("doc_id") % Dedup.DELTA_MOD =!= 0), indexDir)
+    appendTermIndex(d.filter(col("doc_id") % Dedup.DELTA_MOD === 0),
+      indexDir, increment = 1L)
+    indexDir
+  }
 
   /** q139: the lexical index lifecycle end-to-end — build over docs with
     * doc_id % [[Dedup.DELTA_MOD]] != 0, append the rest as increment 1

@@ -415,37 +415,38 @@ object V2Demo {
 
   // -------------------------------------------------- staged runner
 
-  private val state =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialize the whole demo once per corpus dir (generate CSVs →
     * bronze → silver → gold under the [[Pipeline.retry]] policy); every
     * KPI query serves from the landed silver. */
   def ensure(spark: SparkSession, dir: String): String =
-    state.computeIfAbsent(dir, _ => {
-      val root = IndexMaintenance.scratchIndexDir(spark, "v2-demo")
-      // Per-TABLE pipelining (r15, guide §2.6): a table's fixture →
-      // bronze → silver chain is independent of every other table's —
-      // only gold joins across silver tables. One barrier instead of
-      // three: wall = max(per-table chain) + gold, where the stage-
-      // barrier form paid max(fixtures) + max(bronze) + max(silver).
-      // The chains run through the shared fan-out,
-      // [[Pipeline.concurrently]]; the first failed chain rethrows after
-      // every chain has finished, so a silver enum violation still
-      // aborts loudly. Retry stays per unit of work (one table's chain,
-      // then gold), and every write is an overwrite, so a retried chain
-      // replaces itself — the same idempotence the stage form had.
-      Pipeline.concurrently("v2-chain",
-        fixtures(spark, dir).map { case (t, df) =>
-          t -> (() => Pipeline.retry() {
-            csvOf(df, root, t)
-            bronzeOf(spark, root, t)
-            silverOf(spark, root, t)
-          })
+    Lineages.out(lineage, spark, dir)
+
+  private[graft] val lineage = Lineages.Lineage("v2", build)
+
+  private def build(spark: SparkSession, dir: String): String = {
+    val root = IndexMaintenance.scratchIndexDir(spark, "v2-demo")
+    // Per-TABLE pipelining (r15, guide §2.6): a table's fixture →
+    // bronze → silver chain is independent of every other table's —
+    // only gold joins across silver tables. One barrier instead of
+    // three: wall = max(per-table chain) + gold, where the stage-
+    // barrier form paid max(fixtures) + max(bronze) + max(silver).
+    // The chains run through the shared fan-out,
+    // [[Pipeline.concurrently]]; the first failed chain rethrows after
+    // every chain has finished, so a silver enum violation still
+    // aborts loudly. Retry stays per unit of work (one table's chain,
+    // then gold), and every write is an overwrite, so a retried chain
+    // replaces itself — the same idempotence the stage form had.
+    Pipeline.concurrently("v2-chain",
+      fixtures(spark, dir).map { case (t, df) =>
+        t -> (() => Pipeline.retry() {
+          csvOf(df, root, t)
+          bronzeOf(spark, root, t)
+          silverOf(spark, root, t)
         })
-      Pipeline.retry()(gold(spark, root))
-      root
-    })
+      })
+    Pipeline.retry()(gold(spark, root))
+    root
+  }
 
   private def sv(spark: SparkSession, dir: String, t: String): DataFrame =
     spark.read.parquet(s"${ensure(spark, dir)}/silver/$t")

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.engine.Lineages
+import graft.engine.Lineages.Lineage
+
 /** Streaming as-of (temporal) join — the canonical production consumer of
   * "latest rate ≤ event time" is a stream, not a batch (Flink calls this a
   * temporal table join; kdb runs `aj` against a ticker feed). The
@@ -182,10 +185,7 @@ object AsOfStream {
     * at the test SFs, bounded so forward/nearest can finalize. */
   val SS_TOL_US = 3600L * 1000000L
 
-  /** (out dir) of each materialized stream-stream as-of replay, keyed by
-    * corpus dir — one lineage per corpus per session (the q180 contract). */
-  private[graft] val asofProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val asofLineage = Lineage("asof", runAsOfLineage)
 
   /** q202: the stream-stream as-of join, oracle-gated across ALL THREE
     * direction knobs. The events table rides q200's time-sliced
@@ -206,15 +206,12 @@ object AsOfStream {
     * strictly-later within tol, backward on ties. The key-−1 heartbeat
     * matches nothing (no click carries key −1) and emits nothing (refs
     * never emit). */
-  def streamAsOfProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = asofProbeState.computeIfAbsent(dir, _ =>
-      runAsOfLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamAsOfProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(asofLineage, spark, dir))
       .select(col("direction").cast("string").as("direction"),
         col("k").as("user_id"), col("id").as("click_id"),
         col("ts_us"), col("ref_id").as("matched_id"))
       .orderBy("direction", "user_id", "click_id")
-  }
 
   private def runAsOfLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.IndexMaintenance
@@ -243,9 +240,7 @@ object AsOfStream {
     outDir
   }
 
-  /** (out dir) of each materialized stream-static as-of sink replay. */
-  private[graft] val asofSinkProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val asofSinkLineage = Lineage("asink", runAsOfSinkLineage)
 
   /** q209: the stream-STATIC as-of sink ([[asOfSink]] → the broadcast
     * as-of strategy per micro-batch) oracle-gated at ROW grain. The
@@ -254,14 +249,11 @@ object AsOfStream {
     * probe IN its arrival micro-batch, so the landed `batch` must equal
     * the probe's slice index — pinning both the per-batch broadcast
     * as-of result AND the batch-keyed exactly-once landing. */
-  def streamAsOfSinkProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = asofSinkProbeState.computeIfAbsent(dir, _ =>
-      runAsOfSinkLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamAsOfSinkProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(asofSinkLineage, spark, dir))
       .select(col("event_id"), col("nk"), col("rate_id"),
         col("batch").cast("long").as("batch"))
       .orderBy("event_id")
-  }
 
   private def runAsOfSinkLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.{IndexMaintenance, Kpis}

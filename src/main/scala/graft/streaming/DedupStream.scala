@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.engine.IndexMaintenance
+import graft.engine.{IndexMaintenance, Lineages}
 
 /** Streaming incremental near-dup — the steady state of a training-data
   * ingest pipeline as a STREAM: documents arrive continuously, and each
@@ -124,12 +124,7 @@ object DedupStream {
     else w).start()
   }
 
-  /** (out dir) of each materialized near-dup replay lineage, keyed by
-    * corpus dir — the replay streams once per corpus per session
-    * (the q180 `computeIfAbsent` contract: every concurrent caller gets
-    * ONE lineage). */
-  private[graft] val probeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val lineage = Lineages.Lineage("neardup", runNearDupLineage)
 
   /** q197: the streaming near-dup lifecycle, oracle-gated end-to-end. A
     * FIXED micro-batch sequence is forced from the static corpus — the
@@ -146,14 +141,11 @@ object DedupStream {
     * self-join drops rows) but the exactly-once emission LAW: every pair
     * must land in (and only in) the micro-batch that delivered its
     * later-arriving member. */
-  def streamNearDupProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = probeState.computeIfAbsent(dir, _ =>
-      runNearDupLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamNearDupProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(lineage, spark, dir))
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
         col("batch").cast("long").as("batch"))
       .orderBy("doc_a", "doc_b")
-  }
 
   private def runNearDupLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.{Dedup, Tables}

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Schemas
+import graft.engine.{Lineages, Schemas}
+import graft.engine.Lineages.Lineage
 import graft.functions.TextFns
 
 /** Streaming ingest-time deduplication of a document feed — the streaming
@@ -176,11 +177,10 @@ object DocsStream {
     * slice, one micro-batch per file. */
   val STREAM_SLICES = 3
 
-  /** (in, out, checkpoint) dirs of each materialized probe lineage, keyed
-    * by corpus dir — the probe streams once per corpus per session; spec
-    * code reads the checkpoint to assert the batch count. */
-  private[graft] val streamProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
+  /** The q180 lineage lays its input slices, landed lake and checkpoint
+    * under one root, as `in/`, `out/` and `ckpt/`: spec code reads the
+    * checkpoint to assert the batch count. */
+  private[graft] val curatedLineage = Lineage("curated", runCuratedLineage)
 
   /** q180: the streaming medallion lineage, oracle-gated end-to-end. A
     * FIXED micro-batch sequence is forced from the static corpus — three
@@ -197,21 +197,16 @@ object DocsStream {
     * Deterministic by construction: slices are content-disjoint (batch
     * order cannot matter) and in-slice duplicates are identical rows
     * (whichever arrives first, the emitted row is byte-identical). */
-  def streamCuratedProbe(spark: SparkSession, dir: String): DataFrame = {
-    val (_, out, _) = streamProbeState.computeIfAbsent(dir, _ =>
-      runCuratedLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamCuratedProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"${Lineages.out(curatedLineage, spark, dir)}/out")
       .select(col("doc_id"), col("lang"), col("source"), col("content_hash"),
         col("batch").cast("long").as("batch"))
       .orderBy("doc_id")
-  }
 
-  private def runCuratedLineage(spark: SparkSession,
-      dir: String): (String, String, String) = {
+  private def runCuratedLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.{IndexMaintenance, Tables}
-    val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-in")
-    val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-out")
-    val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-ckpt")
+    val root = IndexMaintenance.scratchIndexDir(spark, "stream")
+    val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     val docs = Tables.documents(spark, dir)
     Replay.landSlices(spark, inDir, "stream", (0 until STREAM_SLICES).map { s =>
       val slice = docs.filter(col("doc_id") % STREAM_SLICES === s)
@@ -221,7 +216,7 @@ object DocsStream {
     val q = curatedSink(bs, inDir, outDir, ckpt, filesPerTrigger = Some(1))
     try q.processAllAvailable() finally q.stop()
     compactCurated(spark, outDir)
-    (inDir, outDir, ckpt)
+    root
   }
 
   /** Streaming admission against the PERSISTED seen-before store

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.engine.Sim
+import graft.engine.{Lineages, Sim}
 
 /** Streaming embedding-distribution drift monitor — the stream form of
   * [[graft.engine.Sim.embeddingDrift]]: a live vector feed is assigned
@@ -44,9 +44,7 @@ object DriftStream {
       }
       .start()
 
-  /** (out dir) of each materialized drift-cell ingest replay. */
-  private[graft] val probeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val lineage = Lineages.Lineage("dcells", runDriftLineage)
 
   /** q214: the drift-cell INGEST STREAM oracle-gated — the last
     * streaming lifecycle to get a driver row. The live slice (q144's
@@ -62,8 +60,7 @@ object DriftStream {
   def streamDriftCellsProbe(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val out = probeState.computeIfAbsent(dir, _ => runDriftLineage(spark, dir))
-    spark.read.parquet(out)
+    spark.read.parquet(Lineages.out(lineage, spark, dir))
       .select(col("batch").cast("long").as("batch"), col("cent_id"),
         col("n"), col("s_fp6"))
       .orderBy("batch", "cent_id")

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.engine.Num
+import graft.engine.{Lineages, Num}
+import graft.engine.Lineages.Lineage
 
 /** Structured Streaming surface (SURVEY.md §2.9 — optional in the
   * reference, which is batch-only; this is the streaming twin of
@@ -207,10 +208,7 @@ object EventsStream {
         })
   }
 
-  /** (out dir) of each materialized watermark replay, keyed by corpus dir
-    * — one lineage per corpus per session (the q180 contract). */
-  private[graft] val hourlyProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val hourlyLineage = Lineage("hourly", runHourlyLineage)
 
   /** q200: the watermarked windowed aggregate, oracle-gated end-to-end.
     * The events table is sliced into three TIME-ORDERED files (thirds of
@@ -226,14 +224,11 @@ object EventsStream {
     * tail stays in state by design, and the DuckDB twin applies the
     * identical cutoff to the batch aggregate — so a dropped late row, a
     * double emission, or a wrong watermark all flip hashed cells. */
-  def streamHourlyProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = hourlyProbeState.computeIfAbsent(dir, _ =>
-      runHourlyLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamHourlyProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(hourlyLineage, spark, dir))
       .select(col("hour_start"), col("event_type"), col("n_events"),
         col("total_value"), col("avg_value"))
       .orderBy("hour_start", "event_type")
-  }
 
   /** Slice-set cache: the time-thirds slicing of a corpus is a pure
     * function of (corpus dir, flush variant), and EIGHT replay probes
@@ -337,10 +332,7 @@ object EventsStream {
     (inDir, spanUs)
   }
 
-  /** (out dir) of each materialized sessionization replay, keyed by
-    * corpus dir — one lineage per corpus per session (the q180 contract). */
-  private[graft] val sessionsProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val sessionsLineage = Lineage("sessions", runSessionsLineage)
 
   /** q201: the flatMapGroupsWithState sessionizer, oracle-gated
     * end-to-end. Same time-sliced deterministic replay as q200: three
@@ -358,10 +350,8 @@ object EventsStream {
     * (q17's arithmetic) and last_batch from the slice formula — so a
     * dropped batch, stale state after replay, a wrong fold order, or an
     * update emitted from the wrong micro-batch all flip hashed cells. */
-  def streamSessionsProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = sessionsProbeState.computeIfAbsent(dir, _ =>
-      runSessionsLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamSessionsProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(sessionsLineage, spark, dir))
       .groupBy(col("user_id"))
       .agg(
         max_by(struct(col("n_events"), col("n_sessions")), col("batch")).as("s"),
@@ -369,7 +359,6 @@ object EventsStream {
       .select(col("user_id"), col("s.n_events").as("n_events"),
         col("s.n_sessions").as("n_sessions"), col("last_batch"))
       .orderBy("user_id")
-  }
 
   private def runSessionsLineage(spark: SparkSession, dir: String): String = {
     val inDir = writeTimeSlices(spark, dir, "stream-sess")
@@ -377,10 +366,8 @@ object EventsStream {
       sessionize(_, inDir, filesPerTrigger = Some(1)).toDF)
   }
 
-  /** (out dir) of each materialized session-window replay, keyed by
-    * corpus dir — one lineage per corpus per session (the q180 contract). */
-  private[graft] val sessionWindowsProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val sessionWindowsLineage =
+    Lineage("sesswin", runSessionWindowsLineage)
 
   /** q205: the built-in watermark-aware `session_window` aggregate under
     * OUT-OF-ORDER arrival — the case [[sessionize]]/q201 explicitly
@@ -398,15 +385,12 @@ object EventsStream {
     * session split that failed to merge across batches, a late-dropped
     * row, a double emission, or wrong gap arithmetic all flip hashed
     * cells. */
-  def streamSessionWindowsProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = sessionWindowsProbeState.computeIfAbsent(dir, _ =>
-      runSessionWindowsLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamSessionWindowsProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(sessionWindowsLineage, spark, dir))
       .filter(col("user_id") >= 0) // drop the key-−1 flush heartbeat
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"))
       .orderBy("user_id", "session_start")
-  }
 
   private def runSessionWindowsLineage(spark: SparkSession, dir: String): String = {
     val (inDir, spanUs) = writeUnorderedSlices(spark, dir, "stream-sesswin")
@@ -425,9 +409,8 @@ object EventsStream {
     }
   }
 
-  /** (out dir) of each materialized interval-join replay. */
-  private[graft] val intervalJoinProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val intervalJoinLineage =
+    Lineage("ivj", runIntervalJoinLineage)
 
   /** q208: the stream-stream INTERVAL join ([[clickPurchase]]) under the
     * time-sliced replay, emission law included: an inner stream-stream
@@ -439,16 +422,13 @@ object EventsStream {
     * ATTRIB_WINDOW older, and the 2-hour watermark delay keeps it
     * buffered across the slice boundary. A lost buffer row, an eager or
     * repeated emission, or wrong watermark eviction all flip cells. */
-  def streamIntervalJoinProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = intervalJoinProbeState.computeIfAbsent(dir, _ =>
-      runIntervalJoinLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamIntervalJoinProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(intervalJoinLineage, spark, dir))
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         unix_micros(col("click_ts")).as("click_us"),
         unix_micros(col("purchase_ts")).as("purchase_us"),
         col("value"), col("batch").cast("long").as("batch"))
       .orderBy("click_id", "purchase_id")
-  }
 
   private def runIntervalJoinLineage(spark: SparkSession, dir: String): String = {
     val inDir = writeTimeSlices(spark, dir, "stream-ivj")
@@ -456,9 +436,7 @@ object EventsStream {
       clickPurchase(_, inDir, filesPerTrigger = Some(1)))
   }
 
-  /** (out dir) of each materialized drift-histogram replay. */
-  private[graft] val driftProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val driftLineage = Lineage("drift", runDriftLineage)
 
   /** q210: the COMPLETE-mode streaming aggregate ([[valueHistogram]])
     * under incremental arrival — fixed integer bucket edges make the
@@ -468,13 +446,10 @@ object EventsStream {
     * batch's complete output OVERWRITES the landing wholesale (that is
     * what complete mode means — and what makes the landing trivially
     * idempotent under retry); the oracle checks the final state. */
-  def streamDriftProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = driftProbeState.computeIfAbsent(dir, _ =>
-      runDriftLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamDriftProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(driftLineage, spark, dir))
       .select(col("event_type"), col("bucket"), col("n"))
       .orderBy("event_type", "bucket")
-  }
 
   private def runDriftLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.IndexMaintenance
@@ -494,9 +469,7 @@ object EventsStream {
     outDir
   }
 
-  /** (out dir) of each materialized outer-interval-join replay. */
-  private[graft] val outerJoinProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val outerJoinLineage = Lineage("loj", runOuterJoinLineage)
 
   /** q216: the stream-stream LEFT OUTER interval join — the unmatched
     * side of q208's attribution, where correctness hinges on the state
@@ -510,16 +483,13 @@ object EventsStream {
     * max(click ts) − delay and strand every late click's null row in
     * state forever. The twin is the plain batch LEFT interval join, no
     * cutoff clause. */
-  def streamOuterJoinProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = outerJoinProbeState.computeIfAbsent(dir, _ =>
-      runOuterJoinLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamOuterJoinProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(outerJoinLineage, spark, dir))
       .filter(col("user_id") >= 0) // drop the key-−1 flush pair
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         unix_micros(col("click_ts")).as("click_us"),
         unix_micros(col("purchase_ts")).as("purchase_us"), col("value"))
       .orderBy(col("click_id"), coalesce(col("purchase_id"), lit(-1L)))
-  }
 
   private def runOuterJoinLineage(spark: SparkSession, dir: String): String = {
     val inDir = writeTimeSlices(spark, dir, "stream-loj",
@@ -529,9 +499,8 @@ object EventsStream {
         joinType = "left_outer"))
   }
 
-  /** (out dir) of each materialized full-outer-interval-join replay. */
-  private[graft] val fullOuterJoinProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val fullOuterJoinLineage =
+    Lineage("foj", runFullOuterJoinLineage)
 
   /** q217: the FULL OUTER stream-stream interval join — BOTH unmatched
     * sides ride the gate, so both state machines' evictions are pinned:
@@ -540,10 +509,8 @@ object EventsStream {
     * purchase matches clicks in `[ts − window, ts]`, so its horizon is
     * its own timestamp on the click watermark). Same two-row flush
     * heartbeat as q216; twin = the plain batch FULL join. */
-  def streamFullOuterJoinProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = fullOuterJoinProbeState.computeIfAbsent(dir, _ =>
-      runFullOuterJoinLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamFullOuterJoinProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(fullOuterJoinLineage, spark, dir))
       .filter(coalesce(col("user_id"), lit(0L)) >= 0 &&
         coalesce(col("purchase_id"), lit(0L)) >= 0) // drop flush rows
       .select(col("click_id"), col("purchase_id"), col("user_id"),
@@ -551,7 +518,6 @@ object EventsStream {
         unix_micros(col("purchase_ts")).as("purchase_us"), col("value"))
       .orderBy(coalesce(col("click_id"), lit(-1L)),
         coalesce(col("purchase_id"), lit(-1L)))
-  }
 
   private def runFullOuterJoinLineage(spark: SparkSession, dir: String): String = {
     val inDir = writeTimeSlices(spark, dir, "stream-foj",
@@ -561,9 +527,7 @@ object EventsStream {
         joinType = "full_outer"))
   }
 
-  /** (out dir) of each materialized streaming-dedup replay. */
-  private[graft] val dedupProbeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val dedupLineage = Lineage("dedup", runDedupLineage)
 
   /** The deliberate mid-stream failure of the q215 lineage (see
     * [[runDedupLineage]]) — typed so the lineage catches exactly its own
@@ -591,15 +555,12 @@ object EventsStream {
     * must contribute NOTHING (every replayed row was already seen). A
     * duplicate leaking through, a first arrival suppressed, or an
     * emission from the wrong batch all flip hashed cells. */
-  def streamDedupProbe(spark: SparkSession, dir: String): DataFrame = {
-    val out = dedupProbeState.computeIfAbsent(dir, _ =>
-      runDedupLineage(spark, dir))
-    spark.read.parquet(out)
+  def streamDedupProbe(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Lineages.out(dedupLineage, spark, dir))
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("value"),
         col("batch").cast("long").as("batch"))
       .orderBy("event_id")
-  }
 
   private def runDedupLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.{IndexMaintenance, Tables}

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.engine.{IndexMaintenance, TermIndex, TextOps}
+import graft.engine.{IndexMaintenance, Lineages, TermIndex, TextOps}
 
 /** Streaming ingest for the persisted inverted index — the lexical twin
   * of [[DedupStream]] (MinHash band index) and the third index modality
@@ -59,9 +59,7 @@ object TermIndexStream {
     * TI_TERMS/PROBE_TERMS so its posting lists differ from q139/q81's. */
   val ST_TERMS: Seq[String] = Seq("data", "spark")
 
-  /** (index dir) of each materialized streamed term-index ingest. */
-  private[graft] val probeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val lineage = Lineages.Lineage("ti", runIngestLineage)
 
   /** q211: the term-index INGEST STREAM oracle-gated end-to-end — the
     * lexical analog of q197's gated band-index lineage. Build the base
@@ -76,10 +74,9 @@ object TermIndexStream {
     * increments, batches, or layout — so a lost append, a stats sidecar
     * row landing twice (n_docs/avg-len skew every score), or a
     * compaction that dropped/duplicated postings all hash-mismatch. */
-  def streamTermIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val idx = probeState.computeIfAbsent(dir, _ => runIngestLineage(spark, dir))
-    TermIndex.probeTermIndex(spark, ST_TERMS, idx, TextOps.RETRIEVAL_TOP_K)
-  }
+  def streamTermIndexProbe(spark: SparkSession, dir: String): DataFrame =
+    TermIndex.probeTermIndex(spark, ST_TERMS,
+      Lineages.out(lineage, spark, dir), TextOps.RETRIEVAL_TOP_K)
 
   private def runIngestLineage(spark: SparkSession, dir: String): String = {
     import graft.engine.Tables

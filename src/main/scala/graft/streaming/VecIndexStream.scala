@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.engine.Sim
+import graft.engine.{Lineages, Sim}
 
 /** Streaming ingest for the persisted IVF index — closes the set: all
   * three index modalities (MinHash bands via [[DedupStream]], postings
@@ -97,9 +97,7 @@ object VecIndexStream {
       }
       .start()
 
-  /** (results dir) of each materialized streamed vec-index lineage. */
-  private[graft] val probeState =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val lineage = Lineages.Lineage("vec", runVecLineage)
 
   /** q212: the vector-index INGEST and PROBE-SERVING streams oracle
     *-gated together — the third index modality's streamed lifecycle
@@ -119,9 +117,7 @@ object VecIndexStream {
     * hash-mismatch. */
   def streamVecIndexProbe(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val resDir = probeState.computeIfAbsent(dir, _ =>
-      runVecLineage(spark, dir))
-    spark.read.parquet(resDir)
+    spark.read.parquet(Lineages.out(lineage, spark, dir))
       .select(col("probe_id"), col("rank"), col("neighbor_id"),
         col("cosine"))
       .orderBy("probe_id", "rank")

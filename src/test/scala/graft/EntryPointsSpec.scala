@@ -53,6 +53,8 @@ class EntryPointsSpec extends SparkSpecBase {
     assert(pre.failed == Seq(QueryFailure("prewarm",
       "java.lang.IllegalStateException", "no lineage")))
     assert(pre.prewarmWallS >= 0.3)
+    assert(pre.prewarmS.map(_._1) == Seq("slow"))
+    assert(pre.prewarmS.head._2 >= 0.3)
     val result = pre.copy(times = Bench.run(spark, sf, Seq(ok)).times)
     val Seq(full, compact) = result.jsonLines(sf).map(parse)
     for (line <- Seq(full, compact)) {
@@ -60,6 +62,10 @@ class EntryPointsSpec extends SparkSpecBase {
       assert(line.get("prewarm_host").asText == "preamble")
       assert(line.get("failed").get(0).get("name").asText == "prewarm")
     }
+    // per-build seconds ride the full line only; a failed build has none
+    assert(full.get("prewarm_s").get("slow").asDouble == pre.prewarmS.head._2)
+    assert(!full.get("prewarm_s").has("bad"))
+    assert(!compact.has("prewarm_s"))
     assert(result.total == result.times.head._2 + pre.prewarmWallS)
     assert(compact.get("total_s").asDouble == result.total)
   }

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Layouts, Tables}
+import graft.engine.{IndexMaintenance, Layouts, Tables}
 
 /** Physical-layout proofs: bucketed joins are exchange-free, salted joins
-  * preserve join semantics while splitting hot keys. */
+  * preserve join semantics while splitting hot keys, and the compaction
+  * swap survives a crash between its two renames. */
 class LayoutsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -76,6 +77,28 @@ class LayoutsSpec extends SparkSpecBase {
       .collect()(0)
     assert(before == after)
     // the swap left no working directory behind
+    assert(!new java.io.File(dir + ".compacting").exists())
+  }
+
+  test("a rewrite after a crash between the swap's renames restores the " +
+      "live copy from .old") {
+    val dir = tmpDir("graft-swap-crash") + "/t"
+    Tables.orders(spark, sf).repartition(8)
+      .write.mode("overwrite").parquet(dir)
+    def rows(d: String) = spark.read.parquet(d)
+      .orderBy("o_orderkey").collect().map(_.toSeq).toSeq
+    val before = rows(dir)
+    // the state a process killed mid-swap leaves: a complete new copy at
+    // .compacting, the live copy moved aside to .old, no <dir>
+    Tables.orders(spark, sf).filter(col("o_orderkey") % 2 === 0)
+      .write.mode("overwrite").parquet(dir + ".compacting")
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".old")))
+    IndexMaintenance.rewrite(spark, dir) { staging =>
+      spark.read.parquet(dir).repartition(2)
+        .write.mode("overwrite").parquet(staging)
+    }
+    assert(rows(dir) == before)
+    assert(!new java.io.File(dir + ".old").exists())
     assert(!new java.io.File(dir + ".compacting").exists())
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Dedup, Kpis, Tables}
+import graft.engine.{Dedup, Kpis, Lineages, Tables}
 import graft.streaming.{AsOfStream, EventsStream}
 
 /** The gated streaming replay lineages against their batch twins: the
@@ -22,7 +22,7 @@ class StreamLineageSpec extends SparkSpecBase {
     assert(rows.map(_.getString(3)).distinct.length == rows.length)
     assert(rows.forall(_.getLong(4) == 0L), "compaction folded to batch 0")
     // the replay really was multi-batch: one checkpoint offset per slice
-    val (_, _, ckpt) = DocsStream.streamProbeState.get(sf)
+    val ckpt = s"${Lineages.out(DocsStream.curatedLineage, spark, sf)}/ckpt"
     val offsets = new java.io.File(s"$ckpt/offsets").list()
       .filter(_.forall(_.isDigit))
     assert(offsets.length == DocsStream.STREAM_SLICES,
@@ -96,7 +96,7 @@ class StreamLineageSpec extends SparkSpecBase {
     assert(closed.size < batch.size, "cutoff must hold back a tail")
     // the replay really was multi-batch, and the re-serve is stable
     val (_) = {
-      val out = EventsStream.hourlyProbeState.get(sf)
+      val out = Lineages.out(EventsStream.hourlyLineage, spark, sf)
       val batches = spark.read.parquet(out)
         .select(col("batch").cast("long")).distinct().count()
       assert(batches >= 2, s"expected multi-batch emission, saw $batches")
