@@ -1879,7 +1879,7 @@ object Crawl {
   def buildCdxIndex(spark: SparkSession, archiveDir: String,
       indexDir: String, increment: Long = 0L): Unit = {
     import spark.implicits._
-    spark.read.format("binaryFile")
+    val rows = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.warc.gz")
       .load(archiveDir)
       .select(col("path"), col("content"))
@@ -1902,9 +1902,8 @@ object Crawl {
       .withColumn("increment", lit(increment))
       .repartition(col("urlkey"))
       .sortWithinPartitions("urlkey")
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(indexDir)
+    // dynamic even at increment 0: a build replaces only its own increment
+    IndexMaintenance.replacePartitions(rows, indexDir, "increment")
   }
 
   /** Probe a [[buildCdxIndex]] sidecar for a bounded URL set: the

@@ -117,10 +117,7 @@ object CurationLoop {
   def pairsAsOf(spark: SparkSession, root: String, sink: String,
       day: Long): Option[DataFrame] = {
     val path = s"$root/$sink"
-    if (new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-          .exists(new org.apache.hadoop.fs.Path(path)) &&
-        IndexMaintenance.parquetFileCount(spark, path) > 0L)
+    if (IndexMaintenance.holdsParquet(spark, path))
       Some(spark.read.parquet(path).filter(col("batch") <= day))
     else None
   }
@@ -255,10 +252,7 @@ object CurationLoop {
     // dynamic-overwrite write is only _SUCCESS), so an empty sink must
     // read as the empty pair set, not a schema-inference failure
     def landedPairs(path: String): Option[DataFrame] =
-      if (new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-            .exists(new org.apache.hadoop.fs.Path(path)) &&
-          IndexMaintenance.parquetFileCount(spark, path) > 0L)
+      if (IndexMaintenance.holdsParquet(spark, path))
         Some(spark.read.parquet(path).filter(col("batch") === increment))
       else None
     val landed = landedPairs(s"$root/pairs")
@@ -350,11 +344,11 @@ object CurationLoop {
       : ForgetReport = {
     val docsRemoved = purge(spark, s"$root/docs", "batch", "doc_id", ids)
     val bandRemoved = purge(spark, s"$root/band_index", "increment",
-      "doc_id", ids, clusterBy = Some("band"))
+      "doc_id", ids, IndexMaintenance.clusterBy("band"))
     val headRemoved = purge(spark, s"$root/head_index", "increment",
-      "doc_id", ids, clusterBy = Some("hh"))
+      "doc_id", ids, IndexMaintenance.clusterBy("hh"))
     val winnowRemoved = purge(spark, s"$root/winnow_index", "increment",
-      "doc_id", ids, clusterBy = Some("f"))
+      "doc_id", ids, IndexMaintenance.clusterBy("f"))
     val pairsRemoved = purgePairs(spark, s"$root/pairs", ids)
     val contRemoved = purgePairs(spark, s"$root/cont_pairs", ids)
     val winnowPairsRemoved = purgePairs(spark, s"$root/winnow_pairs", ids)
@@ -381,13 +375,13 @@ object CurationLoop {
     * number of rows removed. Empty or missing stores purge zero rows. */
   private def purge(spark: SparkSession, path: String, partCol: String,
       idCol: String, ids: DataFrame,
-      clusterBy: Option[String] = None): Long =
-    purgeWhere(spark, path, partCol,
+      layout: DataFrame => DataFrame = identity): Long =
+    IndexMaintenance.purgePartitions(spark, path, Seq(partCol),
       df => df.join(broadcast(ids.select(col("doc_id").as(idCol))),
         Seq(idCol), "left_semi"),
       df => df.join(broadcast(ids.select(col("doc_id").as(idCol))),
         Seq(idCol), "left_anti"),
-      clusterBy)
+      layout).removed
 
   /** Pair-sink purge: a pair dies if EITHER endpoint is deleted. */
   private def purgePairs(spark: SparkSession, path: String,
@@ -399,43 +393,8 @@ object CurationLoop {
     def keep(df: DataFrame): DataFrame =
       df.join(idc, df("doc_a") === idc("doc_id") ||
         df("doc_b") === idc("doc_id"), "left_anti")
-    purgeWhere(spark, path, "batch", hit, keep)
-  }
-
-  private def purgeWhere(spark: SparkSession, path: String,
-      partCol: String, hit: DataFrame => DataFrame,
-      keep: DataFrame => DataFrame,
-      clusterBy: Option[String] = None): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p) ||
-        IndexMaintenance.parquetFileCount(spark, path) == 0L) return 0L
-    val df = spark.read.parquet(path)
-    // the touched partitions — a bounded driver-side key set (≤ the
-    // store's partition count), the same control-decision class as the
-    // label merge's bucket locate
-    val touched = hit(df).select(col(partCol)).distinct()
-      .collect().map(_.get(0))
-    if (touched.isEmpty) return 0L
-    // localCheckpoint: materialize BEFORE the in-place rewrite so no
-    // task re-reads the files being replaced (the self-overwrite
-    // discipline shared with the label merge/forget rewrites)
-    val part = df.filter(col(partCol).isin(touched: _*)).localCheckpoint()
-    val kept = keep(part).localCheckpoint()
-    val removed = part.count() - kept.count()
-    // preserve the store's file clustering (band/hh-sorted files keep
-    // their min/max probe pruning after a purge rewrite)
-    val laid = clusterBy.fold(kept)(c =>
-      kept.repartition(col(c)).sortWithinPartitions(col(c)))
-    laid.write.partitionBy(partCol)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(path)
-    val keptParts = kept.select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSet
-    touched.filterNot(keptParts).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$partCol=$v"), true)
-    }
-    removed
+    IndexMaintenance.purgePartitions(spark, path, Seq("batch"), hit, keep)
+      .removed
   }
 
   /** State audit — the invariant check a pipeline schedules at audit
@@ -480,19 +439,13 @@ object CurationLoop {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        batch.withColumn("batch", lit(batchId + 1L))
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(s"$root/docs")
+        IndexMaintenance.landBatch(batch, batchId + 1L, s"$root/docs")
         val corpus = spark.read.parquet(s"$root/docs")
           .select("doc_id", "lang", "text")
         val report = runDay(spark, corpus, batch, batchId + 1L, root)
         import spark.implicits._
-        Seq(report).toDS().withColumn("batch", lit(batchId + 1L))
-          .coalesce(1)
-          .write.partitionBy("batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(s"$root/reports")
+        IndexMaintenance.landBatch(Seq(report).toDS().toDF().coalesce(1),
+          batchId + 1L, s"$root/reports")
       }
       .start()
 }

@@ -351,10 +351,7 @@ object Dedup {
   }
 
   private def labelsOrEmpty(spark: SparkSession, labelDir: String): DataFrame =
-    if (new org.apache.hadoop.fs.Path(labelDir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-          .exists(new org.apache.hadoop.fs.Path(labelDir)) &&
-        IndexMaintenance.parquetFileCount(spark, labelDir) > 0L)
+    if (IndexMaintenance.holdsParquet(spark, labelDir))
       spark.read.parquet(labelDir)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -481,13 +478,10 @@ object Dedup {
     // (bounded: touched buckets only) — the rewrite below must never
     // re-scan labelDir files mid-replacement ([[forgetClusterMembers]]
     // and the purge rewrites follow the same discipline)
-    updated.unionByName(fresh)
+    IndexMaintenance.replacePartitions(updated.unionByName(fresh)
       .withColumn("lb", labelBucket(col("id")))
       .localCheckpoint()
-      .repartition(col("lb")).sortWithinPartitions("label")
-      .write.partitionBy("lb")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(labelDir)
+      .repartition(col("lb")).sortWithinPartitions("label"), labelDir, "lb")
   }
 
   /** DECREMENTAL cluster maintenance — deletion's twin of
@@ -506,11 +500,10 @@ object Dedup {
     * the labels were built from; members left with no surviving pair
     * drop their label row (the [[clusterLabels]] ≥1-pair semantics).
     *
-    * The rewrite touches only the affected members' id-buckets
-    * (dynamic overwrite); a bucket emptied entirely is deleted
-    * explicitly — a dynamic overwrite writes nothing for it, which
-    * would otherwise leave the stale copy in place. Returns the number
-    * of affected clusters rebuilt. */
+    * The rewrite touches only the affected members' id-buckets, and a
+    * bucket emptied entirely is deleted
+    * ([[IndexMaintenance.rewritePartitions]], the purge's rewrite step).
+    * Returns the number of affected clusters rebuilt. */
   def forgetClusterMembers(spark: SparkSession, labelDir: String,
       ids: DataFrame, remainingDocs: DataFrame): Long = {
     val l = labelsOrEmpty(spark, labelDir)
@@ -546,17 +539,9 @@ object Dedup {
       .unionByName(rebuilt.select(col("id"), col("label")))
       .withColumn("lb", labelBucket(col("id")))
       .localCheckpoint() // feeds the write AND the emptied-bucket diff
-    out.repartition(col("lb")).sortWithinPartitions("label")
-      .write.partitionBy("lb")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(labelDir)
-    val keptBuckets = out.select(col("lb")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(labelDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    touched.filterNot(keptBuckets).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$labelDir/lb=$b"), true)
-    }
+    IndexMaintenance.rewritePartitions(out, labelDir, Seq("lb"),
+      touched.map(Seq(_)),
+      _.repartition(col("lb")).sortWithinPartitions("label"))
     nAffected
   }
 
@@ -1016,22 +1001,13 @@ object Dedup {
       increment: Long): Unit =
     writeIndexBands(bandRows(delta), indexDir, increment)
 
+  /** The band index's [[IndexMaintenance.writeIncrement]], band-clustered,
+    * under the index's writer lease. */
   private def writeIndexBands(bands: DataFrame, indexDir: String,
       increment: Long): Unit = IndexMaintenance.withWriterLease(
       bands.sparkSession, indexDir, s"minhash-index increment=$increment") {
-    bands.withColumn("increment", lit(increment))
-      .repartition(col("band"))
-      .sortWithinPartitions(col("band"))
-      .write.partitionBy("increment")
-      // build (increment 0): STATIC overwrite — a rebuild must clear any
-      // stale increments from a previous lifecycle. Append: DYNAMIC
-      // overwrite — only the partitions present in the written data
-      // (exactly increment=<n>) are replaced, so a retried increment
-      // lands once no matter how many times it runs.
-      .option("partitionOverwriteMode",
-        if (increment == 0L) "static" else "dynamic")
-      .mode("overwrite")
-      .parquet(indexDir)
+    IndexMaintenance.writeIncrement(bands, indexDir, increment,
+      IndexMaintenance.clusterBy("band"))
   }
 
   /** Fold every increment of the band index back into `increment=0`,
@@ -1117,20 +1093,31 @@ object Dedup {
     * on. With the exclusion, a retry recomputes exactly the first
     * attempt's pairs. */
   def dedupIncrement(batch: DataFrame, indexDir: String, increment: Long,
-      outDir: String, appendToIndex: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    val bands = bandRows(batch).persist()
+      outDir: String, appendToIndex: Boolean = true): Unit =
+    channelIncrement(batch, indexDir, increment, outDir, appendToIndex,
+      bandRows, (idx, bands) => crossPairs(idx, bands)
+        .unionByName(selfPairs(bands)),
+      writeIndexBands(_, indexDir, increment))
+
+  /** The step [[dedupIncrement]], [[containmentIncrement]] and
+    * [[winnowIncrement]] share: `rowsOf(batch)` is computed once and
+    * persisted; `pairs(index minus the batch's own increment, rows)` land
+    * as `batch=<increment>` of `outDir` ([[IndexMaintenance.landBatch]]);
+    * then, if `appendToIndex`, `append(rows)` adds the batch to the
+    * index as `increment=<increment>`. */
+  private def channelIncrement(batch: DataFrame, indexDir: String,
+      increment: Long, outDir: String, appendToIndex: Boolean,
+      rowsOf: DataFrame => DataFrame,
+      pairs: (DataFrame, DataFrame) => DataFrame,
+      append: DataFrame => Unit): Unit = {
+    val rows = rowsOf(batch).persist()
     try {
-      crossPairs(spark.read.parquet(indexDir)
-          .filter(col("increment").cast("long") =!= increment), bands)
-        .unionByName(selfPairs(bands))
-        .withColumn("batch", lit(increment))
-        .write.partitionBy("batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(outDir)
-      if (appendToIndex) writeIndexBands(bands, indexDir, increment)
-    } finally { bands.unpersist(blocking = false); () }
+      IndexMaintenance.landBatch(pairs(batch.sparkSession.read
+        .parquet(indexDir)
+        .filter(col("increment").cast("long") =!= increment), rows),
+        increment, outDir)
+      if (appendToIndex) append(rows)
+    } finally { rows.unpersist(blocking = false); () }
   }
 
   /** q128: the incremental lifecycle end-to-end — index 4/5 of the
@@ -1170,23 +1157,15 @@ object Dedup {
     * [[containmentIncrement]] without the band channel's recall
     * dependence on a J ≈ 0.5 pair. */
   def buildHeadIndex(docs: DataFrame, headDir: String): Unit =
-    writeHeadRows(headRows(docs), headDir, increment = 0L)
+    IndexMaintenance.writeIncrement(headRows(docs), headDir, 0L,
+      IndexMaintenance.clusterBy("hh"))
 
   /** Append-an-increment half — dynamic overwrite, idempotent per
     * increment (the [[appendMinhashIndex]] device). */
   def appendHeadIndex(delta: DataFrame, headDir: String,
       increment: Long): Unit =
-    writeHeadRows(headRows(delta), headDir, increment)
-
-  private def writeHeadRows(rows: DataFrame, headDir: String,
-      increment: Long): Unit =
-    rows.withColumn("increment", lit(increment))
-      .repartition(col("hh")).sortWithinPartitions(col("hh"))
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode",
-        if (increment == 0L) "static" else "dynamic")
-      .mode("overwrite")
-      .parquet(headDir)
+    IndexMaintenance.writeIncrement(headRows(delta), headDir, increment,
+      IndexMaintenance.clusterBy("hh"))
 
   /** Containment verify shared by every head-channel pair source: exact
     * max-directional containment from the carried shingle sets (ONE
@@ -1244,21 +1223,12 @@ object Dedup {
     * geometry would miss in the streaming path. */
   def containmentIncrement(batch: DataFrame, headDir: String,
       increment: Long, outDir: String,
-      appendToIndex: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    val heads = headRows(batch).persist()
-    try {
-      crossContainment(spark.read.parquet(headDir)
-          .filter(col("increment").cast("long") =!= increment), heads)
-        .unionByName(selfContainment(heads))
-        .withColumn("batch", lit(increment))
-        .write.partitionBy("batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(outDir)
-      if (appendToIndex) writeHeadRows(heads, headDir, increment)
-    } finally { heads.unpersist(blocking = false); () }
-  }
+      appendToIndex: Boolean = true): Unit =
+    channelIncrement(batch, headDir, increment, outDir, appendToIndex,
+      headRows, (idx, heads) => crossContainment(idx, heads)
+        .unionByName(selfContainment(heads)),
+      IndexMaintenance.writeIncrement(_, headDir, increment,
+        IndexMaintenance.clusterBy("hh")))
 
   /** q155: the head-channel lifecycle end-to-end — index the corpus in a
     * build (even ids) plus one appended increment (odd ids), then probe
@@ -1297,23 +1267,15 @@ object Dedup {
     * [[buildMinhashIndex]]/[[buildHeadIndex]] contract for the
     * local-overlap channel. */
   def buildWinnowIndex(docs: DataFrame, winnowDir: String): Unit =
-    writeWinnowRows(winnowRows(docs), winnowDir, increment = 0L)
+    IndexMaintenance.writeIncrement(winnowRows(docs), winnowDir, 0L,
+      IndexMaintenance.clusterBy("f"))
 
   /** Append-an-increment half — dynamic overwrite, idempotent per
     * increment (the [[appendMinhashIndex]] device). */
   def appendWinnowIndex(delta: DataFrame, winnowDir: String,
       increment: Long): Unit =
-    writeWinnowRows(winnowRows(delta), winnowDir, increment)
-
-  private def writeWinnowRows(rows: DataFrame, winnowDir: String,
-      increment: Long): Unit =
-    rows.withColumn("increment", lit(increment))
-      .repartition(col("f")).sortWithinPartitions(col("f"))
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode",
-        if (increment == 0L) "static" else "dynamic")
-      .mode("overwrite")
-      .parquet(winnowDir)
+    IndexMaintenance.writeIncrement(winnowRows(delta), winnowDir,
+      increment, IndexMaintenance.clusterBy("f"))
 
   /** Index-vs-delta winnow pairs. The delta's distinct fingerprints
     * broadcast INTO the index scan (f-clustered files → pruned scan; the
@@ -1387,20 +1349,11 @@ object Dedup {
     * and the exactly-once retry contract. */
   def winnowIncrement(batch: DataFrame, winnowDir: String,
       increment: Long, outDir: String,
-      appendToIndex: Boolean = true): Unit = {
-    val spark = batch.sparkSession
-    val fps = winnowRows(batch).persist()
-    try {
-      winnowProbePairs(spark.read.parquet(winnowDir)
-          .filter(col("increment").cast("long") =!= increment), fps)
-        .withColumn("batch", lit(increment))
-        .write.partitionBy("batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(outDir)
-      if (appendToIndex) writeWinnowRows(fps, winnowDir, increment)
-    } finally { fps.unpersist(blocking = false); () }
-  }
+      appendToIndex: Boolean = true): Unit =
+    channelIncrement(batch, winnowDir, increment, outDir, appendToIndex,
+      winnowRows, winnowProbePairs,
+      IndexMaintenance.writeIncrement(_, winnowDir, increment,
+        IndexMaintenance.clusterBy("f")))
 
   /** q173: the winnow-channel lifecycle end-to-end — index the corpus in
     * a build (even ids) plus one appended increment (odd ids), then
@@ -1450,22 +1403,17 @@ object Dedup {
     * bucket, `increment`-partitioned for the exactly-once append
     * discipline every other persisted index here uses. */
   def buildHashIndex(docs: DataFrame, hashDir: String): Unit =
-    writeHashRows(hashRows(docs), hashDir, increment = 0L)
+    IndexMaintenance.writeIncrement(hashRows(docs), hashDir, 0L, hashLayout)
 
   /** Append-an-increment half — dynamic overwrite, idempotent per
     * increment (a replayed micro-batch replaces its own partition). */
   def appendHashIndex(delta: DataFrame, hashDir: String,
       increment: Long): Unit =
-    writeHashRows(hashRows(delta), hashDir, increment)
+    IndexMaintenance.writeIncrement(hashRows(delta), hashDir, increment,
+      hashLayout)
 
-  private def writeHashRows(rows: DataFrame, hashDir: String,
-      increment: Long): Unit =
-    rows.withColumn("increment", lit(increment))
-      .repartition(col("hb")).sortWithinPartitions("hb", "content_hash")
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode",
-        if (increment == 0L) "static" else "dynamic")
-      .mode("overwrite").parquet(hashDir)
+  private val hashLayout: DataFrame => DataFrame =
+    _.repartition(col("hb")).sortWithinPartitions("hb", "content_hash")
 
   /** Probe a new batch against the store: per batch doc, is its content
     * already registered (`dup_of_corpus`, with the corpus canonical), a

@@ -188,8 +188,5 @@ object Gold {
     * the table ([[writePartitioned]]'s static overwrite would truncate all
     * partitions first). */
   def overwritePartitions(updated: DataFrame, path: String): Unit =
-    updated.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("year", "month")
-      .parquet(path)
+    IndexMaintenance.replacePartitions(updated, path, "year", "month")
 }

@@ -1,25 +1,153 @@
 package graft.engine
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 import scala.util.control.NonFatal
 
-/** Compaction for the persisted incremental indexes ([[Dedup]]'s MinHash
-  * band index, [[Sim]]'s IVF cell index). Each ingest lands as its own
-  * `increment=<n>` partition — correct and idempotent, but after many
-  * deltas the index is a pile of small increment files and every probe
-  * scan opens all of them. Compaction folds the increments back into the
-  * build partition (`increment=0`) with the layout the build pass writes,
-  * leaving probe results bit-identical while collapsing the file count —
-  * the maintenance task a real index runs off the ingest path.
+/** The one write path of the persisted stores (every incremental index,
+  * sketch/label/hash store and batch-keyed sink), plus their writer lease,
+  * compaction swap and increment listing. Three write rules, each written
+  * once here and nowhere else:
   *
-  * At cluster scale the rewrite is one distributed read→write of the
-  * index (no shuffle beyond the layout's own clustering repartition) and
-  * the cutover is two directory renames — probes racing the swap see
-  * either the old or the new layout, never a half-written mix.
+  *  - Increment write ([[writeIncrement]]): increment 0 is a STATIC
+  *    rebuild (a rebuild clears every stale increment of a previous
+  *    lifecycle); increment n is a DYNAMIC replace of partition
+  *    `increment=<n>` alone, so a retried append replaces its increment
+  *    instead of duplicating it. The caller passes the file layout.
+  *  - Batch landing ([[landBatch]]): a micro-batch or day lands as
+  *    partition `batch=<id>` under dynamic overwrite, so a replayed batch
+  *    id replaces its own rows and every other batch stays as it was —
+  *    the exactly-once device of every streaming and day-loop sink.
+  *  - Partition purge ([[purgePartitions]]): deleting rows rewrites only
+  *    the partitions that hold a match (dynamic overwrite) and deletes
+  *    explicitly every partition the purge empties, since a dynamic
+  *    overwrite writes nothing for it and would leave the stale copy.
+  *
+  * The writers take no lease: a caller that owns a leased index wraps
+  * the write in [[withWriterLease]] itself.
+  *
+  * Compaction ([[rewrite]]) folds a pile of increments back into the
+  * build partition through a staging sibling and two directory renames —
+  * probes racing the swap see either the old or the new layout, never a
+  * half-written mix.
   */
 object IndexMaintenance {
+
+  /** Rule 1, the increment write: `rows` land as partition
+    * `increment=<increment>` of the store at `dir`, sub-partitioned by
+    * `within` (the IVF stores' `cell`). `layout` shapes the files (the
+    * clustering repartition and sort) after the increment column is
+    * added. Increment 0 overwrites the whole store (static); any other
+    * increment replaces `increment=<n>` alone (dynamic). */
+  private[graft] def writeIncrement(rows: DataFrame, dir: String,
+      increment: Long, layout: DataFrame => DataFrame = identity,
+      within: Seq[String] = Nil): Unit =
+    layout(rows.withColumn("increment", lit(increment)))
+      .write.partitionBy("increment" +: within: _*)
+      .option("partitionOverwriteMode",
+        if (increment == 0L) "static" else "dynamic")
+      .mode("overwrite").parquet(dir)
+
+  /** The file layout most stores share: files clustered on `c` and sorted
+    * by it within each file, so parquet min/max stats prune a probe's
+    * scan to the files covering its keys. */
+  private[graft] def clusterBy(c: String): DataFrame => DataFrame =
+    _.repartition(col(c)).sortWithinPartitions(col(c))
+
+  /** Rule 2, the batch landing: `df` lands as partition `batch=<batchId>`
+    * of `out`, idempotent per (batchId, out). */
+  def landBatch(df: DataFrame, batchId: Long, out: String): Unit =
+    replacePartitions(df.withColumn("batch", lit(batchId)), out, "batch")
+
+  /** The dynamic overwrite under rules 2 and 3 and every other partition
+    * replace ([[Gold.overwritePartitions]], [[Crawl.buildCdxIndex]], the
+    * label merge, the curated landing): replace exactly the partitions
+    * (over `partCols`) that `rows` holds, leaving every other partition's
+    * files as they were. */
+  private[graft] def replacePartitions(rows: DataFrame, dir: String,
+      partCols: String*): Unit =
+    rows.write.partitionBy(partCols: _*)
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").parquet(dir)
+
+  /** What one [[purgePartitions]] did: the rows it removed, the partitions
+    * it rewrote and those it emptied and deleted (each partition one value
+    * per partition column, in `partCols` order). */
+  final case class Purge(removed: Long, touched: Seq[Seq[Any]],
+      emptied: Seq[Seq[Any]])
+
+  private val NoPurge = Purge(0L, Nil, Nil)
+
+  /** Rule 3, the partition purge: drop the rows `keep` filters out of the
+    * store at `dir`, partitioned by `partCols`. Only the partitions where
+    * `hit` finds a row are read, rewritten with `layout` and replaced; a
+    * partition left with no row is deleted. A missing or empty store
+    * purges nothing. The touched partitions are a bounded driver-side key
+    * set (at most the store's partition count). */
+  private[graft] def purgePartitions(spark: SparkSession, dir: String,
+      partCols: Seq[String], hit: DataFrame => DataFrame,
+      keep: DataFrame => DataFrame,
+      layout: DataFrame => DataFrame = identity): Purge = {
+    if (!holdsParquet(spark, dir)) return NoPurge
+    val df = spark.read.parquet(dir)
+    val touched = partitionsOf(hit(df), partCols)
+    if (touched.isEmpty) return NoPurge
+    // localCheckpoint: materialize BEFORE the in-place rewrite so no task
+    // re-reads the files being replaced
+    val part = df.filter(inPartitions(partCols, touched)).localCheckpoint()
+    val kept = keep(part).localCheckpoint()
+    val removed = part.count() - kept.count()
+    Purge(removed, touched,
+      rewritePartitions(kept, dir, partCols, touched, layout))
+  }
+
+  /** The rewrite step of a purge, for a caller that derives the surviving
+    * rows itself: `layout(rows)` replaces the partitions `rows` holds, and
+    * each `touched` partition that `rows` no longer holds is deleted (a
+    * dynamic overwrite writes nothing for it). `rows` read from `dir` must
+    * be materialized first. Returns the deleted partitions. */
+  private[graft] def rewritePartitions(rows: DataFrame, dir: String,
+      partCols: Seq[String], touched: Seq[Seq[Any]],
+      layout: DataFrame => DataFrame = identity): Seq[Seq[Any]] = {
+    replacePartitions(layout(rows), dir, partCols: _*)
+    val emptied = touched.filterNot(partitionsOf(rows, partCols).toSet)
+    deletePartitions(rows.sparkSession, dir, partCols, emptied)
+    emptied
+  }
+
+  /** Delete the listed partitions of `dir` (a sidecar store emptied in
+    * step with its purged main store). */
+  private[graft] def deletePartitions(spark: SparkSession, dir: String,
+      partCols: Seq[String], parts: Seq[Seq[Any]]): Unit = {
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    parts.foreach { v =>
+      fs.delete(new Path(dir + partCols.zip(v)
+        .map { case (c, x) => s"/$c=$x" }.mkString), true)
+    }
+  }
+
+  private def partitionsOf(df: DataFrame,
+      partCols: Seq[String]): Seq[Seq[Any]] =
+    df.select(partCols.map(col): _*).distinct().collect().map(_.toSeq).toSeq
+
+  private def inPartitions(partCols: Seq[String],
+      parts: Seq[Seq[Any]]): Column = partCols match {
+    case Seq(c) => col(c).isin(parts.map(_.head): _*)
+    case _ => parts.map(v => partCols.zip(v)
+      .map { case (c, x) => col(c) === lit(x) }.reduce(_ && _)).reduce(_ || _)
+  }
+
+  /** Whether `dir` exists and holds a parquet data file. A write of no
+    * rows leaves only `_SUCCESS`, from which no reader can infer a
+    * schema. */
+  private[graft] def holdsParquet(spark: SparkSession,
+      dir: String): Boolean = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p) &&
+      parquetFileCount(spark, dir) > 0L
+  }
 
   /** A second writer tried to mutate an index while another held its
     * lease — the single-writer ownership contract (SURVEY §8) violated
@@ -287,14 +415,40 @@ object IndexMaintenance {
     * over the same data race build/append/probe — the static build
     * wipes increments mid-probe (ConcurrencySpec now runs the lifecycle
     * queries in its parallel mix to pin the absence of that race). The
-    * dir is registered for delete-on-exit so repeated bench runs don't
-    * accumulate scratch indexes past the JVM's lifetime. */
+    * dir is not created here (a [[cloneDir]] target must not exist yet),
+    * but it is registered with [[scratchDirs]], so it is deleted when the
+    * JVM exits. */
   private[graft] def scratchIndexDir(spark: SparkSession,
       kind: String): String = {
     val p = new Path(s"${sys.props("java.io.tmpdir")}/graft-$kind-" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(12))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).deleteOnExit(p)
+    scratchDirs.register(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
     p.toString
+  }
+
+  /** Paths deleted recursively by [[run]], whether or not they existed
+    * when registered. Hadoop's `FileSystem.deleteOnExit` is no substitute:
+    * it registers nothing for a path that does not exist yet. */
+  private[graft] final class ExitDeletes {
+    private val paths =
+      new java.util.concurrent.ConcurrentHashMap[Path, FileSystem]()
+
+    def register(fs: FileSystem, p: Path): Unit = { paths.put(p, fs); () }
+
+    def run(): Unit = paths.forEach { (p, fs) =>
+      try fs.delete(p, true) catch { case NonFatal(_) => () }
+    }
+  }
+
+  /** The scratch dirs of this JVM, deleted by one shutdown hook that runs
+    * before Hadoop's FileSystem cache closes (a closed FileSystem deletes
+    * nothing) and after Spark has stopped its context. */
+  private lazy val scratchDirs: ExitDeletes = {
+    val d = new ExitDeletes
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => d.run(), FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
+    d
   }
 
   /** Snapshot-copy a persisted index/label store to a fresh path —

@@ -136,10 +136,10 @@ object RetrievalLoop {
     // serve the day's probes from the post-append state, batch-keyed
     val (lexRes, lexObs) = TermIndex.probeTermIndexObserved(spark, terms,
       s"$root/term_index", TextOps.RETRIEVAL_TOP_K)
-    landKeyed(lexRes, increment, s"$root/lex_serving/results")
+    IndexMaintenance.landBatch(lexRes, increment, s"$root/lex_serving/results")
     val (vecRes, vecObs) = Sim.probeIvfIndexObserved(probes,
       s"$root/vec_index")
-    landKeyed(vecRes, increment, s"$root/vec_serving/results")
+    IndexMaintenance.landBatch(vecRes, increment, s"$root/vec_serving/results")
     val report = RetrievalDayReport(
       batchPostings = inc,
       batchDocs = incDocs,
@@ -149,7 +149,8 @@ object RetrievalLoop {
       vecAssignRows = vecObs.get("assignment_rows").asInstanceOf[Long],
       vecCellsProbed = vecObs.get("cells_probed").asInstanceOf[Long])
     import spark.implicits._
-    landKeyed(Seq(report).toDS().toDF(), increment, s"$root/reports")
+    IndexMaintenance.landBatch(Seq(report).toDS().toDF(), increment,
+      s"$root/reports")
     // the day COMMITS last: until the marker lands, as-of readers serve
     // day N−1 from every sink; a crash anywhere above heals by replay
     // (idempotent sinks) and re-lands the same marker
@@ -181,13 +182,4 @@ object RetrievalLoop {
         TermIndex.forgetDocs(spark, docIds, s"$root/term_index"),
       vectorsRemoved =
         Sim.forgetVectors(spark, vecIds, s"$root/vec_index"))
-
-  /** Batch-keyed dynamic-overwrite landing — the library-wide
-    * exactly-once retry device. */
-  private def landKeyed(df: DataFrame, increment: Long,
-      out: String): Unit =
-    df.withColumn("batch", lit(increment))
-      .write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(out)
 }

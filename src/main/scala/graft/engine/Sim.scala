@@ -443,13 +443,8 @@ object Sim {
       e.sparkSession, indexDir,
       s"ivf-index increment=$increment") {
     val cents = e.sparkSession.read.parquet(s"$indexDir/centroids")
-    assignWithVec(e, cents)
-      .withColumn("increment", lit(increment))
-      .write.partitionBy("increment", "cell")
-      .option("partitionOverwriteMode",
-        if (increment == 0L) "static" else "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/vectors")
+    IndexMaintenance.writeIncrement(assignWithVec(e, cents),
+      s"$indexDir/vectors", increment, within = Seq("cell"))
   }
 
   /** IVF twin of [[Dedup.compactMinhashIndex]]: fold the vector
@@ -461,11 +456,9 @@ object Sim {
   def compactIvfIndex(spark: SparkSession, indexDir: String): Unit =
     IndexMaintenance.rewrite(spark, s"$indexDir/vectors",
       leaseDir = indexDir) { staging =>
-      spark.read.parquet(s"$indexDir/vectors")
-        .select(col("vec_id"), col("embedding"), col("nrm"),
-          lit(0L).as("increment"), col("cell"))
-        .write.partitionBy("increment", "cell")
-        .mode("overwrite").parquet(staging)
+      IndexMaintenance.writeIncrement(spark.read.parquet(s"$indexDir/vectors")
+        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell")),
+        staging, 0L, within = Seq("cell"))
     }
 
   // -------------------------- persisted IVF-PQ index lifecycle (q149)
@@ -558,7 +551,7 @@ object Sim {
           col("dp"), lit(0.0).as("cos"), lit(0L).as("cent_id"),
           lit(null).cast("array<float>").as("embedding"),
           lit(null).cast("double").as("nrm"))
-    cellRows.unionByName(codeRows)
+    IndexMaintenance.writeIncrement(cellRows.unionByName(codeRows)
       .groupBy("vec_id").agg(
         max(when(col("kind") === 0,
           struct(col("cos"), (-col("cent_id")).as("nc")))).as("bc"),
@@ -568,13 +561,8 @@ object Sim {
         first(col("embedding"), ignoreNulls = true).as("embedding"),
         first(col("nrm"), ignoreNulls = true).as("nrm"))
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        (-col("bc.nc")).as("cell"), pqCodeOf(col("bests")).as("code"))
-      .withColumn("increment", lit(increment))
-      .write.partitionBy("increment", "cell")
-      .option("partitionOverwriteMode",
-        if (increment == 0L) "static" else "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/vectors")
+        (-col("bc.nc")).as("cell"), pqCodeOf(col("bests")).as("code")),
+      s"$indexDir/vectors", increment, within = Seq("cell"))
   }
 
   /** [[compactIvfIndex]]'s twin for the compressed index: fold the
@@ -583,53 +571,31 @@ object Sim {
   def compactIvfPqIndex(spark: SparkSession, indexDir: String): Unit =
     IndexMaintenance.rewrite(spark, s"$indexDir/vectors",
       leaseDir = indexDir) { staging =>
-      spark.read.parquet(s"$indexDir/vectors")
+      IndexMaintenance.writeIncrement(spark.read.parquet(s"$indexDir/vectors")
         .select(col("vec_id"), col("embedding"), col("nrm"), col("code"),
-          lit(0L).as("increment"), col("cell"))
-        .write.partitionBy("increment", "cell")
-        .mode("overwrite").parquet(staging)
+          col("cell")), staging, 0L, within = Seq("cell"))
     }
 
   /** Deletion's reach into the vector store ([[graft.engine
     * .CurationLoop.forget]]'s device for the dense modality, serving
     * both the plain IVF and the IVF-PQ layout — the row schema rides
     * along untouched): drop the ids' vectors by rewriting only the
-    * increments that contain them, cell partitioning preserved, frozen
-    * centroids/codebook untouched (deletion must not retrain — the
-    * monitor/probe contracts depend on frozen artifacts). Emptied
-    * (increment, cell) leaf partitions are deleted explicitly (a
-    * dynamic overwrite writes nothing for them). Returns vectors
-    * removed. */
+    * (increment, cell) leaves that contain them
+    * ([[IndexMaintenance.purgePartitions]], which also deletes a leaf it
+    * empties), frozen centroids/codebook untouched (deletion must not
+    * retrain — the monitor/probe contracts depend on frozen artifacts).
+    * Returns vectors removed. */
   def forgetVectors(spark: SparkSession, ids: DataFrame,
       indexDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/vectors")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p) ||
-        IndexMaintenance.parquetFileCount(spark, p.toString) == 0L) return 0L
+    if (!IndexMaintenance.holdsParquet(spark, s"$indexDir/vectors")) return 0L
     // deletion is a mutation like any other: same canonical ROOT lease
     // as build/append/compact/recluster (one family, one lease path)
     IndexMaintenance.withWriterLease(spark, indexDir, "ivf-forget") {
-    val vecs = spark.read.parquet(s"$indexDir/vectors")
-    val idc = broadcast(ids.select(col("vec_id")))
-    val touched = vecs.join(idc, Seq("vec_id"), "left_semi")
-      .select(col("increment")).distinct().collect().map(_.get(0))
-    if (touched.isEmpty) return 0L
-    val part = vecs.filter(col("increment").isin(touched: _*))
-      .localCheckpoint()
-    val kept = part.join(idc, Seq("vec_id"), "left_anti").localCheckpoint()
-    val removed = part.count() - kept.count()
-    kept.write.partitionBy("increment", "cell")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$indexDir/vectors")
-    val before = part.select(col("increment"), col("cell")).distinct()
-      .collect().map(r => (r.get(0), r.get(1)))
-    val after = kept.select(col("increment"), col("cell")).distinct()
-      .collect().map(r => (r.get(0), r.get(1))).toSet
-    before.filterNot(after).foreach { case (i, c) =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$indexDir/vectors/increment=$i/cell=$c"), true)
-    }
-    removed
+      val idc = broadcast(ids.select(col("vec_id")))
+      IndexMaintenance.purgePartitions(spark, s"$indexDir/vectors",
+        Seq("increment", "cell"),
+        _.join(idc, Seq("vec_id"), "left_semi"),
+        _.join(idc, Seq("vec_id"), "left_anti")).removed
     }
   }
 

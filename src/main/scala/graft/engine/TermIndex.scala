@@ -71,29 +71,19 @@ object TermIndex {
   private def writeIncrement(docs: DataFrame, indexDir: String,
       increment: Long): Unit = IndexMaintenance.withWriterLease(
       docs.sparkSession, indexDir, s"term-index increment=$increment") {
-    val mode = if (increment == 0L) "static" else "dynamic"
-    postings(docs).withColumn("increment", lit(increment))
-      .repartition(col("term"))
-      .sortWithinPartitions(col("term"))
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode", mode)
-      .mode("overwrite")
-      .parquet(s"$indexDir/postings")
+    IndexMaintenance.writeIncrement(postings(docs), s"$indexDir/postings",
+      increment, IndexMaintenance.clusterBy("term"))
     // Scoring constants, derived from the increment's just-written
     // postings (a columnar (doc_id, tf) read — the text is never
     // re-tokenized): sum(tf) over a doc's postings IS its token count,
     // so total_tokens = sum(tf) and n_docs = distinct doc_id. One row
     // per increment; probes sum the sidecar instead of the corpus.
-    docs.sparkSession.read.parquet(s"$indexDir/postings")
-      .filter(col("increment") === increment)
-      .agg(count_distinct(col("doc_id")).as("n_docs"),
-        sum("tf").as("total_tokens"))
-      .withColumn("increment", lit(increment))
-      .coalesce(1)
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode", mode)
-      .mode("overwrite")
-      .parquet(s"$indexDir/stats")
+    IndexMaintenance.writeIncrement(
+      docs.sparkSession.read.parquet(s"$indexDir/postings")
+        .filter(col("increment") === increment)
+        .agg(count_distinct(col("doc_id")).as("n_docs"),
+          sum("tf").as("total_tokens")),
+      s"$indexDir/stats", increment, _.coalesce(1))
   }
 
   /** Fold every increment back into `increment=0`, preserving the
@@ -103,22 +93,13 @@ object TermIndex {
     * path through [[IndexMaintenance.rewrite]]'s staging swap. */
   def compactTermIndex(spark: SparkSession, indexDir: String): Unit =
     IndexMaintenance.rewrite(spark, indexDir) { staging =>
-      spark.read.parquet(s"$indexDir/postings")
-        .select(col("term"), col("doc_id"), col("tf"), col("len"))
-        .withColumn("increment", lit(0L))
-        .repartition(col("term"))
-        .sortWithinPartitions(col("term"))
-        .write.partitionBy("increment")
-        .mode("overwrite")
-        .parquet(s"$staging/postings")
-      spark.read.parquet(s"$indexDir/stats")
+      IndexMaintenance.writeIncrement(spark.read.parquet(s"$indexDir/postings")
+        .select(col("term"), col("doc_id"), col("tf"), col("len")),
+        s"$staging/postings", 0L, IndexMaintenance.clusterBy("term"))
+      IndexMaintenance.writeIncrement(spark.read.parquet(s"$indexDir/stats")
         .agg(sum("n_docs").as("n_docs"),
-          sum("total_tokens").as("total_tokens"))
-        .withColumn("increment", lit(0L))
-        .coalesce(1)
-        .write.partitionBy("increment")
-        .mode("overwrite")
-        .parquet(s"$staging/stats")
+          sum("total_tokens").as("total_tokens")),
+        s"$staging/stats", 0L, _.coalesce(1))
     }
 
   /** Serve a retrieval probe from the persisted index: BM25-family
@@ -190,51 +171,35 @@ object TermIndex {
     * RE-DERIVE the stats sidecar for exactly those increments — df is
     * deletion-proof already (count-distinct at probe time), but n_docs
     * and total_tokens are per-increment constants that would keep
-    * counting the deleted docs' tokens in every later score. Emptied
-    * increment partitions are deleted explicitly (both stores). Returns
-    * postings rows removed. */
+    * counting the deleted docs' tokens in every later score. The postings
+    * go through [[IndexMaintenance.purgePartitions]]; an increment it
+    * empties is deleted from both stores. Returns postings rows
+    * removed. */
   def forgetDocs(spark: SparkSession, ids: DataFrame,
       indexDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p) ||
-        IndexMaintenance.parquetFileCount(spark, p.toString) == 0L) return 0L
-    val post = spark.read.parquet(s"$indexDir/postings")
     val idc = broadcast(ids.select(col("doc_id")))
-    val touched = post.join(idc, Seq("doc_id"), "left_semi")
-      .select(col("increment")).distinct().collect().map(_.get(0))
-    if (touched.isEmpty) return 0L
-    val part = post.filter(col("increment").isin(touched: _*))
-      .localCheckpoint()
-    val kept = part.join(idc, Seq("doc_id"), "left_anti").localCheckpoint()
-    val removed = part.count() - kept.count()
-    kept.repartition(col("term")).sortWithinPartitions(col("term"))
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$indexDir/postings")
-    // stats re-derived from the REWRITTEN postings of the touched
-    // increments only (the writeIncrement device)
-    val stats = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("increment").isin(touched: _*))
-      .groupBy("increment")
-      .agg(count_distinct(col("doc_id")).as("n_docs"),
-        sum("tf").as("total_tokens"))
-      .select(col("n_docs"), col("total_tokens"), col("increment"))
-      .coalesce(1)
-      .localCheckpoint()
-    stats.write.partitionBy("increment")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$indexDir/stats")
-    // drop emptied partitions in both stores
-    val keptIncs = kept.select(col("increment")).distinct()
-      .collect().map(_.get(0)).toSet
-    touched.filterNot(keptIncs).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$indexDir/postings/increment=$v"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$indexDir/stats/increment=$v"), true)
+    val purged = IndexMaintenance.purgePartitions(spark,
+      s"$indexDir/postings", Seq("increment"),
+      _.join(idc, Seq("doc_id"), "left_semi"),
+      _.join(idc, Seq("doc_id"), "left_anti"),
+      IndexMaintenance.clusterBy("term"))
+    if (purged.touched.nonEmpty) {
+      // stats re-derived from the REWRITTEN postings of the touched
+      // increments only (the writeIncrement device)
+      val stats = spark.read.parquet(s"$indexDir/postings")
+        .filter(col("increment").isin(purged.touched.map(_.head): _*))
+        .groupBy("increment")
+        .agg(count_distinct(col("doc_id")).as("n_docs"),
+          sum("tf").as("total_tokens"))
+        .select(col("n_docs"), col("total_tokens"), col("increment"))
+        .coalesce(1)
+        .localCheckpoint()
+      IndexMaintenance.replacePartitions(stats, s"$indexDir/stats",
+        "increment")
+      IndexMaintenance.deletePartitions(spark, s"$indexDir/stats",
+        Seq("increment"), purged.emptied)
     }
-    removed
+    purged.removed
   }
 
   /** Doc-disjointness AUDIT — the scheduled invariant check for

@@ -2011,23 +2011,19 @@ object TextOps {
     * overwrite, source-sorted files — the [[graft.engine.Dedup]] store
     * contract applied to sketch state. */
   def buildKmvStore(docs: DataFrame, storeDir: String): Unit =
-    writeKmvRows(kmvSketchRows(docs), storeDir, increment = 0L)
+    IndexMaintenance.writeIncrement(kmvSketchRows(docs), storeDir, 0L,
+      kmvLayout)
 
   /** Append-an-increment half — the delta slice's OWN sketches (computed
     * from the delta alone, the base corpus is never rescanned), dynamic
     * overwrite so a replayed increment replaces itself (idempotent). */
   def appendKmvStore(delta: DataFrame, storeDir: String,
       increment: Long): Unit =
-    writeKmvRows(kmvSketchRows(delta), storeDir, increment)
+    IndexMaintenance.writeIncrement(kmvSketchRows(delta), storeDir,
+      increment, kmvLayout)
 
-  private def writeKmvRows(rows: DataFrame, storeDir: String,
-      increment: Long): Unit =
-    rows.withColumn("increment", lit(increment))
-      .coalesce(1).sortWithinPartitions("source", "h")
-      .write.partitionBy("increment")
-      .option("partitionOverwriteMode",
-        if (increment == 0L) "static" else "dynamic")
-      .mode("overwrite").parquet(storeDir)
+  private val kmvLayout: DataFrame => DataFrame =
+    _.coalesce(1).sortWithinPartitions("source", "h")
 
   /** q198: the KMV sketch-store lifecycle end-to-end — build the
     * per-source sketch store over the `doc_id %3 != 0` corpus

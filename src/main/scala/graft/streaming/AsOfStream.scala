@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.engine.Lineages
+import graft.engine.{IndexMaintenance, Lineages}
 import graft.engine.Lineages.Lineage
 
 /** Streaming as-of (temporal) join — the canonical production consumer of
@@ -28,8 +28,9 @@ import graft.engine.Lineages.Lineage
   *
   * Delivery is exactly-once under micro-batch retry: each batch lands
   * under its own `batch=<id>` partition with dynamic partition
-  * overwrite ([[Replay.landBatch]]), so a replayed batch replaces itself
-  * instead of re-appending (StreamingSpec simulates the retry). Readers
+  * overwrite ([[IndexMaintenance.landBatch]]), so a replayed batch
+  * replaces itself instead of re-appending (StreamingSpec simulates the
+  * retry). Readers
   * that don't care about provenance just read `outDir`; `batch` is one
   * more hive column. */
 object AsOfStream {
@@ -214,7 +215,6 @@ object AsOfStream {
       .orderBy("direction", "user_id", "click_id")
 
   private def runAsOfLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val inDir = EventsStream.writeTimeSlices(spark, dir, "stream-asof",
       flushHeartbeat = true)
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-asof-out")
@@ -232,7 +232,7 @@ object AsOfStream {
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Replay.landBatch(batch, batchId, s"$outDir/direction=$d")
+          IndexMaintenance.landBatch(batch, batchId, s"$outDir/direction=$d")
         }
         .start()
     }
@@ -256,7 +256,7 @@ object AsOfStream {
       .orderBy("event_id")
 
   private def runAsOfSinkLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.{IndexMaintenance, Kpis}
+    import graft.engine.Kpis
     val inDir = EventsStream.writeTimeSlices(spark, dir, "stream-asink")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-asink-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-asink-ckpt")
@@ -286,7 +286,7 @@ object AsOfStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Replay.landBatch(
+        IndexMaintenance.landBatch(
           graft.plans.AsOf.joinMulti(batch, reference, keys,
             leftTime, rightTime, rightTie, direction, tolerance,
             broadcastRight = true),

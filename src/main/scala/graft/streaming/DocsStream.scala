@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Lineages, Schemas}
+import graft.engine.{IndexMaintenance, Lineages, Schemas}
 import graft.engine.Lineages.Lineage
 import graft.functions.TextFns
 
@@ -128,10 +128,8 @@ object DocsStream {
     * (lang, batch) leaves — idempotent per (batchId, out). */
   private[graft] def landCurated(batch: DataFrame, batchId: Long,
       out: String): Unit =
-    batch.withColumn("batch", lit(batchId))
-      .write.partitionBy("lang", "batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(out)
+    IndexMaintenance.replacePartitions(batch.withColumn("batch", lit(batchId)),
+      out, "lang", "batch")
 
   /** Fold the curated sink's accumulated `batch=<id>` sub-partitions into
     * `batch=0` per language — the lake-side twin of
@@ -204,7 +202,7 @@ object DocsStream {
       .orderBy("doc_id")
 
   private def runCuratedLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.{IndexMaintenance, Tables}
+    import graft.engine.Tables
     val root = IndexMaintenance.scratchIndexDir(spark, "stream")
     val (inDir, outDir, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     val docs = Tables.documents(spark, dir)
@@ -249,7 +247,7 @@ object DocsStream {
             batch.select(col("doc_id"), col("text")), hashDir,
             excludeIncrement = inc)
           .localCheckpoint() // feeds the audit landing AND the admit join
-        Replay.landBatch(verdicts, inc, outDir)
+        IndexMaintenance.landBatch(verdicts, inc, outDir)
         val admitted = batch
           .join(verdicts.filter(col("verdict") === "fresh")
             .select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -310,7 +308,7 @@ object DocsStream {
   }
 
   /** [[sourceCapGate]] → lake: verdict rows land batch-keyed under
-    * dynamic overwrite ([[Replay.landBatch]]), so a replayed
+    * dynamic overwrite ([[IndexMaintenance.landBatch]]), so a replayed
     * micro-batch replaces its own partition with the identical rows the
     * rolled-back state re-derives. */
   def sourceCapSink(docs: DataFrame, cap: Long, out: String,
@@ -320,7 +318,7 @@ object DocsStream {
       .option("checkpointLocation", checkpoint)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Replay.landBatch(batch, batchId, out)
+        IndexMaintenance.landBatch(batch, batchId, out)
       }
       .start()
 
@@ -345,7 +343,7 @@ object DocsStream {
     * Scale shape: the model is counting-bounded at (V+1)² rows
     * (broadcast at any corpus size); no streaming state at all — the
     * gate is stateless per doc, so an unbounded feed runs at constant
-    * memory. Exactly-once under retry via [[Replay.landBatch]]. */
+    * memory. Exactly-once under retry via [[IndexMaintenance.landBatch]]. */
   def lmGateSink(docs: DataFrame, vocab: DataFrame, model: DataFrame,
       out: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -353,7 +351,7 @@ object DocsStream {
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Replay.landBatch(
+        IndexMaintenance.landBatch(
           graft.engine.TextOps.lmScoreAgainst(batch, vocab, model)
             .withColumn("kept", col("lm_score") >= LM_GATE_MIN),
           batchId, out)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.engine.{Lineages, Sim}
+import graft.engine.{IndexMaintenance, Lineages, Sim}
 
 /** Streaming embedding-distribution drift monitor — the stream form of
   * [[graft.engine.Sim.embeddingDrift]]: a live vector feed is assigned
@@ -28,7 +28,7 @@ object DriftStream {
     * cell histogram lands as partition `batch=<batchId>`. */
   private[graft] def landDriftCells(batch: DataFrame, batchId: Long,
       cents: DataFrame, out: String): Unit =
-    Replay.landBatch(
+    IndexMaintenance.landBatch(
       Sim.cellHistogram(Sim.assignTo(Sim.withNorm(batch), cents)).coalesce(1),
       batchId, out)
 
@@ -70,7 +70,7 @@ object DriftStream {
       dir: String): String = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.hadoop.fs.Path
-    import graft.engine.{IndexMaintenance, Tables}
+    import graft.engine.Tables
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-drift-cells-in")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-drift-cells-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-drift-cells-ckpt")

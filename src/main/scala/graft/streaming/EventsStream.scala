@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.engine.{Lineages, Num}
+import graft.engine.{IndexMaintenance, Lineages, Num}
 import graft.engine.Lineages.Lineage
 
 /** Structured Streaming surface (SURVEY.md §2.9 — optional in the
@@ -257,7 +257,7 @@ object EventsStream {
   private def writeTimeSlicesUncached(spark: SparkSession, dir: String,
       tag: String, flushHeartbeat: Boolean,
       flushTypes: Seq[String]): String = {
-    import graft.engine.{IndexMaintenance, Tables}
+    import graft.engine.Tables
     val inDir = IndexMaintenance.scratchIndexDir(spark, s"$tag-in")
     val ev = Tables.events(spark, dir)
     val (tmin, tmax) = eventRangeUs(ev)
@@ -319,7 +319,7 @@ object EventsStream {
     * still clears every real row's emission horizon. */
   private[streaming] def writeUnorderedSlices(spark: SparkSession,
       dir: String, tag: String): (String, Long) = {
-    import graft.engine.{IndexMaintenance, Tables}
+    import graft.engine.Tables
     val inDir = IndexMaintenance.scratchIndexDir(spark, s"$tag-in")
     val ev = Tables.events(spark, dir)
     val (tmin, tmax) = eventRangeUs(ev)
@@ -452,7 +452,6 @@ object EventsStream {
       .orderBy("event_type", "bucket")
 
   private def runDriftLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.IndexMaintenance
     val inDir = writeTimeSlices(spark, dir, "stream-drift")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-drift-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, "stream-drift-ckpt")
@@ -563,7 +562,7 @@ object EventsStream {
       .orderBy("event_id")
 
   private def runDedupLineage(spark: SparkSession, dir: String): String = {
-    import graft.engine.{IndexMaintenance, Tables}
+    import graft.engine.Tables
     import org.apache.hadoop.fs.{FileUtil, Path}
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-dd-in")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-dd-out")
@@ -600,7 +599,7 @@ object EventsStream {
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Replay.landBatch(batch, batchId, outDir)
+          IndexMaintenance.landBatch(batch, batchId, outDir)
           if (batchId == killAtBatch) throw new SimulatedCrash
         }
         .start()
@@ -644,14 +643,13 @@ object EventsStream {
   /** The shared body of the events replay lineages: fresh `<tag>-out`
     * and `<tag>-ckpt` dirs, the size-derived build session, `stream`
     * built on it and drained to completion, each micro-batch landed
-    * through [[Replay.landBatch]]. Append-mode rows are final and
-    * update-mode rows supersede earlier ones; either way the batch-keyed
-    * landing is exactly-once under micro-batch retry. Returns the landing
-    * dir. q210 (complete mode overwrites wholesale) and q215
+    * through [[IndexMaintenance.landBatch]]. Append-mode rows are final
+    * and update-mode rows supersede earlier ones; either way the
+    * batch-keyed landing is exactly-once under micro-batch retry. Returns
+    * the landing dir. q210 (complete mode overwrites wholesale) and q215
     * (kill-and-restart) keep their own bodies. */
   private def runLineage(spark: SparkSession, dir: String, tag: String,
       outputMode: String)(stream: SparkSession => DataFrame): String = {
-    import graft.engine.IndexMaintenance
     val outDir = IndexMaintenance.scratchIndexDir(spark, s"$tag-out")
     val ckpt = IndexMaintenance.scratchIndexDir(spark, s"$tag-ckpt")
     val bs = Replay.buildSession(spark, s"$dir/events.parquet")
@@ -659,7 +657,7 @@ object EventsStream {
       .outputMode(outputMode)
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Replay.landBatch(batch, batchId, outDir)
+        IndexMaintenance.landBatch(batch, batchId, outDir)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -682,7 +680,7 @@ object EventsStream {
     * Spec-scale only: the dense `row_number` index is a global sort. */
   private[graft] def runHourlyFromRate(spark: SparkSession,
       dir: String): DataFrame = {
-    import graft.engine.{IndexMaintenance, Tables}
+    import graft.engine.Tables
     import org.apache.spark.sql.expressions.Window
     val indexed = Tables.events(spark, dir)
       .withColumn("rn", row_number().over(
@@ -706,7 +704,7 @@ object EventsStream {
       .outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Replay.landBatch(batch, batchId, outDir)
+        IndexMaintenance.landBatch(batch, batchId, outDir)
       }
       .start()
     // the rate source never ends: run until the corpus batches (0..2)

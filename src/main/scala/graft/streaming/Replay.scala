@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
 
 import graft.engine.IndexMaintenance
 
@@ -15,11 +14,13 @@ import graft.engine.IndexMaintenance
   *    `maxFilesPerTrigger=1` ([[sliceStream]]) slice i is micro-batch i —
   *    the arrival order is part of the construction, deterministic even if
   *    two slice writes land in the same clock tick.
-  *  - Exactly-once landing ([[landBatch]]): each micro-batch lands as
-  *    partition `batch=<id>` under dynamic partition overwrite. A replayed
-  *    batch id (micro-batch retry, restart from the checkpoint) overwrites
-  *    only its own partition, so it replaces its rows instead of
-  *    re-appending them and every other batch's rows stay as they were.
+  *  - Exactly-once landing ([[IndexMaintenance.landBatch]]): each
+  *    micro-batch lands as partition `batch=<id>` under dynamic partition
+  *    overwrite. A replayed batch id (micro-batch retry, restart from the
+  *    checkpoint) overwrites only its own partition, so it replaces its
+  *    rows instead of re-appending them and every other batch's rows stay
+  *    as they were. The rule is the store write path's, shared with the
+  *    day loops and the dedup increments.
   */
 object Replay {
 
@@ -53,14 +54,6 @@ object Replay {
   def sliceStream(spark: SparkSession, inDir: String): DataFrame =
     spark.readStream.schema(spark.read.parquet(inDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
-
-  /** Land one micro-batch as partition `batch=<batchId>` of `out` under
-    * dynamic partition overwrite: idempotent per (batchId, out). */
-  def landBatch(df: DataFrame, batchId: Long, out: String): Unit =
-    df.withColumn("batch", lit(batchId))
-      .write.partitionBy("batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(out)
 
   /** Session for the one-time lineage BUILDS (r15, guide §2.2/§2.5):
     * stateful streaming execs cannot use AQE, so the state/shuffle

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.engine.{Lineages, Sim}
+import graft.engine.{IndexMaintenance, Lineages, Sim}
 
 /** Streaming ingest for the persisted IVF index — closes the set: all
   * three index modalities (MinHash bands via [[DedupStream]], postings
@@ -125,7 +125,7 @@ object VecIndexStream {
 
   private def runVecLineage(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions.{col, expr}
-    import graft.engine.{IndexMaintenance, Tables}
+    import graft.engine.Tables
     val indexDir = IndexMaintenance.scratchIndexDir(spark, "stream-vec-index")
     val inDir = IndexMaintenance.scratchIndexDir(spark, "stream-vec-in")
     val outDir = IndexMaintenance.scratchIndexDir(spark, "stream-vec-out")
@@ -159,9 +159,9 @@ object VecIndexStream {
     val spark = batch.sparkSession
     val (res, obs) = Sim.probeIvfIndexObserved(
       batch.select("probe_id", "embedding"), indexDir, k, nprobe)
-    Replay.landBatch(res, increment, s"$outDir/results")
+    IndexMaintenance.landBatch(res, increment, s"$outDir/results")
     import spark.implicits._
-    Replay.landBatch(
+    IndexMaintenance.landBatch(
       Seq((obs.get("assignment_rows").asInstanceOf[Long],
           obs.get("cells_probed").asInstanceOf[Long]))
         .toDF("assignment_rows", "cells_probed").coalesce(1),

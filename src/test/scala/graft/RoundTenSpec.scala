@@ -95,45 +95,6 @@ class RoundTenSpec extends SparkSpecBase {
     assert(scoredDocs == eligible)
   }
 
-  test("hashIndexProbe: verdicts partition the planted batch exactly, " +
-      "canonicals point at the true first carriers") {
-    import org.apache.spark.sql.functions.col
-    val rows = Dedup.hashIndexProbe(spark, sf).collect()
-    val d = Tables.documents(spark, sf)
-    val nDup = d.filter(col("doc_id") % Dedup.HX_CORPUS_DUP_MOD === 0).count()
-    val nFresh = d.filter(
-      col("doc_id") % Dedup.HX_CORPUS_DUP_MOD === Dedup.HX_FRESH_RESIDUE)
-      .count()
-    val nBatch = d.filter(col("doc_id") % Dedup.HX_BATCH_DUP_MOD === 1).count()
-    assert(rows.length == nDup + nFresh + 2 * nBatch)
-    val byV = rows.groupBy(_.getString(2)).view.mapValues(_.length).toMap
-    assert(byV("dup_of_corpus") == nDup,
-      "every corpus-content re-arrival is caught by the store")
-    assert(byV("fresh") == nFresh + nBatch,
-      "new content + batch-first carriers are admitted")
-    assert(byV("dup_in_batch") == nBatch,
-      "every second in-batch carrier is dropped")
-    rows.filter(_.getString(2) == "dup_of_corpus").foreach { r =>
-      assert(r.getLong(3) == r.getLong(0) - 80000000L,
-        "corpus canonical is the original doc") }
-    rows.filter(_.getString(2) == "dup_in_batch").foreach { r =>
-      assert(r.getLong(3) == r.getLong(0) - 1000000L,
-        "in-batch canonical is the 82M-space first carrier") }
-  }
-
-  test("hash store append is idempotent: a replayed increment replaces " +
-      "its partition, never duplicates rows") {
-    import org.apache.spark.sql.functions.col
-    val d = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val dirH = tmpDir("hash-idem")
-    Dedup.buildHashIndex(d.filter(col("doc_id") % 2 === 0), dirH)
-    Dedup.appendHashIndex(d.filter(col("doc_id") % 2 === 1), dirH, 1L)
-    val once = spark.read.parquet(dirH).count()
-    assert(once == d.count(), "build + append cover the corpus exactly")
-    Dedup.appendHashIndex(d.filter(col("doc_id") % 2 === 1), dirH, 1L)
-    assert(spark.read.parquet(dirH).count() == once)
-  }
-
   test("availabilityJson: every provider's schedule survives the JSON " +
       "round trip with consistent day/hour accounting") {
     val rows = engine.SourceOps.availabilityJson(spark, sf).collect()
@@ -302,40 +263,6 @@ class RoundTenSpec extends SparkSpecBase {
       assert(est > exact * 0.5 && est < exact * 2.0,
         s"${r.getString(0)}: est $est vs exact $exact")
     }
-  }
-
-  test("kmvLifecycle: the served store equals the full-corpus sketch " +
-      "(mergeability across increments), and a replayed append is a " +
-      "no-op") {
-    val served = TextOps.kmvLifecycle(spark, sf).collect()
-    // the lifecycle must reconstruct q195's sketch columns exactly —
-    // increments are an implementation detail the result cannot show
-    val full = TextOps.kmvDistinctShingles(spark, sf).collect()
-      .map(r => (r.getString(0),
-        (r.getLong(2), if (r.isNullAt(3)) -1L else r.getLong(3),
-          r.getLong(4)))).toMap
-    assert(served.length == full.size)
-    served.foreach { r =>
-      val (n, mk, est) = full(r.getString(0))
-      assert(r.getLong(1) == n)
-      assert((if (r.isNullAt(2)) -1L else r.getLong(2)) == mk)
-      assert(r.getLong(3) == est)
-    }
-    // idempotence: re-appending the same increment (the crashed-batch
-    // replay) replaces its partition — the store and the serve result
-    // are unchanged
-    val store = graft.engine.IndexMaintenance.scratchIndexDir(
-      spark, "kmv-idem")
-    val d = Tables.documents(spark, sf)
-      .select(col("doc_id"), col("source"), col("text"))
-    TextOps.buildKmvStore(d.filter(col("doc_id") % 3 =!= 0), store)
-    TextOps.appendKmvStore(d.filter(col("doc_id") % 3 === 0), store, 1L)
-    val once = spark.read.parquet(store).collect()
-      .map(_.toSeq).sortBy(_.toString)
-    TextOps.appendKmvStore(d.filter(col("doc_id") % 3 === 0), store, 1L)
-    val twice = spark.read.parquet(store).collect()
-      .map(_.toSeq).sortBy(_.toString)
-    assert(once.toSeq == twice.toSeq)
   }
 
   test("hardNegatives: ranks dense per probe, cosines descend inside the " +

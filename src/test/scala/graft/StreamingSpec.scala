@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Kpis, Tables}
+import graft.engine.{IndexMaintenance, Kpis, Tables}
 import graft.streaming.{DocsStream, EventsStream, Replay}
 
 /** §2.9 — the streaming hourly aggregate must agree with its batch twin on
@@ -708,7 +708,7 @@ class StreamingSpec extends SparkSpecBase {
       "expected a multi-batch feed")
     // retry idempotence: replaying a batch id replaces its partition
     val n = spark.read.parquet(out).count()
-    Replay.landBatch(
+    IndexMaintenance.landBatch(
       TextOps.lmScoreAgainst(ref.filter(col("doc_id") % 2 === 0), vocab, model)
         .withColumn("kept", col("lm_score") >= DocsStream.LM_GATE_MIN),
       0L, out)
@@ -765,7 +765,7 @@ class StreamingSpec extends SparkSpecBase {
     // replay idempotence: re-landing batch 0's own rows must not duplicate
     val n = spark.read.parquet(out).count()
     val b0 = spark.read.parquet(out).filter(col("batch") === 0).drop("batch")
-    Replay.landBatch(b0, 0L, out)
+    IndexMaintenance.landBatch(b0, 0L, out)
     assert(spark.read.parquet(out).count() == n,
       "replayed source-cap batch duplicated rows")
   }
@@ -795,10 +795,10 @@ class StreamingSpec extends SparkSpecBase {
       Seq("user_id" -> "p_user_id"), "ts", "p_ts", "p_event_id",
       "backward", Some(Kpis.ASOF_TOLERANCE_US), broadcastRight = true)
     val out2 = tmpDir("graft-sink-idem-asof") + "/landed"
-    Replay.landBatch(enriched, 5L, out2)
+    IndexMaintenance.landBatch(enriched, 5L, out2)
     val once2 = spark.read.parquet(out2).count()
     assert(once2 > 0)
-    Replay.landBatch(enriched, 5L, out2)
+    IndexMaintenance.landBatch(enriched, 5L, out2)
     assert(spark.read.parquet(out2).count() == once2,
       "replayed as-of batch duplicated rows")
   }
