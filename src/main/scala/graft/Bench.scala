@@ -66,7 +66,8 @@ object Bench {
     val selected = SparkEntry.select(only).sortBy(_.name)
     // Untimed warmup: exercise parquet scan + shuffle + codegen against the
     // bench directory itself (region is the smallest table; the synthetic
-    // aggregate warms codegen/JIT without matching any timed query's plan),
+    // aggregate warms the code generator and JIT, not any timed query's
+    // compiled classes, since it matches no timed query's plan),
     // so JVM/classloading startup cost doesn't land on whichever timed
     // query runs first (in r01 it inflated the first query by ~5s). A
     // failed warmup is recorded — silently skipping it would make per-query
@@ -116,9 +117,12 @@ object Bench {
         l.name -> (() => { Lineages.out(l, spark, sfDir); () })))
       else Result(Nil, Nil)
     // Local-iteration knob: run each query N times, report the minimum (the
-    // warm, codegen-compiled number — what the plan actually costs). The
-    // driver sets no env, so official rounds keep the single-run cold+warm
-    // mix and stay comparable with prior BENCH_r*.json.
+    // warm number — what the plan actually costs). Repeats reuse the first
+    // run's compiled classes only while the codegen cache holds them:
+    // Sessions.tune sizes it to 2000 classes, where Spark's 100 dropped
+    // them whenever more than about 100 were in use. Official rounds set
+    // no env, so they keep the single-run cold+warm mix and stay
+    // comparable with prior BENCH_r*.json.
     val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1).max(1)
     val r = run(spark, sfDir, selected, repeat)
     val result = pre.copy(times = r.times,

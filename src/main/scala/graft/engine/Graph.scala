@@ -319,36 +319,32 @@ object Graph {
     *
     * Scale shape: per round one shuffle of |E| (adjacency ⋈ labels on the
     * neighbour key), a (node, label) partial aggregate, and a per-node
-    * argmax via max_by — no window sort; the label table
-    * (localCheckpointed, CC loop discipline) is the only state carried
-    * between rounds. Output = the label histogram plus per-node labels
-    * for the oracle hash. */
+    * argmax via max_by — no window sort. Round 1 votes with the starting
+    * labels, which are the neighbours' own ids, so it needs no join. The
+    * rounds are a fixed unrolled plan over the checkpointed kNN cut that
+    * [[keptAdjacency]] reads, so nothing is materialized between rounds.
+    * Output = the label histogram plus per-node labels for the oracle
+    * hash. */
   def labelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    val adj = keptAdjacency(spark, dir).localCheckpoint()
-    var labels = adj.select(col("node")).distinct()
-      .select(col("node"), col("node").as("lab"))
-      .localCheckpoint()
-    for (_ <- 1 to LP_ITERS) {
-      // r16 (guide §2.4): votes ← labels directly — the old
-      // labels LEFT JOIN votes + coalesce(winner, lab) was provably the
-      // identity: the adjacency is BIDIRECTIONAL, so every labeled node
-      // appears as `nb` in at least one adjacency row and receives ≥1
-      // vote every round (the "isolated nodes keep their label" clause
-      // guards a case this graph cannot produce — node sets here ARE the
-      // adjacency's nodes). Removing the join removes one shuffle + one
-      // AQE join stage per round; the seed also folds the old separate
-      // nodes checkpoint into the labels one (one materialization job
-      // fewer). Oracle re-verified (the twin recomputes all rounds).
-      labels = adj
-        .join(labels.withColumnRenamed("node", "nb"), "nb")
-        .groupBy(col("node"), col("lab"))
-        .agg(sum(col("w")).as("s"))
-        // argmax with total order: max weight, then SMALLEST label — the
-        // struct max takes the largest tuple, so negate the label
-        .groupBy(col("node"))
-        .agg(expr("max_by(lab, struct(s, -lab))").as("lab"))
-        .localCheckpoint()
-    }
+    val adj = keptAdjacency(spark, dir)
+    // r16 (guide §2.4): votes ← labels directly — the old
+    // labels LEFT JOIN votes + coalesce(winner, lab) was provably the
+    // identity: the adjacency is BIDIRECTIONAL, so every labeled node
+    // appears as `nb` in at least one adjacency row and receives ≥1
+    // vote every round (the "isolated nodes keep their label" clause
+    // guards a case this graph cannot produce — node sets here ARE the
+    // adjacency's nodes). Oracle re-verified (the twin recomputes all
+    // rounds).
+    def round(votes: DataFrame): DataFrame = votes
+      .groupBy(col("node"), col("lab"))
+      .agg(sum(col("w")).as("s"))
+      // argmax with total order: max weight, then SMALLEST label — the
+      // struct max takes the largest tuple, so negate the label
+      .groupBy(col("node"))
+      .agg(expr("max_by(lab, struct(s, -lab))").as("lab"))
+    val first = round(adj.select(col("node"), col("nb").as("lab"), col("w")))
+    val labels = (2 to LP_ITERS).foldLeft(first)((labels, _) =>
+      round(adj.join(labels.withColumnRenamed("node", "nb"), "nb")))
     labels.groupBy(col("lab")).agg(count(lit(1)).as("n_members"),
         min(col("node")).as("min_node"), max(col("node")).as("max_node"))
       .orderBy("lab")

@@ -3,6 +3,8 @@ package graft.engine
 import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** Session-level environment setup, applied once per SparkSession at the
   * entry points — NOT inside table loaders, so no reader mutates global
@@ -24,6 +26,16 @@ object Sessions {
     *    session's SharedState, which creates and caches the `file:`
     *    FileSystem. A `file:` FileSystem cached earlier in the JVM keeps the
     *    stock class; that costs speed only, never results.
+    *  - Spark's generated-class cache, sized to [[CodegenCacheEntries]].
+    *    Compiled whole-stage and expression classes live in one JVM-wide
+    *    LRU cache whose size `CodeGenerator` reads once, when it is first
+    *    used. Spark's 100 entries are fewer than one warm pass over a
+    *    workload needs (about 140 classes for perfbench's `query_mix`, 190
+    *    for `ingest_write`), so every pass compiled its classes again. `tune`
+    *    initializes `CodeGenerator` under the larger size, unless the
+    *    caller set `spark.sql.codegen.cache.maxEntries` on its builder,
+    *    whose value is kept. A JVM that ran a query before `tune` keeps the
+    *    size it started with; that costs speed only, never results.
     *  - `Locale.US`: month/day names from `date_format("MMMM"/"EEEE")` must
     *    match DuckDB's English `monthname()`/`dayname()` regardless of the
     *    container locale (build.sbt additionally pins -Duser.language=en for
@@ -39,11 +51,22 @@ object Sessions {
     */
   def tune(spark: SparkSession): SparkSession = {
     LocalFiles.install(spark.sparkContext.hadoopConfiguration)
+    // CodeGenerator's static initializer sizes its cache from SQLConf.get;
+    // a method call runs it (its int constants are inlined instead)
+    val entries = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
+    val codegen = new SQLConf
+    codegen.setConf(entries, spark.sparkContext.getConf.getInt(entries.key, CodegenCacheEntries))
+    SQLConf.withExistingConf(codegen)(CodeGenerator.compileTime)
     Locale.setDefault(Locale.US)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
+
+  /** Generated classes kept by Spark's codegen cache: ten times one
+    * perfbench pass. A JVM that runs the whole registry compiles about
+    * 4,000 and fills it; the full cache then holds about 65 MB of heap. */
+  val CodegenCacheEntries = 2000
 
   /** Local session for the mains and the tests: `local[cores]`, shuffle
     * partitions sized to cores (not the 200 default — SURVEY.md §4), AQE

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Analytics, Graph, Indexing, Kpis}
@@ -151,6 +155,38 @@ class IndexAnalyticsSpec extends SparkSpecBase {
     // synchronous rounds are deterministic: a second run is identical
     val again = Graph.labelPropagation(spark, sf).collect()
     assert(rows.sameElements(again))
+  }
+
+  test("label propagation builds and sinks in 17 Spark jobs") {
+    // the kNN cut's two checkpoints and the unrolled rounds' stages (24
+    // with a checkpoint of the adjacency, of the starting labels and of
+    // every round). Jobs are told apart by a local property; a sentinel
+    // job submitted after the sink returns arrives on the listener bus
+    // after every counted event.
+    val sc = spark.sparkContext
+    val key = "graft.test.lp"
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case "lp" => jobs.incrementAndGet()
+          case "sentinel" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "lp")
+      Graph.labelPropagation(spark, sf).write.format("noop").mode("overwrite").save()
+      sc.setLocalProperty(key, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus not drained")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 17)
   }
 
   test("distribution drift accounts for every order, ppm bounded") {
