@@ -17,7 +17,7 @@ private[engine] object DayCommit {
   /** Write day `n`'s marker — the LAST write of a day. Idempotent. */
   def mark(spark: SparkSession, root: String, day: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"${dir(root)}/day=$day")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = IndexMaintenance.fileSystem(spark, p)
     fs.mkdirs(p.getParent)
     try fs.create(p, false).close()
     catch { case _: java.io.IOException => () } // replay: marker exists
@@ -26,7 +26,7 @@ private[engine] object DayCommit {
   /** Highest committed day (−1 before any commit). One listing. */
   def highest(spark: SparkSession, root: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir(root))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = IndexMaintenance.fileSystem(spark, p)
     if (!fs.exists(p)) -1L
     else fs.listStatus(p).map(_.getPath.getName)
       .filter(_.startsWith("day=")).map(_.stripPrefix("day=").toLong)

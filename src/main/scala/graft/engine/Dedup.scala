@@ -330,7 +330,7 @@ object Dedup {
   def readClusterLabelsAsOf(spark: SparkSession, labelDir: String,
       undoDir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(undoDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = IndexMaintenance.fileSystem(spark, p)
     if (!fs.exists(p)) return readClusterLabels(spark, labelDir)
     def names(sub: String): Seq[String] = {
       val d = new org.apache.hadoop.fs.Path(s"$undoDir/$sub")

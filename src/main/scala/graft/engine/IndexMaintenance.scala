@@ -121,7 +121,7 @@ object IndexMaintenance {
     * step with its purged main store). */
   private[graft] def deletePartitions(spark: SparkSession, dir: String,
       partCols: Seq[String], parts: Seq[Seq[Any]]): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, new Path(dir))
     parts.foreach { v =>
       fs.delete(new Path(dir + partCols.zip(v)
         .map { case (c, x) => s"/$c=$x" }.mkString), true)
@@ -145,8 +145,7 @@ object IndexMaintenance {
   private[graft] def holdsParquet(spark: SparkSession,
       dir: String): Boolean = {
     val p = new Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p) &&
-      parquetFileCount(spark, dir) > 0L
+    fileSystem(spark, p).exists(p) && parquetFileCount(spark, dir) > 0L
   }
 
   /** A second writer tried to mutate an index while another held its
@@ -253,8 +252,7 @@ object IndexMaintenance {
   private[graft] def withWriterLease[T](spark: SparkSession,
       indexDir: String, owner: String)(body: => T): T = {
     val lease = leasePath(indexDir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = lease.getFileSystem(conf)
+    val fs = fileSystem(spark, lease)
     val key = fs.makeQualified(lease).toString
     if (heldByThread.get().contains(key)) return body // reentrant hold
     val nonce = java.util.UUID.randomUUID().toString.take(16)
@@ -320,8 +318,7 @@ object IndexMaintenance {
     * Returns whether a lease existed. */
   def breakWriterLease(spark: SparkSession, indexDir: String): Boolean = {
     val lease = leasePath(indexDir)
-    lease.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(lease, false)
+    fileSystem(spark, lease).delete(lease, false)
   }
 
   /** Crash recovery WITHOUT a human: atomically remove `indexDir`'s
@@ -338,7 +335,7 @@ object IndexMaintenance {
   def takeOverStaleLease(spark: SparkSession, indexDir: String,
       maxAgeMs: Long): Boolean = {
     val lease = leasePath(indexDir)
-    val fs = lease.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, lease)
     if (!fs.exists(lease)) return false
     val age = System.currentTimeMillis() - stampEpochMs(fs, lease)
     if (age < maxAgeMs) return false // live (or too fresh to judge)
@@ -352,7 +349,7 @@ object IndexMaintenance {
   /** Whether a writer currently holds `indexDir` (specs; monitoring). */
   def writerLeaseHeld(spark: SparkSession, indexDir: String): Boolean = {
     val lease = leasePath(indexDir)
-    lease.getFileSystem(spark.sessionState.newHadoopConf()).exists(lease)
+    fileSystem(spark, lease).exists(lease)
   }
 
   /** Rewrite `dir` through a staging sibling and swap it in: `write` lays
@@ -375,7 +372,7 @@ object IndexMaintenance {
       write: String => Unit): Unit = withWriterLease(spark,
       Option(leaseDir).getOrElse(dir), "rewrite") {
     val target = new Path(dir)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, target)
     val staging = new Path(dir + ".compacting")
     val backup = new Path(dir + ".old")
     if (!fs.exists(target) && fs.exists(backup) &&
@@ -401,12 +398,16 @@ object IndexMaintenance {
     * compaction trigger policy keys on ([[graft.streaming.DedupStream]]:
     * compact once the delta pile exceeds a threshold). One directory
     * listing, no data read. */
-  def incrementCount(spark: SparkSession, dir: String): Long = {
+  def incrementCount(spark: SparkSession, dir: String): Long =
+    incrementDirs(spark, dir).size.toLong
+
+  /** The `increment=<n>` dir names under `dir`, none if it is absent. */
+  private def incrementDirs(spark: SparkSession, dir: String): Seq[String] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).count(s => s.isDirectory &&
-      s.getPath.getName.startsWith("increment=")).toLong
+    val fs = fileSystem(spark, p)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("increment="))
   }
 
   /** Invocation-unique scratch root for a demo index lifecycle (the
@@ -422,8 +423,7 @@ object IndexMaintenance {
       kind: String): String = {
     val p = new Path(s"${sys.props("java.io.tmpdir")}/graft-$kind-" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(12))
-    scratchDirs.register(
-      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    scratchDirs.register(fileSystem(spark, p), p)
     p.toString
   }
 
@@ -473,21 +473,20 @@ object IndexMaintenance {
     * partition a streaming ingest may still replay after a crash, which
     * maintenance must therefore never fold ([[Sim.maintainIvfIndex]]).
     * One directory listing, no data read. */
-  def maxIncrement(spark: SparkSession, dir: String): Long = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("increment="))
-      .map(_.getPath.getName.stripPrefix("increment=").toLong)
+  def maxIncrement(spark: SparkSession, dir: String): Long =
+    incrementDirs(spark, dir).map(_.stripPrefix("increment=").toLong)
       .foldLeft(0L)(math.max)
-  }
+
+  /** The FileSystem that serves `p`, resolved under `spark`'s Hadoop conf
+    * (Hadoop caches one per scheme and authority). */
+  private[graft] def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Parquet data-file count under `dir` — the quantity compaction exists
     * to shrink (specs assert it drops). */
   def parquetFileCount(spark: SparkSession, dir: String): Long = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, p)
     val it = fs.listFiles(p, true)
     var n = 0L
     while (it.hasNext) {

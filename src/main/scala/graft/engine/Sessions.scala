@@ -2,6 +2,10 @@ package graft.engine
 
 import java.util.Locale
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.util.ConfigUtil
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
@@ -36,6 +40,19 @@ object Sessions {
     *    caller set `spark.sql.codegen.cache.maxEntries` on its builder,
     *    whose value is kept. A JVM that ran a query before `tune` keeps the
     *    size it started with; that costs speed only, never results.
+    *  - No YARN defaults in the SparkContext's Hadoop conf: every key whose
+    *    only source is `yarn-default.xml` (520 of about 1,090) is unset.
+    *    Every `newHadoopConf()` copies that conf, and Spark serializes a copy
+    *    into every parquet-scan broadcast, state-store RDD and write task, on
+    *    the scheduler thread and again in the task; no YARN code runs under
+    *    `local[*]`. The `core-default.xml` and `mapred-default.xml` keys, read
+    *    by the filesystems and the output committers, stay. Order matters:
+    *    `yarn-default.xml` is registered first (as `JobConf` does), and the
+    *    trim follows the `spark.conf.set` calls, whose SharedState loads the
+    *    FileSystem services: registering a default resource (HDFS's, there)
+    *    reloads every live conf and brings the unset keys back. A conf copied
+    *    before `tune`, or reloaded by a later registration, keeps the YARN
+    *    keys; that costs speed only, never results.
     *  - `Locale.US`: month/day names from `date_format("MMMM"/"EEEE")` must
     *    match DuckDB's English `monthname()`/`dayname()` regardless of the
     *    container locale (build.sbt additionally pins -Duser.language=en for
@@ -60,7 +77,17 @@ object Sessions {
     Locale.setDefault(Locale.US)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    dropYarnDefaults(spark.sparkContext.hadoopConfiguration)
     spark
+  }
+
+  /** Unset every key of `conf` whose only source is `yarn-default.xml`. */
+  private def dropYarnDefaults(conf: Configuration): Unit = {
+    ConfigUtil.loadResources() // registers yarn-default.xml, as JobConf does
+    conf.iterator.asScala.map(_.getKey).toList
+      .filter(k => Option(conf.getPropertySources(k))
+        .exists(_.sameElements(Seq("yarn-default.xml"))))
+      .foreach(conf.unset)
   }
 
   /** Generated classes kept by Spark's codegen cache: ten times one

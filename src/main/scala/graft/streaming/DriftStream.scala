@@ -112,7 +112,7 @@ object DriftStream {
     try q.processAllAvailable() finally q.stop()
     // A lineage that landed nothing must FAIL here, not poison the
     // per-dir cache with an empty lake for every later caller.
-    val fs = new Path(outDir).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = IndexMaintenance.fileSystem(spark, new Path(outDir))
     val landed = fs.listStatus(new Path(outDir))
       .map(_.getPath.getName).filter(_.startsWith("batch="))
     require(landed.nonEmpty,

@@ -34,7 +34,7 @@ object Replay {
     * the old slice and deleting the new one with its tmp dir. */
   def landSlices(spark: SparkSession, inDir: String, tag: String,
       slices: Seq[(Int, DataFrame)]): Unit = {
-    val fs = new Path(inDir).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = IndexMaintenance.fileSystem(spark, new Path(inDir))
     fs.mkdirs(new Path(inDir))
     slices.foreach { case (s, sliceDf) =>
       val tmp = IndexMaintenance.scratchIndexDir(spark, s"$tag-slice$s")
@@ -72,7 +72,7 @@ object Replay {
       sizePath: String): SparkSession = {
     val s2 = graft.engine.Sessions.tune(spark.newSession())
     val p = new Path(sizePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = IndexMaintenance.fileSystem(spark, p)
     // NonFatal only: an OOM or interrupt must propagate, not silently
     // degrade to the 1-partition fallback (r15 ADVICE)
     val bytes =
